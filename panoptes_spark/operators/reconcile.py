@@ -22,7 +22,7 @@ pushdown (S6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import RESOURCE_IDENTITY_COLS
@@ -31,7 +31,7 @@ from ..schemas import RESOURCE_IDENTITY_COLS
 def reconcile(
     current: DataFrame,
     incoming: DataFrame,
-    incoming_set_ts: float,
+    incoming_set_ts: float | Column,
     identity_cols: list[str] | None = None,
     ts_col: str = "resource_creation_timestamp",
 ) -> DataFrame:
@@ -40,6 +40,11 @@ def reconcile(
     Returns one row per identity with an ``action`` column in
     {'add', 'update', 'delete', 'keep_newer', 'skip_update'} plus the
     winning row's non-identity columns.
+
+    ``incoming_set_ts`` is the incoming set's timestamp, or a Column
+    evaluated per joined row over the identity columns — how one plan
+    reconciles several sets at once, each with its own timestamp
+    (``streaming.reconcile_stream`` keys it on the scope column).
 
     ``keep_newer``   — delete suppressed by the stored-ts guard
     ``skip_update``  — update suppressed by the stored-ts guard
@@ -115,11 +120,12 @@ def scd2_history(
 def apply_reconciliation(
     current: DataFrame,
     incoming: DataFrame,
-    incoming_set_ts: float,
+    incoming_set_ts: float | Column,
     identity_cols: list[str] | None = None,
     ts_col: str = "resource_creation_timestamp",
 ) -> DataFrame:
-    """Materialize the post-merge store state (same schema as inputs)."""
+    """Materialize the post-merge store state (same schema as inputs).
+    ``incoming_set_ts`` may be a Column, as in :func:`reconcile`."""
     ident = identity_cols or RESOURCE_IDENTITY_COLS
     plan = reconcile(current, incoming, incoming_set_ts, ident, ts_col)
     other = [c for c in current.columns if c not in ident]

@@ -59,6 +59,19 @@ __all__ = ["build_ivfpq_index", "IvfPqIndex"]
 #: read may include — so torn appends can never be silently read back.
 _FORMAT_VERSION = 3
 
+#: the relation every index segment holds, ``cell_id`` being its
+#: partition column. Writers cast to it and readers declare it, so a
+#: read never runs a schema-inference job per segment.
+_SEGMENT_COLS = (("nbr_id", "long"), ("codes", "array<int>"), ("cell_id", "int"))
+_SEGMENT_SCHEMA = ", ".join(f"{c} {t}" for c, t in _SEGMENT_COLS)
+
+
+def _segment_rows(encoded: DataFrame, id_col: str) -> DataFrame:
+    """``pq_assign_encode`` output as segment rows (``_SEGMENT_SCHEMA``)."""
+    return encoded.withColumnRenamed(id_col, "nbr_id").select(
+        *[F.col(c).cast(t) for c, t in _SEGMENT_COLS]
+    )
+
 
 def build_ivfpq_index(
     corpus: DataFrame,
@@ -116,8 +129,8 @@ def build_ivfpq_index(
     # fused assign+encode: one narrow corpus pass, no id-keyed re-join
     # (r11 — the separate-pass composition shuffled the corpus to unite
     # (cell, codes); see pq.pq_assign_encode)
-    idx = _pq.pq_assign_encode(corpus, cents, cbs, id_col, vec_col).select(
-        F.col(id_col).alias("nbr_id"), "cell_id", "codes"
+    idx = _segment_rows(
+        _pq.pq_assign_encode(corpus, cents, cbs, id_col, vec_col), id_col
     )
     (
         idx.write.mode("overwrite")
@@ -153,13 +166,16 @@ def build_ivfpq_index(
     return IvfPqIndex(spark, path)
 
 
-#: collected dim tables (centroid rows / codebook tensors), memoized per
-#: (file identity, mtime) — every probe batch and segment write needs
-#: them driver-side, and each redundant collect is a fixed-latency Spark
-#: job (r12). Keyed on the manifest-resolved file's identity, never on
-#: the input data directory, and process-local: a cold driver re-reads
-#: everything from the index files themselves.
+#: collected dim tables (centroid rows / codebook tensors) — every
+#: probe batch and segment write needs them driver-side, and each
+#: redundant collect is a fixed-latency Spark job (r12). One slot per
+#: (kind, index dir realpath), holding the content identity it was
+#: filled from: a rebuild or a retrain at the same index replaces the
+#: slot instead of adding one, and at most ``_DIM_MEMO_MAX`` indexes
+#: are held (oldest filled first out). Process-local: a cold driver
+#: re-reads everything from the index files themselves.
 _DIM_MEMO: dict = {}
+_DIM_MEMO_MAX = 32
 
 
 class IvfPqIndex:
@@ -177,35 +193,52 @@ class IvfPqIndex:
                 f"this reader ({_FORMAT_VERSION}); rebuild or upgrade"
             )
     def _dim_key(self, fname: str):
-        """Identity of a dim-table parquet dir: path + name + dir mtime.
-        Per-generation files are immutable once manifest-referenced;
-        the only rewrite path (a rebuild at the same path) replaces the
-        directory, which bumps its mtime — so the memo can never serve
-        stale content, and a fresh driver process always re-reads."""
-        d = os.path.join(self.path, fname)
+        """Content identity of a dim-table parquet dir: its realpath
+        plus the sorted names and sizes of its data files, or None when
+        the dir cannot be listed. Spark names every written file
+        uniquely, so a rewrite at the same path — even one that keeps
+        the dir mtime — changes the identity."""
+        d = os.path.realpath(os.path.join(self.path, fname))
         try:
-            mt = os.stat(d).st_mtime_ns
+            files = tuple(sorted(
+                (e.name, e.stat().st_size)
+                for e in os.scandir(d)
+                if not e.name.startswith(("_", "."))
+            ))
         except OSError:
-            mt = None
-        return (os.path.realpath(d), mt)
+            return None
+        return (d, files)
+
+    def _dim_memo(self, kind: str, fname: str, load):
+        """``load()``'s value for this index's ``kind`` dim table,
+        reused while the table's content identity is unchanged."""
+        ident = self._dim_key(fname)
+        if ident is None:
+            return load()  # unlistable: never memoize
+        slot = (kind, os.path.realpath(self.path))
+        hit = _DIM_MEMO.get(slot)
+        if hit is not None and hit[0] == ident:
+            return hit[1]
+        value = load()
+        _DIM_MEMO.pop(slot, None)  # evict the superseded generation
+        _DIM_MEMO[slot] = (ident, value)
+        while len(_DIM_MEMO) > _DIM_MEMO_MAX:
+            _DIM_MEMO.pop(next(iter(_DIM_MEMO)))
+        return value
 
     def _cents_rows(self):
-        key = ("cents",) + self._dim_key(
-            self.meta.get("centroids_file", "centroids.parquet")
+        return self._dim_memo(
+            "cents",
+            self.meta.get("centroids_file", "centroids.parquet"),
+            lambda: self.centroids().select("cell_id", "centroid").collect(),
         )
-        if key not in _DIM_MEMO:
-            _DIM_MEMO[key] = self.centroids().select(
-                "cell_id", "centroid"
-            ).collect()
-        return _DIM_MEMO[key]
 
     def _cb_tensor(self):
-        key = ("cb",) + self._dim_key(
-            self.meta.get("codebooks_file", "codebooks.parquet")
+        return self._dim_memo(
+            "cb",
+            self.meta.get("codebooks_file", "codebooks.parquet"),
+            lambda: _pq._codebook_tensor(self.codebooks()),
         )
-        if key not in _DIM_MEMO:
-            _DIM_MEMO[key] = _pq._codebook_tensor(self.codebooks())
-        return _DIM_MEMO[key]
 
     def centroids(self) -> DataFrame:
         # manifest-resolved (r11): a retrain_swap repoints these to the
@@ -234,8 +267,13 @@ class IvfPqIndex:
         return list(self.meta.get("segments", ["index.parquet"]))
 
     def _index_df(self) -> DataFrame:
+        """Every manifest-referenced segment, each read with the declared
+        segment schema: no schema-inference job per segment, so a
+        query's job count does not grow with the commit count."""
         parts = [
-            self.spark.read.parquet(os.path.join(self.path, seg))
+            self.spark.read.schema(_SEGMENT_SCHEMA).parquet(
+                os.path.join(self.path, seg)
+            )
             for seg in self.segments()
         ]
         out = parts[0]
@@ -450,9 +488,9 @@ class IvfPqIndex:
         cbs.write.mode("overwrite").parquet(
             os.path.join(self.path, cbs_file)
         )
-        idx = _pq.pq_assign_encode(
-            corpus, cents, cbs, id_col, vec_col
-        ).select(F.col(id_col).alias("nbr_id"), "cell_id", "codes")
+        idx = _segment_rows(
+            _pq.pq_assign_encode(corpus, cents, cbs, id_col, vec_col), id_col
+        )
         idx.write.mode("overwrite").partitionBy("cell_id").parquet(
             os.path.join(self.path, seg)
         )
@@ -487,10 +525,15 @@ class IvfPqIndex:
         the torn-append chaos test calls this alone to forge a crash)."""
         id_col = self.meta["id_col"]
         vec_col = self.meta["vec_col"]
-        idx = _pq.pq_assign_encode(
-            new_corpus, self.centroids(), self.codebooks(), id_col, vec_col,
-            cents_rows=self._cents_rows(), cb=self._cb_tensor(),
-        ).select(F.col(id_col).alias("nbr_id"), "cell_id", "codes")
+        # the memoized rows/tensor stand in for the dim-table frames,
+        # which are never built here (each read would infer a schema)
+        idx = _segment_rows(
+            _pq.pq_assign_encode(
+                new_corpus, None, None, id_col, vec_col,
+                cents_rows=self._cents_rows(), cb=self._cb_tensor(),
+            ),
+            id_col,
+        )
         idx.write.mode("overwrite").partitionBy("cell_id").parquet(
             os.path.join(self.path, seg)
         )

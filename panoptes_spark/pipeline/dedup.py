@@ -24,6 +24,8 @@ skewed buckets (boilerplate docs), cap bucket size before the pair join.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -106,6 +108,13 @@ def persist_registered(df: DataFrame) -> DataFrame:
     return df
 
 
+#: a shuffle in an executed-plan string; a BroadcastExchange is not one
+_SHUFFLE_IN_PLAN = re.compile(
+    r"ShuffleExchange|ShuffleQueryStage|Exchange (?:hashpartitioning|"
+    r"rangepartitioning|SinglePartition|RoundRobin)"
+)
+
+
 def source_is_wide(source: DataFrame) -> bool:
     """True when ``source``'s scan has at least the session's default
     parallelism worth of splits — the same input-derived signal
@@ -121,12 +130,12 @@ def source_is_wide(source: DataFrame) -> bool:
     try:
         # Shuffle-bearing (derived) frames: with AQE, converting to an
         # RDD materializes upstream query stages — the probe would
-        # itself run jobs. A derived lineage containing an exchange is
+        # itself run jobs. A derived lineage containing a shuffle is
         # expensive to recompute by definition, so answer True without
-        # touching the RDD; only scan-shaped plans (no exchange, where
-        # .rdd is a pure planning call) fall through to the split count.
+        # touching the RDD; other plans (scans, broadcast joins of
+        # scans) fall through to the split count.
         plan = source._jdf.queryExecution().executedPlan().toString()
-        if "Exchange" in plan or "ShuffleQueryStage" in plan:
+        if _SHUFFLE_IN_PLAN.search(plan):
             return True
         return source.rdd.getNumPartitions() >= sc.defaultParallelism
     except Exception:

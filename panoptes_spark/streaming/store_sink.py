@@ -19,11 +19,19 @@ Layout (all under ``path``)::
 - The store is hash-partitioned into ``n_buckets`` buckets by key
   (murmur3 ``pmod(hash(key), n)`` — Spark's own shuffle placement, so a
   cluster-side MERGE co-locates for free).
-- Per micro-batch, only the buckets the batch TOUCHES are rewritten:
-  read current bucket snapshot, anti-join the batch's keys, union the
-  batch's non-tombstone rows, write a NEW snapshot file keyed by epoch.
-  Untouched buckets keep their old files — write volume is
-  O(dirty buckets), not O(store).
+- Per micro-batch, only the buckets the batch TOUCHES are rewritten,
+  by ONE plan: one scan of every dirty bucket's current snapshot (read
+  with the batch's data schema, so no schema-inference job), unioned
+  with the batch's reduced rows and repartitioned by bucket; per key
+  the batch's row replaces the stored one (the anti-join of the stored
+  rows against the batch's keys plus the batch's rows, in one shuffle —
+  a key fixes its bucket, so this equals the per-bucket merges),
+  tombstones are dropped, and the result is written once with
+  ``partitionBy("__bucket")`` into a staging dir whose leaves are then
+  renamed to each bucket's NEW snapshot name keyed by epoch (one file
+  per bucket). The commit costs a fixed handful of Spark jobs however
+  many buckets it touches. Untouched buckets keep their old files —
+  write volume is O(dirty buckets), not O(store).
 - Exactly-once = epoch-id-keyed dedup + atomic swap:
 
   * a replayed epoch (``epoch_id <= manifest["last_epoch"]``) is a no-op
@@ -33,8 +41,9 @@ Layout (all under ``path``)::
     attempt's partial files are simply overwritten by the retry;
   * readers resolve bucket files through MANIFEST only, and the manifest
     is swapped with ``os.replace`` (atomic on POSIX) AFTER every dirty
-    bucket's snapshot is fully written — a crash at any instant leaves
-    the previous consistent version visible.
+    bucket's snapshot is fully written and renamed into place — a crash
+    at any instant leaves the previous consistent version visible (a
+    retry re-stages and replaces any leaf the crashed attempt renamed).
 
 Merge semantics (changelog-shaped input): the batch is first reduced to
 one row per key — latest by (ts_col, then the full row tuple, a total
@@ -47,8 +56,9 @@ from the checkpoint, and compares byte-for-byte).
 
 Scale: bucket count sizes the rewrite unit (pick so a bucket fits an
 executor; 4096 buckets over a 10 TB store = ~2.4 GB rewrites); the
-manifest is O(n_buckets) JSON. Driver-side file ops touch only the
-manifest — data moves through distributed Spark jobs. Superseded bucket
+manifest is O(n_buckets) JSON. Driver-side file ops are the manifest
+swap and one directory rename per dirty bucket — data moves through
+distributed Spark jobs. Superseded bucket
 snapshots are garbage-collected with a one-generation grace (r7: the
 ``retired`` manifest list) so long-running streams hold ~2x the live
 store, not unbounded history.
@@ -58,13 +68,44 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["ParquetStoreSink"]
+__all__ = ["ParquetStoreSink", "write_snapshots"]
 
 _MANIFEST = "MANIFEST"
+
+
+def write_snapshots(
+    df: DataFrame, part_col: str, data_dir: str, tag: str, names: dict
+) -> None:
+    """Write ``df`` ONCE, partitioned by ``part_col``, and move the
+    leaf of each partition value ``v`` to ``data_dir/names[v]``.
+
+    The staging dir ``data_dir/_stage-<tag>`` is deterministic, so a
+    crashed attempt's leftovers are overwritten by the retry, and it is
+    removed before returning. A value with no rows gets no leaf from
+    the partitioned write; it gets a schema-only snapshot instead, so
+    its name still reads as empty."""
+    stage = os.path.join(data_dir, f"_stage-{tag}")
+    df.write.mode("overwrite").partitionBy(part_col).parquet(stage)
+    empty = []
+    for value, fname in names.items():
+        leaf = os.path.join(stage, f"{part_col}={value}")
+        dest = os.path.join(data_dir, fname)
+        shutil.rmtree(dest, ignore_errors=True)  # a crashed attempt's copy
+        if os.path.isdir(leaf):
+            os.rename(leaf, dest)
+        else:
+            empty.append(dest)
+    if empty:
+        schema = df.drop(part_col).schema
+        df.sparkSession.createDataFrame([], schema).write.parquet(empty[0])
+        for dest in empty[1:]:
+            shutil.copytree(empty[0], dest)
+    shutil.rmtree(stage)
 
 
 class ParquetStoreSink:
@@ -145,48 +186,64 @@ class ParquetStoreSink:
         reduced = self._reduce_batch(batch).withColumn(
             "__bucket", self._bucket_col()
         )
-        # local checkpoint: the merge below reads `reduced` once per dirty
-        # bucket write plus once for the bucket list; pinning it avoids
-        # recomputing the source batch (which may not be replayable from
-        # inside foreachBatch)
+        # local checkpoint: the merge below reads `reduced` once and the
+        # bucket list once more; pinning it avoids recomputing the source
+        # batch (which may not be replayable from inside foreachBatch)
         reduced = reduced.localCheckpoint(eager=True)
-        dirty = [
+        dirty = sorted(
             r[0] for r in reduced.select("__bucket").distinct().collect()
-        ]
+        )
         if not dirty:
             m["last_epoch"] = int(epoch_id)
             self._swap_manifest(m)
             return
 
+        data = os.path.join(self.path, "data")
+        rows = reduced.withColumn("__new", F.lit(True))
+        old_files = [
+            m["buckets"][str(b)] for b in dirty if str(b) in m["buckets"]
+        ]
+        if old_files:
+            # explicit data schema: no inference job, and files written
+            # before the partitioned layout (which still carry a
+            # __bucket column) read the same as current ones
+            old = (
+                self.spark.read.schema(reduced.drop("__bucket").schema)
+                .parquet(*[os.path.join(data, f) for f in old_files])
+                .withColumn("__bucket", self._bucket_col())
+                .withColumn("__new", F.lit(False))
+            )
+            rows = old.unionByName(rows)
+        # per key, the batch's row (__new) replaces the stored one.
+        # Grouping on (__bucket, key) after the bucket repartition needs
+        # no second shuffle, and each bucket lands in one task: one
+        # snapshot file per bucket, whatever the layout of the old files
+        # and of the batch.
+        data_cols = [
+            c for c in reduced.columns if c not in self.key_cols + ["__bucket"]
+        ]
+        merged = (
+            rows.repartition("__bucket")
+            .groupBy("__bucket", *self.key_cols)
+            .agg(F.max(F.struct("__new", *data_cols)).alias("__w"))
+            .select(
+                "__bucket",
+                *self.key_cols,
+                *[F.col(f"__w.{c}").alias(c) for c in data_cols],
+            )
+        )
+        if self.tombstone_col:
+            merged = merged.where(~F.coalesce(
+                F.col(self.tombstone_col), F.lit(False)
+            ))
+        names = {b: f"b{b}-e{int(epoch_id)}.parquet" for b in dirty}
+        write_snapshots(merged, "__bucket", data, f"e{int(epoch_id)}", names)
+
         prev_retired = list(m.get("retired", []))
         retired_now: list[str] = []
         new_buckets = dict(m["buckets"])
-        for b in sorted(dirty):
-            b_new = reduced.where(F.col("__bucket") == b)
-            if self.tombstone_col:
-                b_new = b_new.where(~F.coalesce(
-                    F.col(self.tombstone_col), F.lit(False)
-                ))
+        for b, fname in names.items():
             old_file = m["buckets"].get(str(b))
-            if old_file is not None:
-                b_old = self.spark.read.parquet(
-                    os.path.join(self.path, "data", old_file)
-                )
-                keep = b_old.join(
-                    reduced.where(F.col("__bucket") == b).select(*self.key_cols),
-                    self.key_cols,
-                    "left_anti",
-                )
-                merged = keep.unionByName(b_new)
-            else:
-                merged = b_new
-            fname = f"b{b}-e{int(epoch_id)}.parquet"
-            # deterministic path + overwrite: a crashed attempt's partial
-            # file is clobbered by the retry, never read (manifest still
-            # points at the old snapshot until the swap below)
-            merged.write.mode("overwrite").parquet(
-                os.path.join(self.path, "data", fname)
-            )
             if old_file is not None and old_file != fname:
                 retired_now.append(old_file)
             new_buckets[str(b)] = fname
@@ -201,8 +258,6 @@ class ParquetStoreSink:
         # manifest's retired list (r8): the old swap-then-delete order
         # leaked prev_retired permanently on a crash in between —
         # referenced by no manifest, deleted by no one.
-        import shutil
-
         still: list[str] = []
         for fname in prev_retired:
             p = os.path.join(self.path, "data", fname)

@@ -2250,6 +2250,41 @@ def test_ann_index_compaction_preserves_ranks(spark, tmp_path, sf_dir):
     assert got == want
 
 
+def test_ann_index_compaction_preserves_ranks_small(spark, tmp_path, sf_dir):
+    """Default-run representative of the slow compaction test: a
+    three-segment index ranks identically after ``compact()`` folds it
+    to one segment, and the old data dirs are GC'd."""
+    import os
+
+    from panoptes_spark.pipeline.ann_index import (
+        IvfPqIndex,
+        build_ivfpq_index,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = emb.where("vec_id % 50 = 0")
+    path = str(tmp_path / "cmp")
+    idx = build_ivfpq_index(
+        emb.where("vec_id % 4 > 1"), path, m=8, n_codes=16, n_cells=16,
+        train_iters=0,
+    )
+    idx.append(emb.where("vec_id % 4 = 1"))
+    idx.append(emb.where("vec_id % 4 = 0"))
+    assert len(idx.segments()) == 3
+    before = sorted(map(tuple, idx.topk(queries, k=5, nprobe=4).collect()))
+    idx.compact()
+    assert len(idx.segments()) == 1
+    got = sorted(
+        map(tuple, IvfPqIndex(spark, path).topk(queries, k=5, nprobe=4).collect())
+    )
+    assert got == before and len(got) > 0
+    on_disk = {
+        n for n in os.listdir(path)
+        if n.startswith("seg-") or n == "index.parquet"
+    }
+    assert on_disk == set(idx.segments())
+
+
 @pytest.mark.slow
 def test_dedup_sink_compact_every(spark, tmp_path, sf_dir):
     """compact_every on the dedup sink (AnnIndexSink parity): the log
@@ -2479,6 +2514,41 @@ def test_ann_stream_matches_combined_with_restart(spark, tmp_path, sf_dir):
     assert grown.meta["n_rows"] == json.loads(m_before)["n_rows"] + int(
         emb.where("vec_id % 25 = 7").count()
     )
+
+
+def test_ann_stream_matches_combined_small(spark, tmp_path, sf_dir):
+    """Default-run representative of the slow stream parity test: two
+    micro-batches committed through ``AnnIndexSink`` (a fresh sink per
+    batch, as after a restart) rank identically to one batch append of
+    both, and a replayed batch is a no-op."""
+    import os
+
+    from panoptes_spark.pipeline.ann_index import build_ivfpq_index
+    from panoptes_spark.streaming.ann_stream import AnnIndexSink
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    old = emb.where("vec_id % 4 > 0")
+    new = emb.where("vec_id % 4 = 0")
+    queries = emb.where("vec_id % 50 = 0")
+    path = str(tmp_path / "annstream")
+    build_ivfpq_index(old, path, m=8, n_codes=16, n_cells=16, train_iters=0)
+    AnnIndexSink(path)(new.where("vec_id % 8 = 0"), 0)
+    sink = AnnIndexSink(path)
+    sink(new.where("vec_id % 8 = 4"), 1)
+    manifest = os.path.join(path, "MANIFEST.json")
+    m_before = open(manifest).read()
+    sink(new.where("vec_id % 8 = 4"), 1)
+    assert open(manifest).read() == m_before
+
+    got = sorted(
+        map(tuple, sink.index(spark).topk(queries, k=5, nprobe=4).collect())
+    )
+    ref = build_ivfpq_index(
+        old, str(tmp_path / "annref"), m=8, n_codes=16, n_cells=16,
+        train_iters=0,
+    ).append(new)
+    want = sorted(map(tuple, ref.topk(queries, k=5, nprobe=4).collect()))
+    assert got == want and len(got) > 0
 
 
 @pytest.mark.slow

@@ -70,6 +70,14 @@ def test_source_is_wide_true_for_derived_frames(spark, sf_dir):
     # plain narrow scan still answers by split count (bench layout: one
     # row group -> narrow)
     assert source_is_wide(docs.coalesce(1)) is False
+    # a broadcast exchange is not a shuffle: a narrow scan broadcast-
+    # joined to a small frame is still narrow
+    small = docs.where(F.col("doc_id") % 7 == 0).select("doc_id")
+    joined = docs.coalesce(1).join(F.broadcast(small), "doc_id")
+    assert "BroadcastExchange" in (
+        joined._jdf.queryExecution().executedPlan().toString()
+    )
+    assert source_is_wide(joined) is False
 
 
 @pytest.mark.parametrize("strategy", ["classic", "pruned"])
