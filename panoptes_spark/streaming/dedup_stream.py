@@ -14,8 +14,11 @@ any later batch pass.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from panoptes_spark.pipeline.text import add_fingerprint
 
@@ -46,13 +49,11 @@ def dedup_exact_stream(
 #: every per-batch relation in the log layout (compaction GC walks these)
 _RELATIONS = ("docs", "sigs", "buckets", "bcounts", "pairs", "tombs", "comps")
 
-#: label-log size above which the sink resolves touched components by
-#: PRUNED per-node aggregation (three broadcast-pruned scans) instead of
-#: one full latest-wins shuffle of the log per commit. Below it the
-#: shuffle is tiny and the extra scans cost more fixed job latency than
-#: they save (measured at sf0.1: pruned = comps 9 -> 13-16 jobs,
-#: 2 -> 5-9 s) — a data-derived policy, not a core-count constant.
-_PRUNE_COMPS_MIN_BYTES = 256 << 20
+#: component relabeling fast path (r11): touched subgraphs at or under
+#: this node count (and 4x it in edges) resolve by exact driver-side
+#: union-find instead of per-round Spark jobs; larger churn falls back
+#: to distributed strict propagation
+_UNIONFIND_MAX_NODES = 200_000
 
 
 class DedupIndexLog:
@@ -81,7 +82,8 @@ class DedupIndexLog:
     - ``components()`` — per-node latest-batch-wins over the per-batch
       label files (``max_by`` partial agg, no window): a batch writes
       labels ONLY for nodes in components its pairs/tombstones touched,
-      so untouched clusters keep their earlier labels.
+      so untouched clusters keep their earlier labels. The sink reads it
+      only on commits with pair churn, to find the touched components.
     """
 
     def __init__(self, spark, base_path: str):
@@ -151,15 +153,12 @@ class DedupIndexLog:
             return raw
         return raw.join(self.tombstones(), ["a", "b"], "left_anti")
 
-    def components_raw(self) -> DataFrame:
-        """The UN-resolved per-batch label rows (node, component, __b) —
-        ``__b`` is the POSITION in the committed-batches list, not the
-        id itself: commit order is what latest-wins means, and a
-        compacted generation's id is a string tag (r10). Exposed so the
-        sink can resolve latest-wins for a PRUNED node set (semi-join
-        below the per-node max_by is exact — resolution is per-node
-        independent) instead of shuffling the whole label log per
-        commit (r12)."""
+    def components(self) -> DataFrame:
+        """(node, component), latest committed label per node. The
+        per-batch rows are tagged ``__b`` = the POSITION in the
+        committed-batches list, not the id itself: commit order is what
+        latest-wins means, and a compacted generation's id is a string
+        tag (r10)."""
         import os
 
         parts = []
@@ -171,36 +170,12 @@ class DedupIndexLog:
                 .parquet(os.path.join(self.base, "comps", f"batch={b}"))
                 .withColumn("__b", F.lit(pos))
             )
-        out = parts[0]
+        raw = parts[0]
         for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def components(self) -> DataFrame:
-        return (
-            self.components_raw()
-            .groupBy("node")
-            .agg(F.max_by("component", "__b").alias("component"))
+            raw = raw.unionByName(p)
+        return raw.groupBy("node").agg(
+            F.max_by("component", "__b").alias("component")
         )
-
-    def rel_bytes(self, rel: str) -> int:
-        """On-disk bytes of a relation's COMMITTED batch dirs — a
-        zero-job, driver-side size signal (the sink keys its
-        touched-component resolution strategy on it, r12)."""
-        import os
-
-        total = 0
-        for b in self.state["batches"]:
-            d = os.path.join(self.base, rel, f"batch={b}")
-            if not os.path.isdir(d):
-                continue
-            for root, _dirs, files in os.walk(d):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-        return total
 
     # -- compaction ---------------------------------------------------------
     def _gc_unreferenced(self) -> list[str]:
@@ -293,38 +268,6 @@ class DedupIndexLog:
         return self
 
 
-class _SinkSection:
-    """Per-commit section profiler: wall seconds always; Spark job ids
-    per section ONLY when the sink's ``profile`` flag is set (the job
-    group it needs would shadow the group Structured Streaming uses to
-    cancel a stopping query's jobs — opt-in from the spotbench, never
-    in production streams)."""
-
-    def __init__(self, sink, sc, group: str, name: str):
-        self.sink, self.sc, self.group, self.name = sink, sc, group, name
-
-    def __enter__(self):
-        import time
-
-        if self.sink.profile:
-            self.sc.setJobGroup(self.group, self.name)
-        self.t0 = time.time()
-        return self
-
-    def __exit__(self, *exc):
-        import time
-
-        sec = time.time() - self.t0
-        jobs = 0
-        if self.sink.profile:
-            jobs = len(self.sc.statusTracker().getJobIdsForGroup(self.group))
-            self.sc.setJobGroup("", "")
-        prof = self.sink.last_profile.setdefault(self.name, [0.0, 0])
-        prof[0] += sec
-        prof[1] += jobs
-        return False
-
-
 def _unionfind_pdf(npdf, epdf):
     """Exact (node, component=min id in cluster) labels by DRIVER-SIDE
     union-find over pandas frames — the small-subgraph fast path of the
@@ -396,10 +339,11 @@ class NearDedupIndexSink:
       only for touched / at-risk buckets. The r9 sink made WRITE volume
       O(batch) but still re-banded the entire signature corpus and
       recomputed all bucket sizes per commit — a full-corpus scan +
-      (band,bucket) shuffle per micro-batch
-      (``tools/spotbench_dedup_stream.py`` now measures per-commit
-      seconds flat as the index grows; the membership relation is the
-      standard inverted-index price, ~bands rows/doc, written once);
+      (band,bucket) shuffle per micro-batch (per-commit seconds now
+      stay flat as the index grows, ``streaming.commit_growth`` in
+      ``perfbench/run.py --workload ingest --trace 1``; the membership
+      relation is the standard inverted-index price, ~bands rows/doc,
+      written once);
     - WRITE volume: each commit adds per-batch files only — the batch's
       signatures, its newly verified pairs, tombstones for pairs whose
       every generating bucket crossed the cap this batch, and new
@@ -438,13 +382,19 @@ class NearDedupIndexSink:
     before the state swap; the candidate join is asymmetric (tiny
     new-batch side, AQE broadcasts it); component relabeling runs in
     three tiers — no-churn singleton map, bounded driver-side
-    union-find (``unionfind_max_nodes``), distributed strict
+    union-find (``_UNIONFIND_MAX_NODES``), distributed strict
     propagation; STATE's ``n_tombs_total`` lets the all-empty common
     case skip every tombstone anti-join; per-batch files are
     right-sized (``_files``) so the log's file count tracks data, not
-    partition width. Measured at sf0.1 seeded: 7.9-8.6 s / 81 jobs per
-    small commit (r10) -> 4.2-4.8 s / 37 jobs, still flat as the index
-    grows.
+    partition width.
+
+    Every Spark job a commit runs carries a ``neardedup-<section>`` job
+    tag (ingest/sign/band/merge/members/verify/tombs/comps/flush/commit)
+    on top of the caller's job group and tags, pool-thread relation
+    writes included; a pool write carries the tag of the section that
+    submitted it. So an event log or the status store splits a commit
+    by section, and a stopping streaming query's cancel group reaches
+    every job.
 
     Layout under ``base_path``::
 
@@ -474,7 +424,6 @@ class NearDedupIndexSink:
         max_iter: int = 10,
         checkpoint: str | None = None,
         compact_every: int | None = None,
-        unionfind_max_nodes: int = 200_000,
     ):
         from panoptes_spark.pipeline import dedup as _dedup
 
@@ -495,15 +444,6 @@ class NearDedupIndexSink:
         # rebuild; the cadence is derived from the committed batch list
         # so restarts cannot reset it (r10 ADVICE)
         self.compact_every = compact_every
-        # component relabeling fast path (r11): touched subgraphs at or
-        # under this node count (and 4x it in edges) resolve by exact
-        # driver-side union-find instead of per-round Spark jobs; larger
-        # churn falls back to distributed strict propagation
-        self.unionfind_max_nodes = int(unionfind_max_nodes)
-        # per-commit observability: section -> [seconds, jobs]; jobs are
-        # recorded only when profile=True (see _SinkSection)
-        self.profile = False
-        self.last_profile: dict[str, list] = {}
 
     # -- state ------------------------------------------------------------
     def _state_path(self):
@@ -636,12 +576,17 @@ class NearDedupIndexSink:
             return  # replay of a committed batch after restart
 
         sc = spark.sparkContext
-        self.last_profile = {}
 
+        @contextmanager
         def _sec(name):
-            return _SinkSection(
-                self, sc, f"neardedup/{batch_id}/{name}", name
-            )
+            # a tag, not a job group: a group would replace the one
+            # Structured Streaming cancels a stopping query's jobs by
+            tag = f"neardedup-{name}"
+            sc.addJobTag(tag)
+            try:
+                yield
+            finally:
+                sc.removeJobTag(tag)
 
         k, nh, bands, thr = self.params
         idc = self.id_col
@@ -691,8 +636,14 @@ class NearDedupIndexSink:
             # write jobs' fixed scheduling latency (r11; the commit cost
             # is job-count, not data). ALL futures join before the state
             # swap, so a failed write still fails the whole commit and
-            # the replay overwrites the torn per-batch files.
-            writes.append(pool.submit(_w, rel, df, n_files))
+            # the replay overwrites the torn per-batch files. Wrapped at
+            # submit time, so the write's jobs carry the job group and
+            # tags current HERE (pool threads start with neither).
+            writes.append(
+                pool.submit(
+                    inheritable_thread_target(spark)(_w), rel, df, n_files
+                )
+            )
 
         try:
             # ingest: ONE materialization of the micro-batch serves the
@@ -1005,7 +956,7 @@ class NearDedupIndexSink:
             # (1) NO churn (no new pairs, no tombstones): new docs are
             #     singletons, label map is batch-sized and map-only, the
             #     accumulated label log is never read;
-            # (2) churn bounded by `unionfind_max_nodes`: exact
+            # (2) churn bounded by `_UNIONFIND_MAX_NODES`: exact
             #     driver-side union-find (the propagation loop's
             #     2-jobs-per-round fixed cost was the largest share of
             #     the sink's per-commit latency — r10 verdict #2);
@@ -1015,7 +966,7 @@ class NearDedupIndexSink:
             #     every tier.
             with _sec("comps"):
                 new_ids = batch.select(idc)
-                cap = self.unionfind_max_nodes
+                cap = _UNIONFIND_MAX_NODES
                 if n_new_pairs == 0 and n_tombs == 0:
                     relabeled = new_ids.select(
                         F.col(idc).alias("node"),
@@ -1043,68 +994,15 @@ class NearDedupIndexSink:
                         # no distinct: touched only feeds a left_semi
                         # probe side, where duplicates are harmless —
                         # the dedup shuffle was a whole stage wave (r11)
-                        raw = log.components_raw()
-                        if log.rel_bytes("comps") > _PRUNE_COMPS_MIN_BYTES:
-                            # WIDE label log (real deployment): resolve
-                            # latest-wins only for the nodes that
-                            # matter. Resolution is PER-NODE independent
-                            # (max_by over each node's own rows), so a
-                            # semi join below the per-node aggregate is
-                            # exact: (1) resolve the touched endpoints,
-                            # (2) candidates = any node that EVER wore a
-                            # touched component label (a node's latest
-                            # row is one of its raw rows — complete
-                            # superset), (3) re-resolve candidates and
-                            # keep those whose LATEST label is touched —
-                            # exactly the touched components'
-                            # membership, so the closure argument in the
-                            # class docstring is unchanged. Three
-                            # broadcast-pruned scans of the log instead
-                            # of ONE corpus-sized label shuffle per
-                            # commit (r12). On a narrow (bench-layout)
-                            # log the extra scans cost more jobs than
-                            # the one tiny shuffle they avoid (measured:
-                            # comps 9 -> 13-16 jobs, 2 -> 5-9 s), so
-                            # the classic shape is kept there — the
-                            # same data-derived policy as the Lloyd
-                            # trainer persists.
-                            touched_comps = (
-                                raw.join(touched, "node", "left_semi")
-                                .groupBy("node")
-                                .agg(
-                                    F.max_by("component", "__b").alias(
-                                        "component"
-                                    )
-                                )
-                                .select("component")
-                                .distinct()
-                            )
-                            cand_nodes = raw.join(
-                                touched_comps, "component", "left_semi"
-                            ).select("node")
-                            sub_old = (
-                                raw.join(cand_nodes, "node", "left_semi")
-                                .groupBy("node")
-                                .agg(
-                                    F.max_by("component", "__b").alias(
-                                        "component"
-                                    )
-                                )
-                                .join(
-                                    touched_comps, "component", "left_semi"
-                                )
-                                .select("node")
-                            )
-                        else:
-                            old_comps = log.components()
-                            touched_comps = (
-                                old_comps.join(touched, "node", "left_semi")
-                                .select("component")
-                                .distinct()
-                            )
-                            sub_old = old_comps.join(
-                                touched_comps, "component", "left_semi"
-                            ).select("node")
+                        old_comps = log.components()
+                        touched_comps = (
+                            old_comps.join(touched, "node", "left_semi")
+                            .select("component")
+                            .distinct()
+                        )
+                        sub_old = old_comps.join(
+                            touched_comps, "component", "left_semi"
+                        ).select("node")
                         # no distinct: sub_old (resolved labels, one
                         # row per node) and the batch's ids are each
                         # unique, and the log assumes ids are unique

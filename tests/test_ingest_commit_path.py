@@ -3,7 +3,8 @@ not one group of jobs per bucket, scope or index segment: job budgets
 for the keyed-store, reconcile and ANN sinks and the ANN query, counted
 from the status store per tagged block. Also the store-sink layout edge
 cases (an emptied bucket, files from before the partitioned write) and
-the content-keyed dim-table memo."""
+the content-keyed dim-table memo. The near-dup sink's jobs carry the
+caller's job group and tags plus one section tag each."""
 
 import json
 import os
@@ -19,7 +20,8 @@ UPDATES_SCHEMA = "key string, value string, ts_ms long"
 def spark_jobs(spark):
     """Jobs (and their non-skipped stages) submitted inside the block:
     every job whose id falls after the newest job at entry, tagged with
-    ``sc.addJobTag`` so an event log shows the block."""
+    ``sc.addJobTag`` so an event log shows the block. ``labels`` holds
+    each job's (job group, job tags)."""
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
 
@@ -28,9 +30,9 @@ def spark_jobs(spark):
         jobs = jsc.statusStore().jobsList(None)  # newest first
         return jobs.apply(0).jobId() if jobs.size() else -1
 
-    out = {"jobs": 0, "stages": []}
     after = newest()
     tag = f"commit-budget-{after}"
+    out = {"jobs": 0, "stages": [], "labels": [], "tag": tag}
     sc.addJobTag(tag)
     try:
         yield out
@@ -44,6 +46,11 @@ def spark_jobs(spark):
             if job.jobId() <= after:
                 break
             out["jobs"] += 1
+            group, tags = job.jobGroup(), job.jobTags()
+            out["labels"].append((
+                group.get() if group.isDefined() else None,
+                {tags.apply(k) for k in range(tags.size())},
+            ))
             sids = job.stageIds()
             for k in range(sids.size()):
                 st = store.lastStageAttempt(sids.apply(k))
@@ -204,6 +211,56 @@ def test_reconcile_two_scope_commit_job_budget(spark, tmp_path):
         ("A", "a", "a1"), (None, "o", "o0"), (None, "m", "m1"), ("B", "x", "x0")
     }
     assert _no_staging(str(tmp_path / "r" / "data"))
+
+
+# -- near-dup sink ------------------------------------------------------------
+
+
+def test_dedup_commit_jobs_carry_caller_group_and_section_tag(
+    spark, tmp_path, monkeypatch
+):
+    """Every job a near-dup commit runs, its thread-pool relation writes
+    included, carries the caller's job group (which a stopping streaming
+    query cancels by) and tags, plus exactly one ``neardedup-<section>``
+    tag; the commit leaves the caller's tags as it found them, also when
+    it raises."""
+    from panoptes_spark.streaming import dedup_stream as ds
+
+    tpl = "identical template document body with enough words to shingle"
+    schema = "doc_id long, text string"
+    b0 = spark.createDataFrame(
+        [(1, tpl), (2, tpl), (7, "a short unrelated note about weather")],
+        schema,
+    )
+    b1 = spark.createDataFrame(
+        [(3, tpl), (8, "another unrelated line on some other topic")], schema
+    )
+    b2 = spark.createDataFrame([(9, tpl)], schema)
+    sink = ds.NearDedupIndexSink(str(tmp_path / "nd"))
+    sc = spark.sparkContext
+    sc.setJobGroup("g", "near-dup commit", interruptOnCancel=True)
+    sc.addJobTag("t")
+    try:
+        with spark_jobs(spark) as jobs:
+            sink(b0, 0)
+            sink(b1, 1)
+            assert set(sc.getJobTags()) == {"t", jobs["tag"]}
+        assert jobs["jobs"] > 0
+        for group, tags in jobs["labels"]:
+            assert group == "g", (group, tags)
+            assert {"t", jobs["tag"]} <= tags, tags
+            assert len({x for x in tags if x.startswith("neardedup-")}) == 1
+
+        def poisoned(self):
+            raise RuntimeError("poisoned bucket_membership")
+
+        monkeypatch.setattr(ds.DedupIndexLog, "bucket_membership", poisoned)
+        with pytest.raises(RuntimeError, match="poisoned"):
+            sink(b2, 2)
+        assert set(sc.getJobTags()) == {"t"}
+    finally:
+        sc.removeJobTag("t")
+        sc._jsc.clearJobGroup()
 
 
 # -- ANN index ---------------------------------------------------------------

@@ -2973,11 +2973,12 @@ def test_near_dedup_stream_commit_never_reads_signatures(
 
 @pytest.mark.slow
 def test_near_dedup_stream_commit_time_bounded(spark, tmp_path, sf_dir):
-    """Coarse flat-seconds lock (r9 verdict directive 7, the
-    test-suite twin of tools/spotbench_dedup_stream.py): at fixed batch
-    size the LAST commits of an 8-batch fold must stay under 2x the
-    FIRST post-warmup commits even though the index behind them is ~4x
-    larger — fails on reintroduced per-commit corpus-sized work. The
+    """Coarse flat-seconds lock (r9 verdict directive 7; its benchmark
+    twin is ``streaming.commit_growth`` from ``perfbench/run.py
+    --workload ingest --trace 1``): at fixed batch size the LAST commits
+    of an 8-batch fold must stay under 2x the FIRST post-warmup commits
+    even though the index behind them is ~4x larger — fails on
+    reintroduced per-commit corpus-sized work. The
     sharp structural check is the poisoned-signatures test above; this
     one bounds everything else (pair revalidation, component
     relabeling, count merges)."""

@@ -80,24 +80,10 @@ def test_source_is_wide_true_for_derived_frames(spark, sf_dir):
     assert source_is_wide(joined) is False
 
 
-@pytest.mark.parametrize("strategy", ["classic", "pruned"])
-def test_near_dedup_stream_split_matches_rebuild(
-    spark, tmp_path, monkeypatch, strategy
-):
-    """Tombstone churn through BOTH touched-component resolution
-    strategies (r12): a later batch pushes a clone cluster over the
-    bucket cap, its pairs retract and the component SPLITS, while an
-    untouched cluster keeps its earlier labels — final pairs/components
-    must equal a one-shot rebuild over the combined corpus. The pruned
-    strategy (big-label-log path) is forced by zeroing the size gate."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from panoptes_spark.pipeline.dedup_index import build_dedup_index
-    from panoptes_spark.streaming import dedup_stream
-
-    if strategy == "pruned":
-        monkeypatch.setattr(dedup_stream, "_PRUNE_COMPS_MIN_BYTES", 0)
-
+def _churn_batches(spark):
+    """Two batches over a bucket cap of 3: batch 1 pushes the tpl_a clone
+    cluster over the cap, so its pairs retract and the component SPLITS,
+    while the tpl_b cluster is untouched and keeps its batch-0 labels."""
     tpl_a = "identical template document body with enough words to shingle"
     tpl_b = "another shared boilerplate passage that also repeats verbatim"
     uniq = "totally different content number {} talking about other things"
@@ -109,6 +95,28 @@ def test_near_dedup_stream_split_matches_rebuild(
     b1 = spark.createDataFrame(
         [(3, tpl_a), (4, tpl_a), (51, uniq.format(1))], schema
     )
+    return b0, b1
+
+
+def _canon(df):
+    return sorted(map(tuple, df.collect()))
+
+
+@pytest.mark.parametrize("relabel", ["driver", "distributed"])
+def test_near_dedup_stream_split_matches_rebuild(
+    spark, tmp_path, monkeypatch, relabel
+):
+    """Tombstone churn through BOTH component-relabel tiers that run on
+    churn: the driver-side union-find and, with its node cap forced to
+    0, distributed strict propagation. Final pairs/components must equal
+    a one-shot rebuild over the combined corpus."""
+    from panoptes_spark.pipeline.dedup_index import build_dedup_index
+    from panoptes_spark.streaming import dedup_stream
+
+    if relabel == "distributed":
+        monkeypatch.setattr(dedup_stream, "_UNIONFIND_MAX_NODES", 0)
+
+    b0, b1 = _churn_batches(spark)
     base = str(tmp_path / "split_log")
     sink = dedup_stream.NearDedupIndexSink(base, max_bucket_size=3)
     sink(b0, 0)
@@ -119,6 +127,35 @@ def test_near_dedup_stream_split_matches_rebuild(
     full = build_dedup_index(
         b0.unionByName(b1), str(tmp_path / "split_full"), max_bucket_size=3
     )
-    canon = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
-    assert canon(log.pairs()) == canon(full.pairs())
-    assert canon(log.components()) == canon(full.components())
+    assert _canon(log.pairs()) == _canon(full.pairs())
+    assert _canon(log.components()) == _canon(full.components())
+
+
+def test_dedup_log_compaction_preserves_answers_small(spark, tmp_path):
+    """Default-run representative of the slow compaction test, on the
+    tombstone-churn corpus: after ``compact()`` the log answers pairs and
+    components exactly as before and as a one-shot rebuild, with its
+    tombstones applied and emptied."""
+    from panoptes_spark.pipeline.dedup_index import build_dedup_index
+    from panoptes_spark.streaming.dedup_stream import NearDedupIndexSink
+
+    b0, b1 = _churn_batches(spark)
+    sink = NearDedupIndexSink(str(tmp_path / "clog"), max_bucket_size=3)
+    sink(b0, 0)
+    sink(b1, 1)
+    log = sink.index(spark)
+    assert log.tombstones().count() > 0
+    want_pairs, want_comps = _canon(log.pairs()), _canon(log.components())
+
+    log.compact()
+    assert log.state["batches"] == ["c1"]
+    full = build_dedup_index(
+        b0.unionByName(b1), str(tmp_path / "clog_full"), max_bucket_size=3
+    )
+    for got in (log, sink.index(spark)):
+        assert _canon(got.pairs()) == want_pairs == _canon(full.pairs())
+        assert (
+            _canon(got.components()) == want_comps
+            == _canon(full.components())
+        )
+        assert got.tombstones().count() == 0
