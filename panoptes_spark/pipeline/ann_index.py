@@ -49,6 +49,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from . import pq as _pq
 from .similarity import ivf_auto_cells, kmeans_refine, seed_centroids
 
@@ -166,18 +167,6 @@ def build_ivfpq_index(
     return IvfPqIndex(spark, path)
 
 
-#: collected dim tables (centroid rows / codebook tensors) — every
-#: probe batch and segment write needs them driver-side, and each
-#: redundant collect is a fixed-latency Spark job (r12). One slot per
-#: (kind, index dir realpath), holding the content identity it was
-#: filled from: a rebuild or a retrain at the same index replaces the
-#: slot instead of adding one, and at most ``_DIM_MEMO_MAX`` indexes
-#: are held (oldest filled first out). Process-local: a cold driver
-#: re-reads everything from the index files themselves.
-_DIM_MEMO: dict = {}
-_DIM_MEMO_MAX = 32
-
-
 class IvfPqIndex:
     """Handle over a built index directory; ``topk`` runs probe batches."""
 
@@ -192,51 +181,22 @@ class IvfPqIndex:
                 f"index at {path} has format_version={ver}, newer than "
                 f"this reader ({_FORMAT_VERSION}); rebuild or upgrade"
             )
-    def _dim_key(self, fname: str):
-        """Content identity of a dim-table parquet dir: its realpath
-        plus the sorted names and sizes of its data files, or None when
-        the dir cannot be listed. Spark names every written file
-        uniquely, so a rewrite at the same path — even one that keeps
-        the dir mtime — changes the identity."""
-        d = os.path.realpath(os.path.join(self.path, fname))
-        try:
-            files = tuple(sorted(
-                (e.name, e.stat().st_size)
-                for e in os.scandir(d)
-                if not e.name.startswith(("_", "."))
-            ))
-        except OSError:
-            return None
-        return (d, files)
 
-    def _dim_memo(self, kind: str, fname: str, load):
-        """``load()``'s value for this index's ``kind`` dim table,
-        reused while the table's content identity is unchanged."""
-        ident = self._dim_key(fname)
-        if ident is None:
-            return load()  # unlistable: never memoize
-        slot = (kind, os.path.realpath(self.path))
-        hit = _DIM_MEMO.get(slot)
-        if hit is not None and hit[0] == ident:
-            return hit[1]
-        value = load()
-        _DIM_MEMO.pop(slot, None)  # evict the superseded generation
-        _DIM_MEMO[slot] = (ident, value)
-        while len(_DIM_MEMO) > _DIM_MEMO_MAX:
-            _DIM_MEMO.pop(next(iter(_DIM_MEMO)))
-        return value
-
+    # collected dim tables: every probe batch and segment write needs
+    # them, and each redundant collect is a fixed-latency job (r12). One
+    # slot per (kind, index dir); a rebuild or retrain replaces it
     def _cents_rows(self):
-        return self._dim_memo(
-            "cents",
-            self.meta.get("centroids_file", "centroids.parquet"),
+        fname = self.meta.get("centroids_file", "centroids.parquet")
+        return memo.cached(
+            self.spark, ("cents", self.path),
+            [os.path.join(self.path, fname)],
             lambda: self.centroids().select("cell_id", "centroid").collect(),
         )
 
     def _cb_tensor(self):
-        return self._dim_memo(
-            "cb",
-            self.meta.get("codebooks_file", "codebooks.parquet"),
+        fname = self.meta.get("codebooks_file", "codebooks.parquet")
+        return memo.cached(
+            self.spark, ("cb", self.path), [os.path.join(self.path, fname)],
             lambda: _pq._codebook_tensor(self.codebooks()),
         )
 

@@ -296,10 +296,6 @@ class DedupIndex:
             os.path.join(self.path, "signatures.parquet")
         )
 
-    @staticmethod
-    def is_built(path: str) -> bool:
-        return os.path.exists(os.path.join(path, "MANIFEST.json"))
-
     def pairs(self) -> DataFrame:
         """(a, b, jaccard) verified near-dup pairs, a < b."""
         return self.spark.read.parquet(os.path.join(self.path, "pairs.parquet"))

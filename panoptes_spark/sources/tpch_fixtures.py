@@ -21,24 +21,19 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Catalog-style relation memo: re-planning ``spark.read.parquet`` on the
-# same static path re-lists files and re-reads footers (~90 ms per call on
-# local[32]) — a metastore-backed engine resolves a table to a cached
-# relation instead. DataFrames are immutable plan objects, so sharing one
-# per (session, path) is safe; keyed by applicationId so a stopped
-# session's plans are never resurrected in a new one.
-_RELATION_MEMO: dict[tuple[str, str], DataFrame] = {}
+from .. import memo
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Memoized ``spark.read.parquet(f"{sf_dir}/{name}.parquet")``."""
+    """``spark.read.parquet(f"{sf_dir}/{name}.parquet")``, resolved once
+    per session and table content: re-planning a static path re-lists
+    files and re-reads footers (~90 ms per call on local[32]), so a
+    repeat read returns the same plan object until the table changes."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (spark.sparkContext.applicationId, path)
-    df = _RELATION_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _RELATION_MEMO[key] = df
-    return df
+    return memo.cached(
+        spark, ("relation", path), [path], lambda: spark.read.parquet(path)
+    )
+
 
 # ---------------------------------------------------------------------------
 # resources <- customer ⋈ nation ⋈ region
@@ -171,10 +166,13 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
     reader rejects; read nanos as long (runtime conf) and expose both the
     raw ``ts_ns`` and an epoch-ms ``ts_ms`` column."""
-    key = (spark.sparkContext.applicationId, f"{sf_dir}#events_ts_ms")
-    cached = _RELATION_MEMO.get(key)
-    if cached is not None:
-        return cached
+    path = os.path.join(sf_dir, "events.parquet")
+    return memo.cached(
+        spark, ("events", sf_dir), [path], lambda: _events_ts_ms(spark, sf_dir)
+    )
+
+
+def _events_ts_ms(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     e = read_table(spark, sf_dir, "events")
     if dict(e.dtypes)["ts"] == "bigint":
@@ -185,9 +183,7 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is pinned to UTC (session.py) so the NTZ->LTZ cast is epoch-faithful
         # and matches DuckDB's epoch_ms() on the same naive timestamps.
         ts_ms = F.expr("unix_micros(cast(ts as timestamp)) div 1000")
-    out = e.withColumn("ts_ms", ts_ms)
-    _RELATION_MEMO[key] = out
-    return out
+    return e.withColumn("ts_ms", ts_ms)
 
 
 def metric_points_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:

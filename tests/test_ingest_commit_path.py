@@ -335,7 +335,7 @@ def test_dim_memo_same_mtime_rebuild_is_fresh(spark, tmp_path, emb):
 def test_dim_memo_one_entry_per_dim_table_after_retrain(spark, tmp_path, emb):
     """A retrain swap replaces the index's memo entries instead of
     adding a generation's worth next to them."""
-    from panoptes_spark.pipeline import ann_index
+    from panoptes_spark import memo
     from panoptes_spark.pipeline.ann_index import IvfPqIndex, build_ivfpq_index
 
     path = str(tmp_path / "idx")
@@ -345,7 +345,8 @@ def test_dim_memo_one_entry_per_dim_table_after_retrain(spark, tmp_path, emb):
     IvfPqIndex(spark, path).retrain_swap(emb, train_iters=1)
     IvfPqIndex(spark, path).topk(queries, k=5).count()
     real = os.path.realpath(path)
-    slots = [kind for kind, p in ann_index._DIM_MEMO if p == real]
+    slots = [kind for _app, kind, p, _params in memo._ENTRIES if p == real]
     assert sorted(slots) == ["cb", "cents"]
-    ident = ann_index._DIM_MEMO[("cents", real)][0]
-    assert ident[0].endswith("centroids-g1.parquet")
+    app = spark.sparkContext.applicationId
+    ident = memo._ENTRIES[(app, "cents", real, ())][0]
+    assert ident[0][0].endswith("centroids-g1.parquet")

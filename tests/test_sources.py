@@ -313,6 +313,9 @@ def test_read_table_memoizes_per_session(spark, sf_dir):
     repeat reads in one session (no re-listing / footer re-reads) and
     keys by applicationId so another session can never receive a plan
     bound to a stopped one."""
+    import os
+
+    from panoptes_spark import memo
     from panoptes_spark.sources import tpch_fixtures as fx
 
     a = fx.read_table(spark, sf_dir, "nation")
@@ -323,8 +326,9 @@ def test_read_table_memoizes_per_session(spark, sf_dir):
     c = fx.read_table(spark, sf_dir, "region")
     assert c is not a
     app = spark.sparkContext.applicationId
-    assert all(k[0] == app or not k[1].startswith(str(sf_dir))
-               for k in list(fx._RELATION_MEMO) if isinstance(k, tuple))
+    real = os.path.realpath(sf_dir)
+    assert all(k[0] == app or not k[2].startswith(real)
+               for k in list(memo._ENTRIES))
     # events derivation memoizes its whole ts_ms frame too
     e1 = fx.read_events(spark, sf_dir)
     e2 = fx.read_events(spark, sf_dir)
