@@ -5,8 +5,9 @@ LAST line of stdout:
 
 The driver keeps only the TAIL of the merged output stream, so the
 summary line must come last and stay small. The full per-query timing
-map is written to BENCH_DETAIL.json next to this file; the stdout
-summary carries the slowest 10 queries only.
+map, and the Spark jobs of each query's best run, are written to
+BENCH_DETAIL.json next to this file; the stdout summary carries the
+slowest 10 queries only.
 
 Noise discipline (r8): the box shows ±40% window swings on identical
 code, which erodes every round-over-round trend judgement. The battery
@@ -28,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from panoptes_spark.session import get_spark
+from panoptes_spark.session import get_spark, release, spark_jobs
 
 # Headline set: representative of each operator family; the full inventory
 # runs in the correctness gate, the bench tracks throughput of the big ones.
@@ -40,45 +41,42 @@ HEADLINE = [
 ]
 
 
-def _release_between_queries(spark):
-    """Drop per-query persists so memory stays flat across the battery:
-    clearCache drops the blocks, release_materialized clears the persist
-    markers materialize_once registered (otherwise re-running a gate
-    logs 'already cached' and re-fills against cold storage)."""
-    import gc
-
-    from panoptes_spark.pipeline import dedup
-
-    dedup.release_materialized()
-    spark.catalog.clearCache()
-    # localCheckpoint blocks (the sharded ANN top-k paths) are freed by
-    # the ContextCleaner only after the Python-side frames are GC'd —
-    # without this, a long battery accumulates checkpoint RDD blocks
-    # and late gates pay the memory pressure (r9: pq_encode 13.2 s
-    # in-battery at sf1 vs 1.5 s isolated, same plan)
-    gc.collect()
+def run_gate(spark, fn, sf_dir, runs=2):
+    """Best-of-``runs`` wall seconds of ``fn(spark, sf_dir).count()``,
+    with the Spark jobs and rows of that best run, then one release.
+    Jobs are read from the status store outside the timed interval.
+    The release comes after all runs, so a later run can reuse blocks
+    an earlier one persisted; it runs even when a run raises."""
+    best = None
+    try:
+        for _ in range(runs):
+            with spark_jobs(spark) as window:
+                t0 = time.time()
+                rows = fn(spark, sf_dir).count()
+                sec = time.time() - t0
+            if best is None or sec < best["sec"]:
+                best = {"sec": sec, "jobs": window["jobs"], "rows": rows}
+    finally:
+        release(spark)
+    return best
 
 
 def run_battery(spark, qs, names, sf_dir):
-    timings = {}
+    timings, jobs = {}, {}
     total = 0.0
     for name in names:
-        fn = qs[name]
         # best-of-2: first run pays codegen/classloader warmup per query;
         # sub-second queries otherwise show 20-50% run-to-run JVM noise
-        best, n = None, 0
-        for _ in range(2):
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            n = df.count()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        _release_between_queries(spark)
-        timings[name] = round(best, 3)
-        total += best
+        r = run_gate(spark, qs[name], sf_dir)
+        timings[name] = round(r["sec"], 3)
+        jobs[name] = r["jobs"]
+        total += r["sec"]
         # per-query progress on stderr only; stdout must end with the JSON
-        print(f"# {name}: {n} rows in {best:.2f}s", file=sys.stderr)
-    return timings, round(total, 3)
+        print(
+            f"# {name}: {r['rows']} rows in {r['sec']:.2f}s, {r['jobs']} jobs",
+            file=sys.stderr,
+        )
+    return timings, jobs, round(total, 3)
 
 
 def main():
@@ -111,23 +109,28 @@ def main():
         print(f"## warm battery @ {warm_dir} (untimed)", file=sys.stderr)
         for name in names:
             try:
-                qs[name](spark, warm_dir).count()
+                run_gate(spark, qs[name], warm_dir, runs=1)
             except Exception as e:  # a warm failure must not kill the bench
                 print(f"# warm {name} failed: {e}", file=sys.stderr)
-            _release_between_queries(spark)
         warm_sec = round(time.time() - t0, 3)
 
     batteries = []
+    battery_jobs = []
     run_totals = []
     for b in range(repeats):
         print(f"## battery {b + 1}/{repeats}", file=sys.stderr)
-        timings, total = run_battery(spark, qs, names, sf_dir)
+        timings, gate_jobs, total = run_battery(spark, qs, names, sf_dir)
         batteries.append(timings)
+        battery_jobs.append(gate_jobs)
         run_totals.append(total)
 
     # median across batteries, per query and for the battery total
     timings = {
         name: round(statistics.median(bt[name] for bt in batteries), 3)
+        for name in names
+    }
+    jobs = {
+        name: statistics.median_low(bj[name] for bj in battery_jobs)
         for name in names
     }
     total = statistics.median(run_totals)
@@ -162,6 +165,7 @@ def main():
                 "unit": "sec",
                 "n_queries": len(timings),
                 "queries": timings,
+                "jobs": jobs,
                 "sf": sf_val,
                 "run_totals": run_totals,
                 "dedup_index_build_sec": build_sec,

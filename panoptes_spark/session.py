@@ -7,8 +7,11 @@ Arrow transfer apply identically on 1000 executors.
 
 from __future__ import annotations
 
+import gc
 import os
+from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -74,6 +77,75 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
     except Exception:
         pass
     return spark
+
+
+def release(spark: SparkSession) -> None:
+    """Drop per-query persists so memory stays flat across a run of
+    gates: clearCache drops the blocks, release_materialized clears the
+    persist markers materialize_once registered (otherwise re-running a
+    gate logs 'already cached' and re-fills against cold storage)."""
+    from panoptes_spark.pipeline import dedup
+
+    dedup.release_materialized()
+    spark.catalog.clearCache()
+    # localCheckpoint blocks (the sharded ANN top-k paths) are freed by
+    # the ContextCleaner only after the Python-side frames are GC'd —
+    # without this, a long battery accumulates checkpoint RDD blocks
+    # and late gates pay the memory pressure (r9: pq_encode 13.2 s
+    # in-battery at sf1 vs 1.5 s isolated, same plan)
+    gc.collect()
+
+
+@contextmanager
+def spark_jobs(spark: SparkSession):
+    """Jobs (and their non-skipped stages) submitted inside the block:
+    every job whose id falls after the newest job at entry, read from
+    the status store on exit and tagged with ``sc.addJobTag`` so an
+    event log shows the block. ``labels`` holds each job's (job group,
+    job tags). The status store keeps the newest
+    ``spark.ui.retainedJobs`` jobs and ``spark.ui.retainedStages``
+    stages, so a block is counted in full as long as it runs no more
+    than that many."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    store = jsc.statusStore()
+
+    def jobs_newest_first():
+        jsc.listenerBus().waitUntilEmpty(60_000)
+        return store.jobsList(None)
+
+    jobs = jobs_newest_first()
+    after = jobs.apply(0).jobId() if jobs.size() else -1
+    tag = f"job-window-{after}"
+    out = {"jobs": 0, "stages": [], "labels": [], "tag": tag}
+    sc.addJobTag(tag)
+    try:
+        yield out
+    finally:
+        sc.removeJobTag(tag)
+        jobs = jobs_newest_first()
+        for i in range(jobs.size()):
+            job = jobs.apply(i)
+            if job.jobId() <= after:
+                break
+            out["jobs"] += 1
+            group, tags = job.jobGroup(), job.jobTags()
+            out["labels"].append((
+                group.get() if group.isDefined() else None,
+                {tags.apply(k) for k in range(tags.size())},
+            ))
+            sids = job.stageIds()
+            for k in range(sids.size()):
+                try:
+                    st = store.lastStageAttempt(sids.apply(k))
+                except Py4JJavaError as e:
+                    # past ``spark.ui.retainedStages`` the store evicts
+                    # skipped stages first (they have no completion time)
+                    if "NoSuchElementException" not in str(e.java_exception):
+                        raise
+                    continue
+                if st.status().toString() != "SKIPPED":
+                    out["stages"].append(st)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):

@@ -8,54 +8,13 @@ caller's job group and tags plus one section tag each."""
 
 import json
 import os
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
 
+from panoptes_spark.session import spark_jobs
+
 UPDATES_SCHEMA = "key string, value string, ts_ms long"
-
-
-@contextmanager
-def spark_jobs(spark):
-    """Jobs (and their non-skipped stages) submitted inside the block:
-    every job whose id falls after the newest job at entry, tagged with
-    ``sc.addJobTag`` so an event log shows the block. ``labels`` holds
-    each job's (job group, job tags)."""
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-
-    def newest():
-        jsc.listenerBus().waitUntilEmpty(60_000)
-        jobs = jsc.statusStore().jobsList(None)  # newest first
-        return jobs.apply(0).jobId() if jobs.size() else -1
-
-    after = newest()
-    tag = f"commit-budget-{after}"
-    out = {"jobs": 0, "stages": [], "labels": [], "tag": tag}
-    sc.addJobTag(tag)
-    try:
-        yield out
-    finally:
-        sc.removeJobTag(tag)
-        newest()
-        store = jsc.statusStore()
-        jobs = store.jobsList(None)
-        for i in range(jobs.size()):
-            job = jobs.apply(i)
-            if job.jobId() <= after:
-                break
-            out["jobs"] += 1
-            group, tags = job.jobGroup(), job.jobTags()
-            out["labels"].append((
-                group.get() if group.isDefined() else None,
-                {tags.apply(k) for k in range(tags.size())},
-            ))
-            sids = job.stageIds()
-            for k in range(sids.size()):
-                st = store.lastStageAttempt(sids.apply(k))
-                if st.status().toString() != "SKIPPED":
-                    out["stages"].append(st)
 
 
 def _no_staging(data_dir):

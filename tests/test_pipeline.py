@@ -3104,12 +3104,16 @@ def test_trim_duplicated_spans_removes_boilerplate_everywhere(spark):
         (3, " ".join(f"z{i}" for i in range(12))),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r["doc_id"]: r for r in
-           trim_duplicated_spans(df, k=8).collect()}
+    trimmed = trim_duplicated_spans(df, k=8)
+    out = {r["doc_id"]: r for r in trimmed.collect()}
     assert "b0" not in out[1]["clean_text"] and "b0" not in out[2]["clean_text"]
     assert out[1]["clean_text"].startswith("x0") and out[1]["n_removed"] == 8
     assert out[2]["n_removed"] == 8
     assert out[3]["n_removed"] == 0 and out[3]["clean_text"].startswith("z0")
+    # linear kept-token build: a per-token exists() scan over every
+    # duplicated window is quadratic on boilerplate-heavy documents
+    plan = trimmed._jdf.queryExecution().optimizedPlan().toString()
+    assert "exists(" not in plan
 
 
 def test_ngram_novelty_bounds_and_detection(spark):

@@ -36,7 +36,7 @@ import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-from panoptes_spark.session import get_spark  # noqa: E402
+from panoptes_spark.session import get_spark, release  # noqa: E402
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -119,10 +119,7 @@ def main():
         finally:
             # drop per-gate persists so a 131-gate sweep keeps memory flat
             # (file-backed artifacts like the dedup index survive this)
-            from panoptes_spark.pipeline import dedup as _dedup
-
-            _dedup.release_materialized()
-            spark.catalog.clearCache()
+            release(spark)
         if name not in oracles:
             print(f"SKIP {name}: no oracle (rows-only: {len(spdf)} rows, "
                   f"{time.time()-t0:.1f}s)")

@@ -38,12 +38,13 @@ def plan_stats(plan: str) -> dict[str, int]:
 
 def main() -> None:
     import __spark_entry__ as em
-    from panoptes_spark.session import get_spark
+    from panoptes_spark.session import get_spark, release
 
     spark = get_spark(app_name="planreport")
     rows = []
     for name, fn in sorted(em.queries().items()):
         plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        release(spark)
         s = plan_stats(plan)
         rows.append(
             f"| {name} | {s['shuffles']} | {s['broadcasts']} | "

@@ -1,17 +1,21 @@
 """Per-gate profiling harness for the optimization rounds.
 
-Usage: python tools/profile_gate.py <sf_dir> <gate> [<gate> ...]
+Usage: python tools/profile_gate.py <sf_dir>[,<sf_dir>...] <gate> [<gate> ...] [--runs N]
        python tools/profile_gate.py <sf_dir> --plans-dir plans/r11 --suffix before <gate>...
 
-For each gate: runs it twice (best-of-2, mirroring bench.py), reports
-seconds AND the number of Spark jobs the run issued (the fixed-overhead
-signal at small SF: a gate whose time is job-count-bound, not
-data-bound, needs fewer actions/passes, not faster kernels), and
-optionally writes ``<plans_dir>/<gate>_<suffix>.txt`` with the
-``explain("formatted")`` physical plan.
+For each (scale factor, gate) pair: runs the gate through bench.py's
+``run_gate`` (best-of-N with ``count()`` as the action, one release
+after the N runs — the battery's own loop, so the numbers compare with
+BENCH_DETAIL.json) and reports seconds AND the Spark jobs of the best
+run (the fixed-overhead signal at small SF: a gate whose time is
+job-count-bound, not data-bound, needs fewer actions/passes, not faster
+kernels). A comma-separated SF list is a scale-factor sweep: a gate
+flat across 100x data is fixed-overhead-bound, one growing ~linearly
+with rows is scan/shuffle-bound, anything super-linear is a red flag.
 
-Timing methodology matches bench.py (df.count() as the action) so the
-numbers are comparable with BENCH_DETAIL.json.
+``--plans-dir`` also writes ``<plans_dir>/<gate>_<suffix>.txt`` with
+the ``explain("formatted")`` physical plan at the FIRST SF listed.
+Prints one JSON line ``{sf_dir: {gate: {"sec", "jobs", "rows"}}}``.
 """
 
 from __future__ import annotations
@@ -20,74 +24,55 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
-from panoptes_spark.session import get_spark
+import __spark_entry__ as entrymod  # noqa: E402
+from bench import run_gate  # noqa: E402
+from panoptes_spark.session import get_spark, release  # noqa: E402
 
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("sf_dir")
+    ap.add_argument("sf_dirs", help="one SF dir, or a comma-separated list")
     ap.add_argument("gates", nargs="+")
     ap.add_argument("--plans-dir", default=None)
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
-
-    spark = get_spark(app_name="panoptes_profile")
-    sc = spark.sparkContext
-    spark.read.parquet(os.path.join(args.sf_dir, "nation.parquet")).count()
+    sf_dirs = args.sf_dirs.split(",")
 
     qs = entrymod.queries()
-    from panoptes_spark.pipeline import dedup
+    unknown = [g for g in args.gates if g not in qs]
+    if unknown:
+        sys.exit(f"unknown gate(s): {unknown}")
+    spark = get_spark(app_name="panoptes_profile")
+    spark.read.parquet(os.path.join(sf_dirs[0], "nation.parquet")).count()
 
     out = {}
-    for name in args.gates:
-        if name not in qs:
-            print(f"# unknown gate {name}", file=sys.stderr)
-            continue
-        fn = qs[name]
-        best, best_jobs, n = None, None, 0
-        for _ in range(args.runs):
-            sc.setJobDescription(f"profile:{name}")
-            tracker = sc.statusTracker()
-            jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-            t0 = time.time()
-            df = fn(spark, args.sf_dir)
-            n = df.count()
-            dt = time.time() - t0
-            jobs_after = len(sc.statusTracker().getJobIdsForGroup(None) or [])
-            njobs = jobs_after - jobs_before
-            if best is None or dt < best:
-                best, best_jobs = dt, njobs
-            dedup.release_materialized()
-            spark.catalog.clearCache()
-            import gc
-
-            gc.collect()
-        sc.setJobDescription(None)
-        out[name] = {"sec": round(best, 3), "jobs": best_jobs, "rows": n}
-        print(
-            f"# {name}: {n} rows in {best:.2f}s, {best_jobs} jobs",
-            file=sys.stderr,
-        )
-        if args.plans_dir:
-            os.makedirs(args.plans_dir, exist_ok=True)
-            df = fn(spark, args.sf_dir)
+    for sf_dir in sf_dirs:
+        out[sf_dir] = {}
+        for name in args.gates:
+            r = run_gate(spark, qs[name], sf_dir, args.runs)
+            out[sf_dir][name] = {**r, "sec": round(r["sec"], 3)}
+            print(
+                f"# {sf_dir} {name}: {r['rows']} rows in {r['sec']:.2f}s,"
+                f" {r['jobs']} jobs",
+                file=sys.stderr,
+            )
+    if args.plans_dir:
+        os.makedirs(args.plans_dir, exist_ok=True)
+        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
+        for name in args.gates:
+            df = qs[name](spark, sf_dirs[0])
             plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
+                mode.fromString("formatted")
             )
             with open(
                 os.path.join(args.plans_dir, f"{name}_{args.suffix}.txt"), "w"
             ) as f:
                 f.write(plan)
-            dedup.release_materialized()
-            spark.catalog.clearCache()
+            release(spark)
     print(json.dumps(out))
 
 
