@@ -189,7 +189,10 @@ def _compiled_dsl_program(
     compiler — nothing data-derived is embedded), but it builds hundreds
     of tiny frames and re-analyzes deep trees: ~0.5 s of driver latency
     per compile at ANY scale (r11 "not yet optimized" #2). Every action
-    on the memoized plan still computes from the parquet inputs."""
+    on the memoized plan computes from the parquet inputs: the compiled
+    program is one pass over the oid tables (one lineitem scan, one
+    device_id exchange) with nothing cached, so a
+    ``session.release`` between actions costs it nothing."""
     import os as _os
 
     from panoptes_spark import memo
@@ -199,10 +202,7 @@ def _compiled_dsl_program(
     )
 
     def build():
-        # persist: three oid tables filter this one derivation — without
-        # it the lineitem scan+groupBy runs once per table (the bench
-        # releases caches between queries; recompute refills lazily)
-        tables = fx.oid_tables_from_lineitem(spark, sf_dir).persist()
+        tables = fx.oid_tables_from_lineitem(spark, sf_dir)
         comp = MetricDSLCompiler(spark, program, tables, interval_sec=60)
         return flatten_groups(comp.compile())
 
@@ -3109,17 +3109,24 @@ def _s2_scalar_get_program(spark: SparkSession, sf_dir: str) -> DataFrame:
         flatten_groups,
     )
 
+    # every oid row also emits its device's base_offset row, in the same
+    # pass: a distinct() branch unioned back in would plan a second
+    # lineitem scan (Spark reuses no exchange across the union), and the
+    # compiler already keeps one get value per device
     tables = fx.oid_tables_from_lineitem(spark, sf_dir)
-    scalars = tables.select("device_id").distinct().select(
-        "device_id",
-        F.lit("base_offset").alias("table_name"),
-        F.lit("0").alias("index"),
-        (F.substring("device_id", 5, 10).cast("int") * 10)
-        .cast("string").alias("value"),
+    rows = F.array(
+        F.struct("table_name", "index", "value"),
+        F.struct(
+            F.lit("base_offset").alias("table_name"),
+            F.lit("0").alias("index"),
+            (F.substring("device_id", 5, 10).cast("int") * 10)
+            .cast("string").alias("value"),
+        ),
     )
-    comp = MetricDSLCompiler(
-        spark, _S2_PROGRAM, tables.unionByName(scalars), interval_sec=60
+    tables = tables.select("device_id", F.explode(rows).alias("r")).select(
+        "device_id", "r.table_name", "r.index", "r.value"
     )
+    comp = MetricDSLCompiler(spark, _S2_PROGRAM, tables, interval_sec=60)
     return flatten_groups(comp.compile())
 
 

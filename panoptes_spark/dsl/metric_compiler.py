@@ -5,9 +5,12 @@ snmp/plugin_polling_generic_snmp.py:71-762`` (doc ``docs/
 Generic_SNMP_Polling_DSL.md``). The reference evaluates a JSON "program"
 per device with per-index ``eval``; here the program compiles ONCE into a
 DataFrame plan that runs for ALL devices in one go — the per-device loop
-becomes a (device_id, index) equi-join fabric, which is the shape that
-scales: shuffles are keyed by (device_id, index) and reused across targets,
-and small OID tables broadcast.
+becomes ONE pass over the OID frame partitioned by device_id: every walk
+pivoted into (device_id, index) rows, every per-device value (scalars,
+aggregates, membership key sets) a device_id window over the same
+partitioning, every group a projection of those rows. The walk is read
+and shuffled once per program and nothing is cached, which is the
+shape that scales.
 
 Semantics preserved (file:line cites into the reference engine):
 
@@ -21,6 +24,9 @@ Semantics preserved (file:line cites into the reference engine):
   (:489-503); NULL from TRY_CAST/try_divide reproduces the skip.
 - index_transform re-keying applied at table build (:205-209): matching
   raw indices re-keyed, unmatched KEEP their raw index.
+  DEVIATION: when two walked indices re-key onto one key, a target keeps
+  one result there (the larger as a string); the reference's dict keeps
+  the row walked last.
 - top-level targets: falsy value (0, '', None) dropped (:508-519 — the
   ``if not value: continue`` quirk).
 - v0.2 assembly (:586-678): one group per (device, index) with >=1 indexed
@@ -40,14 +46,16 @@ can be routed to a pandas-UDF fallback by the caller.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .metric_expr import (
     ExprInfo,
     UnsupportedExpression,
+    _q,
     cast_sql,
     compile_transform,
     compile_value_expr,
@@ -125,6 +133,44 @@ class _Target:
     raw_kind: str | None = None  # 'boolean' | 'numeric' | None
 
 
+_EMPTY_M = (
+    "cast(array() as array<struct<metric_name:string,metric_value:double,"
+    "metric_type:string,metric_creation_timestamp:double>>)"
+)
+_EMPTY_D = (
+    "cast(array() as array<struct<dimension_name:string,"
+    "dimension_value:string>>)"
+)
+_OVER_DEVICE = " OVER (PARTITION BY device_id)"
+
+
+def _subst(sql: str, names: dict) -> str:
+    """Replace whole identifiers of ``sql`` in one pass (a replacement
+    text is never re-scanned)."""
+    if not names:
+        return sql
+    alts = "|".join(map(re.escape, sorted(names, key=len, reverse=True)))
+    return re.sub(rf"\b({alts})\b", lambda m: names[m.group(1)], sql)
+
+
+def _truthy(raw: Column, kind: str) -> Column:
+    """Python truthiness of a raw top-level value: numeric 0/0.0 and ''
+    are falsy; a non-empty string — including '0' — is truthy."""
+    if kind == "boolean":
+        return raw
+    if kind == "string":
+        return raw != ""
+    return raw.cast("double") != 0.0
+
+
+def _array(entries: list, value: str, empty: str) -> Column:
+    """The entries whose ``value`` field is non-NULL, or a typed empty
+    array when there are none."""
+    if not entries:
+        return F.expr(empty)
+    return F.filter(F.array(*entries), lambda s: s[value].isNotNull())
+
+
 class MetricDSLCompiler:
     """Compile one DSL program against long-format OID tables.
 
@@ -137,6 +183,11 @@ class MetricDSLCompiler:
     static_devices:
         DataFrame (device_id) giving the device universe for static-only
         programs; defaults to ``oid_tables.select(device_id).distinct()``.
+
+    The compiled plan caches nothing: an action on it reads
+    ``oid_tables`` once (plus once per join-fabric fallback target, see
+    :func:`compile`), before and after ``spark.catalog.clearCache()``
+    alike.
     """
 
     def __init__(
@@ -154,6 +205,7 @@ class MetricDSLCompiler:
         self.oid_tables = oid_tables
         self.interval = interval_sec
         self.schema_version = schema_version
+        self.static_devices = static_devices
         self.known_tables = set(self.oids_spec.keys())
         self.scalar_oids = {
             n for n, s in self.oids_spec.items() if s.get("method") == "get"
@@ -162,10 +214,13 @@ class MetricDSLCompiler:
             static_devices
             if static_devices is not None
             else oid_tables.select("device_id").distinct()
-        ).persist()
-        self._table_cache: dict[str, DataFrame] = {}
-        self._wide_cache: DataFrame | None = None
-        self._scalars_cache: DataFrame | None = None
+        )
+        self._cells_cache: DataFrame | None = None
+        # targets the one pass cannot evaluate in place, compiled through
+        # the join fabric and fed back into it as pseudo OID tables:
+        # table name -> (device_id, table_name, index, value) rows
+        self._fallback_walks: dict[str, DataFrame] = {}
+        self._fallback_scalars: dict[str, DataFrame] = {}
 
     # -- OID table materialization ---------------------------------------
 
@@ -181,53 +236,74 @@ class MetricDSLCompiler:
             and not s.get("index_transform")
         )
 
-    def wide(self) -> DataFrame | None:
-        """ONE shuffle of the walk per program: pivot every plain
-        bulk-walk table into (device_id, index, __t_<table>, ...).
-
-        The per-target fabric previously re-joined the same
-        (device_id, index)-keyed walk slice once per referenced table
-        per target (p7_empty_dimension_policy planned 40 Exchanges);
-        every target whose references live in this frame now compiles
-        to a map-only projection over it — the shape proven in
-        operators/interface_enrichment.py's walk pivot. At 100 TB the
-        walk shuffles once, not once per OID table."""
-        if self._wide_cache is not None:
-            return self._wide_cache
-        names = self._pivotable()
-        if not names:
-            return None
+    def _pivot(
+        self, src: DataFrame, walks: list, scalars: list, listed: bool = False
+    ) -> DataFrame:
+        """(device_id, index, __t_<table>, ...) from long rows ``src`` in
+        one device_id exchange: the cells of every table in ``walks``
+        (max per index) and, as a device_id window over the same
+        partitioning, the one value per device of every table in
+        ``scalars`` (min over its rows). ``__first`` marks exactly one
+        row per device; ``__listed`` is the device-universe test (a
+        ``static_devices`` marker row when ``listed``, else every
+        device)."""
+        tn, d = F.col("table_name"), Window.partitionBy("device_id")
+        aggs = [
+            F.max(F.when(tn == n, F.col("value"))).alias(table_col(n))
+            for n in walks
+        ] + [
+            F.min(F.when(tn == n, F.col("value"))).alias(table_col(n))
+            for n in scalars
+        ]
         w = (
-            self.oid_tables.where(F.col("table_name").isin(names))
+            src.repartition("device_id")
             .groupBy("device_id", "index")
-            .pivot("table_name", names)
-            .agg(F.max("value"))
+            .agg(F.max(tn.isNull()).alias("__listed"), *aggs)
         )
-        for n in names:
-            w = w.withColumnRenamed(n, table_col(n))
-        self._wide_cache = w.persist()
-        return self._wide_cache
+        return w.withColumns({
+            **{table_col(n): F.min(table_col(n)).over(d) for n in scalars},
+            "__first": F.col("index").eqNullSafe(F.min("index").over(d)),
+            "__listed": F.max("__listed").over(d) if listed else F.lit(True),
+        })
 
-    def _scalars_wide(self) -> DataFrame | None:
-        """All get-method oids pivoted per device in one pass:
-        (device_id, __t_<scalar>, ...) — a single device-dim join per
-        target that references any scalar, instead of one join per
-        scalar."""
-        if self._scalars_cache is not None:
-            return self._scalars_cache
-        names = sorted(self.scalar_oids)
-        if not names:
-            return None
-        s = (
-            self.oid_tables.where(F.col("table_name").isin(names))
-            .groupBy("device_id")
-            .pivot("table_name", names)
-            .agg(F.min("value"))
+    def _cells(self) -> DataFrame:
+        """:func:`_pivot` of ``oid_tables`` alone — the walk cells and
+        scalars the join-fabric fallbacks read."""
+        if self._cells_cache is None:
+            self._cells_cache = self._pivot(
+                self.oid_tables, self._pivotable(), sorted(self.scalar_oids)
+            )
+        return self._cells_cache
+
+    def wide(self) -> DataFrame:
+        """The program's ONE pass over the OID frame: a single device_id
+        exchange, every plain bulk-walk table pivoted into (device_id,
+        index, __t_<table>, ...) and every ``get`` table broadcast to its
+        device's rows by a window over the same partitioning — plus one
+        pseudo table per fallback target registered so far and a marker
+        row per ``static_devices`` device. Every consumer in
+        :func:`compile` is a projection or a device_id window over this
+        frame, so the walk is read and shuffled once per program, not
+        once per OID table or consumer, and nothing is cached."""
+        listed = self.static_devices is not None
+        fallbacks = {**self._fallback_walks, **self._fallback_scalars}
+        if not (fallbacks or listed):
+            return self._cells()
+        src = self.oid_tables.select("device_id", "table_name", "index", "value")
+        for rows in fallbacks.values():
+            src = src.unionByName(rows)
+        if listed:
+            null = F.lit(None).cast("string")
+            src = src.unionByName(self.static_devices.select(
+                "device_id", null.alias("table_name"), null.alias("index"),
+                null.alias("value"),
+            ))
+        return self._pivot(
+            src,
+            self._pivotable() + sorted(self._fallback_walks),
+            sorted(self.scalar_oids) + sorted(self._fallback_scalars),
+            listed,
         )
-        for n in names:
-            s = s.withColumnRenamed(n, table_col(n))
-        self._scalars_cache = s.persist()
-        return self._scalars_cache
 
     def _static_value_col(self, name: str) -> F.Column:
         """A static table referenced at the current row's index is a map
@@ -251,9 +327,8 @@ class MetricDSLCompiler:
     def table(self, name: str) -> DataFrame:
         """(device_id, index, value) for one oid table, index_transform
         applied (matching indices re-keyed, others kept — reference
-        ``_build_map_by_bulk_walk``)."""
-        if name in self._table_cache:
-            return self._table_cache[name]
+        ``_build_map_by_bulk_walk``). A plain plan over ``oid_tables``
+        read only by the join-fabric fallbacks."""
         spec = self.oids_spec[name]
         if spec["method"] == "static":
             # literal rows per device as an exploded array — a pure
@@ -277,79 +352,40 @@ class MetricDSLCompiler:
                         for k, v in spec["values"].items()
                     ]
                 )
-            df = self._devices.select(
+            return self._devices.select(
                 "device_id", F.explode(entries).alias("e")
             ).select("device_id", "e.index", "e.value")
-        else:
-            df = self.oid_tables.where(F.col("table_name") == name).select(
-                "device_id", "index", "value"
+        df = self.oid_tables.where(F.col("table_name") == name).select(
+            "device_id", "index", "value"
+        )
+        it = spec.get("index_transform")
+        if it:
+            # re-key through a map literal: unmatched indices keep their
+            # raw value (reference _build_map_by_bulk_walk) — projection
+            # only, no join
+            m = F.create_map(
+                *[F.lit(s) for k, v in it.items() for s in (str(k), str(v))]
             )
-            it = spec.get("index_transform")
-            if it:
-                # re-key through a map literal: unmatched indices keep their
-                # raw value (reference _build_map_by_bulk_walk) — projection
-                # only, no join
-                m = F.create_map(
-                    *[
-                        F.lit(s)
-                        for k, v in it.items()
-                        for s in (str(k), str(v))
-                    ]
-                )
-                df = df.select(
-                    "device_id",
-                    F.coalesce(m[F.col("index")], F.col("index")).alias("index"),
-                    "value",
-                )
-        # OID tables are device-dim sized and re-joined by every target that
-        # references them — persist so the upstream scan/groupBy runs once
-        df = df.persist()
-        self._table_cache[name] = df
+            df = df.select(
+                "device_id",
+                F.coalesce(m[F.col("index")], F.col("index")).alias("index"),
+                "value",
+            )
         return df
 
-    def unpersist(self) -> None:
-        """Release every frame this compiler persisted (devices, the
-        wide pivot, per-table frames). Long-running callers that build
-        one compiler per unit of work — the streaming polling pipeline's
-        per-micro-batch compile — must call this after consuming the
-        output, or cached blocks from dead batches linger in executor
-        storage until GC + ContextCleaner get around to them."""
-        self._devices.unpersist()
-        if self._wide_cache is not None:
-            self._wide_cache.unpersist()
-            self._wide_cache = None
-        if self._scalars_cache is not None:
-            self._scalars_cache.unpersist()
-            self._scalars_cache = None
-        for df in self._table_cache.values():
-            df.unpersist()
-        self._table_cache.clear()
-
     def _cell_frame(self, name: str) -> DataFrame:
-        """(device_id, index, value) carved from the program-wide pivot
-        when the table lives there: a filter+projection that KEEPS the
-        pivot's (device_id, index) hash partitioning, so downstream
-        equi-joins between two pivot-carved frames plan with no new
-        Exchange. Falls back to the per-table frame for static /
+        """(device_id, index, value) carved from :func:`_cells` when the
+        table lives there: a filter+projection that KEEPS its device_id
+        partitioning. Falls back to the per-table frame for static /
         index_transform / get tables."""
-        if self.wide() is not None and name in self._pivotable():
+        if name in self._pivotable():
             c = table_col(name)
             return (
-                self.wide()
+                self._cells()
                 .where(F.col(c).isNotNull())
                 .select("device_id", "index", F.col(c).alias("value"))
             )
         return self.table(name)
-
-    def scalar(self, name: str) -> DataFrame:
-        """(device_id, value) for a get-method oid (one value per device)."""
-        cached = self._table_cache.get(f"__scalar_{name}")
-        if cached is not None:
-            return cached
-        df = self.oid_tables.where(F.col("table_name") == name)
-        out = df.groupBy("device_id").agg(F.min("value").alias(table_col(name)))
-        self._table_cache[f"__scalar_{name}"] = out
-        return out
 
     # -- per-target compilation ------------------------------------------
 
@@ -419,212 +455,155 @@ class MetricDSLCompiler:
         return first is not None
 
     def _first_table(self, raw_value: str):
-        import re
-
         for m in re.finditer(r"(\w+)\.\$index", raw_value):
             if m.group(1) in self.known_tables:
                 return m.group(1)
         return None
 
-    def _driving_frame(self, t: _Target) -> DataFrame:
-        tmap = t.tmap
-        if "indices" in tmap:
-            idx = self.spark.createDataFrame(
-                [(str(i),) for i in tmap["indices"]], "index string"
-            )
-            return self._devices.crossJoin(F.broadcast(idx))
-        if "indices_from" in tmap:
-            return self._cell_frame(tmap["indices_from"]).select(
-                "device_id", "index"
-            )
-        first = self._first_table(str(tmap["value"]))
-        return self._cell_frame(first).select("device_id", "index")
+    def _driving(self, t: _Target) -> str | None:
+        """The table whose rows drive an indexed target (reference
+        :329-349): ``indices_from`` > first table in the value; None for
+        a literal ``indices`` list."""
+        if "indices" in t.tmap:
+            return None
+        if "indices_from" in t.tmap:
+            return t.tmap["indices_from"]
+        return self._first_table(str(t.tmap["value"]))
+
+    def _in_frame(self, t: _Target) -> bool:
+        """Whether :func:`compile` evaluates ``t`` in place over
+        :func:`wide`: a translated expression over walk cells, scalars
+        and static map lookups, driven (when indexed) by a walk table's
+        presence, with membership tested against walk or static tables
+        and top-level aggregates iterating a walk table. Literal
+        ``indices`` lists, index_transform tables, table subscripts,
+        indexed aggregates and py fallbacks take the join fabric."""
+        if t.mode != "sql" or t.info.subscripts:
+            return False
+        pivot = set(self._pivotable())
+        statics = {
+            n for n, s in self.oids_spec.items() if s["method"] == "static"
+        }
+        if not t.info.tables <= pivot | statics | self.scalar_oids:
+            return False
+        if any(tbl not in pivot | statics for tbl, _ in t.info.member_tables):
+            return False
+        if t.indexed:
+            return not t.info.is_aggregate and self._driving(t) in pivot
+        return not t.info.is_aggregate or t.info.agg_table in pivot
+
+    def _frame_sql(self, sql: str, t: _Target, **names: str) -> str:
+        """``sql`` over :func:`wide`, with ``names`` bound. Membership
+        flags are inlined: a walk table keyed on this row's index is its
+        non-NULL cell, on any other key the device's window-collected
+        key set ``__keys_<table>``; a static table's keys are literals.
+        In an aggregate the element placeholders bind to this row's cell
+        of the iterated table."""
+        info = t.info
+        agg = info.agg_table if info.is_aggregate else None
+        elem = (
+            {"__agg_value": table_col(agg), "__agg_index": "index"}
+            if agg else {}
+        )
+        for tbl, key in sorted(info.member_tables):
+            key = _subst(key, elem)
+            spec = self.oids_spec[tbl]
+            if spec["method"] == "static":
+                keys = ", ".join(_q(str(k)) for k in spec["values"])
+                flag = f"({key}) IN ({keys})" if keys else "FALSE"
+            elif key == "index":
+                flag = f"{table_col(tbl)} IS NOT NULL"
+            else:
+                flag = f"exists(__keys_{tbl}, __k -> __k = ({key}))"
+            names[f"__in_{tbl}"] = f"coalesce({flag}, FALSE)"
+        return _subst(sql, {**elem, **names})
+
+    def _raw_sql(self, t: _Target) -> str:
+        """The raw (pre-cast/transform) value of an in-frame target. A
+        top-level aggregate counts its matching elements with a device_id
+        window over the rows that carry the iterated table; python
+        evaluates the comprehension filter for EVERY element, so one
+        raise (any row hazard NULL) aborts the whole aggregate for that
+        device, and a device without elements has no value."""
+        info = t.info
+        if not info.is_aggregate:
+            return self._frame_sql(info.sql, t)
+        elem = f"{table_col(info.agg_table)} IS NOT NULL"
+        filt = self._frame_sql(info.agg_filter_sql, t)
+        hz = " OR ".join(
+            f"({self._frame_sql(h, t)}) IS NULL" for h in info.agg_row_hazards
+        ) or "FALSE"
+        count = (
+            f"sum(CASE WHEN {elem} THEN CASE WHEN {filt} THEN 1 ELSE 0 END"
+            f" END){_OVER_DEVICE}"
+        )
+        poisoned = f"max(CASE WHEN {elem} THEN {hz} END){_OVER_DEVICE}"
+        value = self._frame_sql(info.sql, t, __agg_count=f"({count})")
+        return f"CASE WHEN coalesce({poisoned}, FALSE) THEN NULL ELSE ({value}) END"
 
     def _indexed_values(self, t: _Target) -> DataFrame:
-        """(device_id, index, value) for an indexed target; NULL values
-        (eval failure equivalents) dropped.
+        """(device_id, index, value) for an indexed target that
+        :func:`compile` cannot evaluate in place; NULL values (eval
+        failure equivalents) dropped.
 
         Plan shape: the driving rows and every plain bulk-walk reference
-        come from the ONE program-wide pivot (:func:`wide`) — a filter +
-        projection, no join. Only non-pivotable references still join:
-        static tables become map-literal lookups (projection), transform
-        tables keep their per-table frame, and all scalars arrive in a
-        single device-dim join."""
+        come from :func:`_cells` — a filter + projection, no join — when
+        the driving table is a walk table. Otherwise the driving frame
+        joins the walk cells and the device scalars it needs; static
+        tables become map-literal lookups (projection) and transform
+        tables join their per-table frame."""
         if t.mode == "py":
             return self._indexed_values_py(t)
         if t.info.is_aggregate:
             return self._indexed_aggregate_values(t)
-        tmap = t.tmap
         pivot_set = set(self._pivotable())
         tables = sorted(t.info.tables)
-        walk_refs = [x for x in tables if x in pivot_set]
-        scalar_refs = [x for x in tables if x in self.scalar_oids]
+        walk_refs = [table_col(x) for x in tables if x in pivot_set]
+        scalar_refs = [table_col(x) for x in tables if x in self.scalar_oids]
         other_refs = [
             x for x in tables if x not in pivot_set and x not in self.scalar_oids
         ]
-
-        def from_wide(driving: str | None) -> DataFrame:
-            """Rows of the wide frame driven by ``driving``'s presence
-            (a pivot cell is non-null iff the walk had that row)."""
-            w = self.wide()
-            if driving is not None:
-                w = w.where(F.col(table_col(driving)).isNotNull())
-            return w
-
-        if "indices" in tmap:
-            idx = self.spark.createDataFrame(
-                [(str(i),) for i in tmap["indices"]], "index string"
-            )
-            df = self._devices.crossJoin(F.broadcast(idx))
-            if walk_refs:
-                df = df.join(self.wide(), ["device_id", "index"], "left")
-        elif "indices_from" in tmap:
-            src = tmap["indices_from"]
-            if src in pivot_set:
-                df = from_wide(src)
-            else:
-                df = self.table(src).select("device_id", "index")
-                if walk_refs:
-                    df = df.join(self.wide(), ["device_id", "index"], "left")
+        driving = self._driving(t)
+        if driving in pivot_set:
+            # a pivot cell is non-null iff the walk had that row
+            df = self._cells().where(F.col(table_col(driving)).isNotNull())
         else:
-            first = self._first_table(str(tmap["value"]))
-            if first in pivot_set:
-                df = from_wide(first)
-            else:
-                df = self.table(first).select("device_id", "index")
-                if walk_refs:
-                    df = df.join(self.wide(), ["device_id", "index"], "left")
-
+            df = self._driving_frame(t)
+            if walk_refs:
+                df = df.join(
+                    self._cells().select("device_id", "index", *walk_refs),
+                    ["device_id", "index"],
+                    "left",
+                )
+            if scalar_refs:
+                df = df.join(
+                    self._cells().where("__first").select(
+                        "device_id", *scalar_refs
+                    ),
+                    "device_id",
+                    "left",
+                )
         for tbl in other_refs:
             if self.oids_spec[tbl]["method"] == "static":
                 df = df.withColumn(table_col(tbl), self._static_value_col(tbl))
             else:  # index_transform table: per-table long frame
                 tv = self.table(tbl).withColumnRenamed("value", table_col(tbl))
                 df = df.join(tv, ["device_id", "index"], "left")
-        if scalar_refs:
-            df = df.join(self._scalars_wide(), "device_id", "left")
         df = self._join_subscripts(df, t.info)
         df = self._join_member_flags(df, t.info, key_scope="index")
         df = df.withColumn("__raw", F.expr(t.info.sql))  # single evaluation
-        out = df.select(
+        return df.select(
             "device_id", "index", F.expr(self._guarded_sql(t)).alias("value")
         ).where(F.col("value").isNotNull())
-        return out
 
-    def _direct_cond(self, t: _Target) -> str | None:
-        """Driving-presence SQL condition for a wide-direct target, or
-        None when the target cannot be evaluated as a pure projection of
-        :func:`wide` (literal index lists, py-mode fallbacks, transform
-        tables, or membership tests keyed on anything but ``index``)."""
-        if t.mode != "sql" or t.info is None:
-            return None
-        if t.info.is_aggregate or t.info.subscripts:
-            return None  # these need the aggregate / subscript-join plans
-        pivot = set(self._pivotable())
-        tmap = t.tmap
-        if "indices" in tmap:
-            return None
-        if "indices_from" in tmap:
-            driving = tmap["indices_from"]
-        else:
-            driving = self._first_table(str(tmap["value"]))
-        if driving not in pivot:
-            return None
-        for tbl in t.info.tables:
-            if tbl in self.scalar_oids or tbl in pivot:
-                continue
-            if self.oids_spec[tbl]["method"] == "static":
-                continue
-            return None  # index_transform table: needs the long path
-        for tbl, left_sql in t.info.member_tables:
-            if left_sql != "index" or tbl not in pivot:
-                return None
-        return f"{table_col(driving)} IS NOT NULL"
-
-    def _idx_groups_direct(
-        self, idx_metrics: list, idx_dims: list
-    ) -> DataFrame | None:
-        """Every indexed target of a group as a projection of the ONE
-        program-wide pivot: returns (device_id, index, _m, _d,
-        _had_empty) with zero shuffles beyond the pivot itself (plus a
-        single device-dim join when the program reads get-oids).
-
-        Each target's driving frame becomes a presence condition on its
-        driving table's pivot cell; membership flags keyed on ``index``
-        become IS NOT NULL tests; static tables become map literals.
-        Returns None when any target needs the legacy per-target
-        union fabric (_union_long)."""
-        targets = idx_metrics + idx_dims
-        if self.wide() is None:
-            return None
-        conds = []
-        for t in targets:
-            c = self._direct_cond(t)
-            if c is None:
-                return None
-            conds.append(c)
-
-        pivot = set(self._pivotable())
-        w = self.wide()
-        statics = {
-            tbl
-            for t in targets
-            for tbl in t.info.tables
-            if tbl not in self.scalar_oids and tbl not in pivot
-        }
-        for tbl in sorted(statics):
-            w = w.withColumn(table_col(tbl), self._static_value_col(tbl))
-        if any(
-            tbl in self.scalar_oids for t in targets for tbl in t.info.tables
-        ):
-            w = w.join(self._scalars_wide(), "device_id", "left")
-        members = {tbl for t in targets for tbl, _ in t.info.member_tables}
-        for tbl in sorted(members):
-            w = w.withColumn(
-                f"__in_{tbl}", F.col(table_col(tbl)).isNotNull()
+    def _driving_frame(self, t: _Target) -> DataFrame:
+        src = self._driving(t)
+        if src is None:
+            idx = self.spark.createDataFrame(
+                [(str(i),) for i in t.tmap["indices"]], "index string"
             )
-
-        m_entries, d_entries = [], []
-        for i, (t, cond) in enumerate(zip(targets, conds)):
-            raw_alias = f"__tr{i}"
-            w = w.withColumn(raw_alias, F.expr(t.info.sql))
-            guarded = self._guarded_sql(t).replace("__raw", raw_alias)
-            val = F.when(F.expr(cond), F.expr(guarded))
-            if t.is_metric:
-                m_entries.append(
-                    F.struct(
-                        F.lit(t.name).alias("name"),
-                        val.cast("double").alias("value"),
-                    )
-                )
-            else:
-                d_entries.append(
-                    F.struct(
-                        F.lit(t.name).alias("name"),
-                        val.cast("string").alias("value"),
-                    )
-                )
-
-        keep = lambda s: s["value"].isNotNull()  # noqa: E731
-        d_arr = (
-            F.filter(F.array(*d_entries), keep)
-            if d_entries
-            else F.expr(
-                "cast(array() as array<struct<name:string,value:string>>)"
-            )
-        )
-        return (
-            w.select(
-                "device_id",
-                "index",
-                F.filter(F.array(*m_entries), keep).alias("_m"),
-                d_arr.alias("_d"),
-            )
-            .withColumn(
-                "_had_empty", F.exists("_d", lambda s: s["value"] == "")
-            )
-            .where(F.size("_m") > 0)
-        )
+            return self._devices.crossJoin(F.broadcast(idx))
+        return self._cell_frame(src).select("device_id", "index")
 
     def _join_subscripts(self, df: DataFrame, info) -> DataFrame:
         """Left-join one column per table SUBSCRIPT (``pmt[x]``): value
@@ -729,8 +708,6 @@ class MetricDSLCompiler:
     # -- pandas-UDF fallback paths ---------------------------------------
 
     def _ref_tables(self, raw_value: str) -> list[str]:
-        import re
-
         found = []
         for m in re.finditer(r"(\w+)\.\$index", str(raw_value)):
             if m.group(1) in self.known_tables and m.group(1) not in found:
@@ -740,7 +717,6 @@ class MetricDSLCompiler:
     def _indexed_values_py(self, t: _Target) -> DataFrame:
         """Fallback: join referenced tables then interpret the expression
         per row with the whitelist AST interpreter (Arrow-batched)."""
-        import re
         from collections.abc import Iterator
 
         import pandas as pd
@@ -791,7 +767,6 @@ class MetricDSLCompiler:
 
     def _top_level_value_py(self, t: _Target) -> DataFrame:
         """Fallback top-level target: per-device table dicts -> interpreter."""
-        import re
         from collections.abc import Iterator
 
         import pandas as pd
@@ -860,7 +835,7 @@ class MetricDSLCompiler:
         carved out of the program-wide pivot when the table lives there
         (reuses the one walk shuffle) instead of re-scanning the walk."""
         if tbl in self._pivotable():
-            return self.wide().where(
+            return self._cells().where(
                 F.col(table_col(tbl)).isNotNull()
             ).select("device_id", "index")
         return self.table(tbl).select("device_id", "index")
@@ -894,336 +869,49 @@ class MetricDSLCompiler:
             )
         return df
 
-    def _top_level_value(self, t: _Target) -> DataFrame:
-        """(device_id, value) for a top-level target; falsy values dropped
-        (reference ``if not value: continue``)."""
+
+    def _top_level_fallback(self, t: _Target) -> DataFrame:
+        """(device_id, value) for a top-level target that :func:`compile`
+        cannot evaluate in place (py fallbacks; aggregates over a static
+        or index_transform table, or with subscripts); falsy values
+        dropped (reference ``if not value: continue``)."""
         if t.mode == "py":
             return self._top_level_value_py(t)
         info = t.info
-        if info.is_aggregate:
-            base = self._cell_frame(info.agg_table).select(
-                "device_id",
-                F.col("index").alias("__agg_index"),
-                F.col("value").alias("__agg_value"),
+        base = self._cell_frame(info.agg_table).select(
+            "device_id",
+            F.col("index").alias("__agg_index"),
+            F.col("value").alias("__agg_value"),
+        )
+        base = self._join_subscripts(base, info)
+        base = self._join_member_flags(base, info, key_scope="agg")
+        # python evaluates the comprehension filter for EVERY element;
+        # one raise aborts the whole aggregate for that device
+        row_poison = " OR ".join(
+            f"({h}) IS NULL" for h in info.agg_row_hazards
+        ) or "FALSE"
+        counted = (
+            base.groupBy("device_id")
+            .agg(
+                F.sum(
+                    F.when(F.expr(info.agg_filter_sql), 1).otherwise(0)
+                ).alias("__agg_count"),
+                F.max(F.expr(row_poison)).alias("__poisoned"),
             )
-            base = self._join_member_flags(base, info, key_scope="agg")
-            # python evaluates the comprehension filter for EVERY element;
-            # one raise aborts the whole aggregate for that device
-            if info.agg_row_hazards:
-                row_poison = " OR ".join(
-                    f"({h}) IS NULL" for h in info.agg_row_hazards
-                )
-                base = base.withColumn("__row_hz", F.expr(row_poison))
-            else:
-                base = base.withColumn("__row_hz", F.lit(False))
-            counted = (
-                base.groupBy("device_id")
-                .agg(
-                    F.sum(
-                        F.when(F.expr(info.agg_filter_sql), 1).otherwise(0)
-                    ).alias("__agg_count"),
-                    F.max("__row_hz").alias("__poisoned"),
-                )
-                .where(~F.col("__poisoned"))
-            )
-            # info.sql for an aggregate is the '__agg_count' placeholder
-            df = counted.withColumn("__raw", F.expr(t.info.sql)).select(
-                "device_id", F.expr(t.final_sql).alias("value"), "__raw"
-            )
-            raw_kind = "numeric"  # len([...]) is always an int
-        else:
-            df = self._devices
-            for tbl in sorted(info.tables):
-                if tbl in self.scalar_oids:
-                    df = df.join(self.scalar(tbl), "device_id", "left")
-                else:
-                    raise UnsupportedExpression(
-                        f"top-level target {t.name!r} references per-index "
-                        f"table {tbl!r} without $index"
-                    )
-            # raw pre-cast/transform value, evaluated ONCE: the reference
-            # applies the falsy skip to the eval result BEFORE cast/
-            # transform (:508-519), so `0.4` with type integer keeps
-            # metric 0 and a transform yielding 0 is kept
-            df = df.withColumn("__raw", F.expr(t.info.sql)).select(
-                "device_id", F.expr(self._guarded_sql(t)).alias("value"), "__raw"
-            )
-            raw_kind = t.raw_kind
-        # falsy skip on the RAW value (python `if not value: continue`):
-        # numeric 0/0.0 and '' are falsy; a non-empty string — including
-        # '0' — is truthy. NULL raw means an evaluated sub-expression
-        # raised -> dropped either way. The raw type is known statically
-        # for literal/aggregate targets; only expression targets pay a
-        # schema analysis.
-        if raw_kind is None:
-            raw_kind = {
-                "boolean": "boolean", "string": "string"
-            }.get(dict(df.dtypes)["__raw"], "numeric")
+            .where(~F.col("__poisoned"))
+        )
+        # info.sql for an aggregate is the '__agg_count' placeholder;
+        # len([...]) is always an int
+        df = counted.withColumn("__raw", F.expr(info.sql)).select(
+            "device_id", F.expr(t.final_sql).alias("value"), "__raw"
+        )
         raw = F.col("__raw")
-        if raw_kind == "boolean":
-            truthy = raw
-        elif raw_kind == "string":
-            truthy = raw != ""
-        else:
-            truthy = raw.cast("double") != 0.0
         return df.where(
-            F.col("value").isNotNull() & raw.isNotNull() & truthy
+            F.col("value").isNotNull() & raw.isNotNull()
+            & _truthy(raw, "numeric")
         ).drop("__raw")
 
-    # -- group assembly ---------------------------------------------------
-
-    def compile_group(self, group: dict) -> DataFrame:
-        """One metrics_group -> DataFrame of nested groups:
-        (device_id, metrics_group_type, metrics array, dimensions array,
-        metrics_group_interval)."""
-        targets: list[_Target] = []
-        for name, tmap in group["metrics"].items():
-            targets.append(self._compile_target(name, tmap, True))
-        for name, tmap in group["dimensions"].items():
-            targets.append(self._compile_target(name, tmap, False))
-
-        idx_metrics = [t for t in targets if t.is_metric and t.indexed]
-        idx_dims = [t for t in targets if not t.is_metric and t.indexed]
-        top_metrics = [t for t in targets if t.is_metric and not t.indexed]
-        top_dims = [t for t in targets if not t.is_metric and not t.indexed]
-
-        mtype = {
-            t.name: t.tmap["metric_type"] for t in targets if t.is_metric
-        }
-
-        # ---- top-level per-device arrays — groups with NO top-level
-        # targets (common: all-indexed vendor programs) take literal
-        # empty arrays instead of joining empty frames (each empty join
-        # still planned a 2-exchange SMJ)
-        _EMPTY_M = (
-            "cast(array() as array<struct<metric_name:string,"
-            "metric_value:double,metric_type:string,"
-            "metric_creation_timestamp:double>>)"
-        )
-        _EMPTY_D = (
-            "cast(array() as array<struct<dimension_name:string,"
-            "dimension_value:string>>)"
-        )
-        has_top = bool(top_metrics or top_dims)
-        top = self._devices
-        if top_metrics:
-            top = top.join(
-                self._collect_long(
-                    top_metrics,
-                    value_type="double",
-                    mtype=mtype,
-                    colname="top_metrics",
-                ),
-                "device_id",
-                "left",
-            ).withColumn(
-                "top_metrics", F.coalesce("top_metrics", F.expr(_EMPTY_M))
-            )
-        else:
-            top = top.withColumn("top_metrics", F.expr(_EMPTY_M))
-        if top_dims:
-            top = top.join(
-                self._collect_long(
-                    top_dims, value_type="string", mtype=None,
-                    colname="top_dims",
-                ),
-                "device_id",
-                "left",
-            ).withColumn(
-                "top_dims", F.coalesce("top_dims", F.expr(_EMPTY_D))
-            )
-        else:
-            top = top.withColumn("top_dims", F.expr(_EMPTY_D))
-        # empty-string dims never reach the arrays (skipped at _top_level_value)
-
-        interval = F.lit(self.interval).cast("long")
-        gname = F.lit(group["group_name"])
-
-        if idx_metrics:
-            base = self._idx_groups_direct(idx_metrics, idx_dims)
-            if base is None:  # legacy per-target union fabric
-                long_m = self._union_long(idx_metrics, "double")
-                # array_sort: collect_list order is task-scheduling-
-                # dependent, and MetricsGroupSet's dropDuplicates
-                # compares these arrays order-sensitively
-                groups_m = long_m.groupBy("device_id", "index").agg(
-                    F.array_sort(
-                        F.collect_list(F.struct("name", "value"))
-                    ).alias("_m")
-                )
-                if idx_dims:
-                    long_d = self._union_long(idx_dims, "string")
-                    groups_d = long_d.groupBy("device_id", "index").agg(
-                        F.array_sort(
-                            F.collect_list(F.struct("name", "value"))
-                        ).alias("_d"),
-                        F.max(F.col("value") == "").alias("_had_empty"),
-                    )
-                    base = groups_m.join(
-                        groups_d, ["device_id", "index"], "left"
-                    )
-                else:
-                    base = groups_m.withColumn(
-                        "_d",
-                        F.expr(
-                            "cast(array() as array<struct<name:string,value:string>>)"
-                        ),
-                    ).withColumn("_had_empty", F.lit(False))
-            if has_top:
-                idx_groups = base.join(top, "device_id", "left")
-            else:  # nothing to merge: skip the device-keyed join
-                idx_groups = base.withColumn(
-                    "top_metrics", F.expr(_EMPTY_M)
-                ).withColumn("top_dims", F.expr(_EMPTY_D))
-
-            mtype_map = F.create_map(
-                *[x for k, v in mtype.items() for x in (F.lit(k), F.lit(v))]
-            ) if mtype else F.create_map()
-
-            metrics_arr = F.expr(
-                "transform(_m, s -> struct(s.name as metric_name,"
-                " cast(s.value as double) as metric_value,"
-                " element_at(_mtype, s.name) as metric_type,"
-                " cast(0.0 as double) as metric_creation_timestamp))"
-            )
-            dims_arr = F.expr(
-                "transform(filter(coalesce(_d, array()), s -> s.value != ''),"
-                " s -> struct(s.name as dimension_name,"
-                " s.value as dimension_value))"
-            )
-            # v0.2 merges top-level metrics into every indexed group
-            # (:624-655); v0.1 emits them as a separate group instead
-            merged_metrics = (
-                F.concat(metrics_arr, F.col("top_metrics"))
-                if self.schema_version != "0.1"
-                else metrics_arr
-            )
-            out = (
-                idx_groups.withColumn("_mtype", mtype_map)
-                .withColumn("metrics", merged_metrics)
-                .withColumn("dimensions", F.concat(dims_arr, F.col("top_dims")))
-                .withColumn(
-                    "_suppress",
-                    F.coalesce("_had_empty", F.lit(False))
-                    & F.lit(not group["ignore_empty_dimensions"]),
-                )
-                .where(~F.col("_suppress"))
-                .select(
-                    "device_id",
-                    gname.alias("metrics_group_type"),
-                    interval.alias("metrics_group_interval"),
-                    "metrics",
-                    "dimensions",
-                )
-            )
-            if self.schema_version == "0.1":
-                # v0.1: one separate top-level group per device with >=1
-                # top metric (:644-655), alongside the indexed groups
-                top_src = top.where(F.expr("size(top_metrics) > 0"))
-            else:
-                # v0.2: devices with no surviving indexed metrics get the
-                # top-level-only group (reference else-branch :657-678)
-                # the anti side is one distinct device_id column (dim-
-                # sized even at fleet scale): broadcast it so the top
-                # frame never shuffle-sorts for the fallback check
-                top_src = top.join(
-                    F.broadcast(base.select("device_id").distinct()),
-                    "device_id",
-                    "left_anti",
-                )
-            top_only = top_src.select(
-                "device_id",
-                gname.alias("metrics_group_type"),
-                interval.alias("metrics_group_interval"),
-                F.col("top_metrics").alias("metrics"),
-                # the reference's fallback branch attaches top-level
-                # dims ONLY when top-level metrics exist (:661-668);
-                # a metric-less fallback group is fully empty
-                F.when(
-                    F.expr("size(top_metrics) > 0"), F.col("top_dims")
-                ).otherwise(F.expr(_EMPTY_D)).alias("dimensions"),
-            )
-            return out.unionByName(top_only)
-
-        # group with no indexed metric targets: one top-level group per
-        # device (v0.1 additionally requires non-empty metrics)
-        top_src = (
-            top.where(F.expr("size(top_metrics) > 0"))
-            if self.schema_version == "0.1"
-            else top
-        )
-        return top_src.select(
-            "device_id",
-            gname.alias("metrics_group_type"),
-            interval.alias("metrics_group_interval"),
-            F.col("top_metrics").alias("metrics"),
-            # same fallback rule as above: dims ride only with metrics
-            F.when(
-                F.expr("size(top_metrics) > 0"), F.col("top_dims")
-            ).otherwise(F.expr(_EMPTY_D)).alias("dimensions"),
-        )
-
-    def _union_long(self, targets: list[_Target], value_type: str) -> DataFrame:
-        dfs = []
-        for t in targets:
-            v = self._indexed_values(t)
-            dfs.append(
-                v.select(
-                    "device_id",
-                    "index",
-                    F.lit(t.name).alias("name"),
-                    F.col("value").cast(value_type).alias("value"),
-                ).where(F.col("value").isNotNull())
-            )
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    def _collect_long(
-        self, targets: list[_Target], value_type: str, mtype, colname: str
-    ) -> DataFrame:
-        """Per-device array of top-level targets (metrics get their type)."""
-        if not targets:
-            if value_type == "double":
-                schema = (
-                    "device_id string, "
-                    f"{colname} array<struct<metric_name:string,"
-                    "metric_value:double,metric_type:string,"
-                    "metric_creation_timestamp:double>>"
-                )
-            else:
-                schema = (
-                    "device_id string, "
-                    f"{colname} array<struct<dimension_name:string,"
-                    "dimension_value:string>>"
-                )
-            return self.spark.createDataFrame([], schema)
-        dfs = []
-        for t in targets:
-            v = self._top_level_value(t)
-            if value_type == "double":
-                row = F.struct(
-                    F.lit(t.name).alias("metric_name"),
-                    F.col("value").cast("double").alias("metric_value"),
-                    F.lit(mtype[t.name]).alias("metric_type"),
-                    F.lit(0.0).alias("metric_creation_timestamp"),
-                )
-            else:
-                row = F.struct(
-                    F.lit(t.name).alias("dimension_name"),
-                    F.col("value").cast("string").alias("dimension_value"),
-                )
-            dfs.append(v.select("device_id", row.alias("entry")))
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        # sorted: entry structs lead with the name field, so array_sort
-        # yields a deterministic order where collect_list alone follows
-        # task scheduling — dropDuplicates set-collapse needs stability
-        return out.groupBy("device_id").agg(
-            F.array_sort(F.collect_list("entry")).alias(colname)
-        )
+    # -- program assembly -------------------------------------------------
 
     def float_typed_metrics(self) -> frozenset:
         """Metric names the program declares ``type: float`` — the set
@@ -1239,29 +927,204 @@ class MetricDSLCompiler:
         )
 
     def compile(self) -> DataFrame:
-        """All metrics_groups unioned, canonical array order applied."""
-        outs = [
-            self.compile_group(g).withColumn("__gpos", F.lit(i))
-            for i, g in enumerate(self.program["metrics_groups"])
+        """All metrics_groups in ONE pass over :func:`wide`, canonical
+        array order applied: (device_id, metrics_group_type,
+        metrics_group_interval, metrics, dimensions).
+
+        Every row (device, index) projects, for each program group, the
+        indexed group it carries and — on the device's one ``__first``
+        row — the group's top-level-only group; the rows explode and
+        collapse under the reference's set semantics. Scalars, membership
+        key sets, top-level aggregates and the v0.2 "device has an
+        indexed group" test are device_id windows over the frame's own
+        partitioning, so the plan adds no join and no exchange beyond the
+        frame's one. Targets outside that shape (:func:`_in_frame`)
+        compile through the join fabric and ride into the frame as
+        pseudo tables: indexed ones as walk cells, top-level ones as
+        per-device scalars."""
+        groups = [
+            (g, [self._compile_target(n, tm, True)
+                 for n, tm in g["metrics"].items()]
+             + [self._compile_target(n, tm, False)
+                for n, tm in g["dimensions"].items()])
+            for g in self.program["metrics_groups"]
         ]
-        df = outs[0]
-        for o in outs[1:]:
-            df = df.unionByName(o)
-        # canonical order for deterministic comparison
-        df = df.withColumn(
-            "metrics",
+        targets = [t for _, ts in groups for t in ts]
+        frame = set()
+        for k, t in enumerate(targets):
+            if t.mode == "sql" and not t.indexed and not t.info.is_aggregate:
+                per_index = sorted(
+                    (t.info.tables - self.scalar_oids)
+                    | {tbl for tbl, _ in t.info.member_tables}
+                )
+                if per_index or t.info.uses_index:
+                    raise UnsupportedExpression(
+                        f"top-level target {t.name!r} references per-index "
+                        f"table {(per_index or ['$index'])[0]!r} without "
+                        "$index"
+                    )
+            if self._in_frame(t):
+                frame.add(k)
+                continue
+            if t.indexed:
+                rows, into = self._indexed_values(t), self._fallback_walks
+            else:
+                rows = self._top_level_fallback(t).withColumn(
+                    "index", F.lit(None).cast("string")
+                )
+                into = self._fallback_scalars
+            into[f"__fb{k}"] = rows.select(
+                "device_id", F.lit(f"__fb{k}").alias("table_name"), "index",
+                F.col("value").cast("string"),
+            )
+
+        d = Window.partitionBy("device_id")
+        pivot = set(self._pivotable())
+        used = [targets[k].info for k in frame]
+        w = self.wide().withColumns({
+            **{
+                table_col(tbl): self._static_value_col(tbl)
+                for tbl in sorted({x for i in used for x in i.tables})
+                if self.oids_spec[tbl]["method"] == "static"
+            },
+            **{
+                f"__keys_{tbl}": F.collect_set(F.when(
+                    F.col(table_col(tbl)).isNotNull(), F.col("index")
+                )).over(d)
+                for tbl in sorted({x for i in used for x, _ in i.member_tables})
+                if tbl in pivot
+            },
+        })
+        w = w.withColumns({
+            f"__r{k}": F.expr(self._raw_sql(targets[k])) for k in sorted(frame)
+        })
+        kinds = {}
+        for k in frame:
+            t = targets[k]
+            if not t.indexed:
+                kinds[k] = "numeric" if t.info.is_aggregate else t.raw_kind
+        if None in kinds.values():
+            types = dict(w.dtypes)
+            kinds = {
+                k: v or {"boolean": "boolean", "string": "string"}.get(
+                    types[f"__r{k}"], "numeric"
+                )
+                for k, v in kinds.items()
+            }
+
+        def value(k: int, t: _Target) -> Column:
+            if k not in frame:  # pseudo table: already guarded/skipped
+                return F.col(table_col(f"__fb{k}"))
+            raw = F.col(f"__r{k}")
+            final = t.final_sql if t.info.is_aggregate else self._guarded_sql(t)
+            val = F.expr(self._frame_sql(final, t, __raw=f"__r{k}"))
+            if t.indexed:
+                return F.when(
+                    F.col(table_col(self._driving(t))).isNotNull(), val
+                )
+            # falsy skip on the RAW value (python `if not value:
+            # continue`), before cast/transform; NULL raw means an
+            # evaluated sub-expression raised
+            return F.when(raw.isNotNull() & _truthy(raw, kinds[k]), val)
+
+        arrays = {}
+        k = 0
+        for gi, (g, ts) in enumerate(groups):
+            m_idx, d_idx, m_top, d_top = [], [], [], []
+            for t in ts:
+                v = value(k, t)
+                k += 1
+                if t.is_metric:
+                    (m_idx if t.indexed else m_top).append(F.struct(
+                        F.lit(t.name).alias("metric_name"),
+                        v.cast("double").alias("metric_value"),
+                        F.lit(t.tmap["metric_type"]).alias("metric_type"),
+                        F.lit(0.0).alias("metric_creation_timestamp"),
+                    ))
+                else:
+                    (d_idx if t.indexed else d_top).append(F.struct(
+                        F.lit(t.name).alias("dimension_name"),
+                        v.cast("string").alias("dimension_value"),
+                    ))
+            arrays[f"_tm{gi}"] = _array(m_top, "metric_value", _EMPTY_M)
+            arrays[f"_td{gi}"] = _array(d_top, "dimension_value", _EMPTY_D)
+            if m_idx:
+                arrays[f"_m{gi}"] = _array(m_idx, "metric_value", _EMPTY_M)
+                arrays[f"_d{gi}"] = _array(d_idx, "dimension_value", _EMPTY_D)
+        w = w.withColumns(arrays)
+        v01 = self.schema_version == "0.1"
+        w = w.withColumns({
+            f"__h{gi}": F.max(F.size(f"_m{gi}") > 0).over(d)
+            for gi in range(len(groups))
+            if f"_m{gi}" in arrays and not v01
+        })
+
+        def group(gi: int, g: dict, metrics: Column, dims: Column) -> Column:
+            return F.struct(
+                F.lit(gi).alias("gpos"),
+                F.lit(g["group_name"]).alias("gname"),
+                metrics.alias("metrics"),
+                dims.alias("dimensions"),
+            )
+
+        emitted = []
+        for gi, (g, _) in enumerate(groups):
+            tm, td = F.col(f"_tm{gi}"), F.col(f"_td{gi}")
+            top = F.col("__first") & F.col("__listed")
+            if v01:
+                # v0.1: a separate top-level group per device with >=1
+                # top metric (:644-655), alongside any indexed groups
+                top = top & (F.size(tm) > 0)
+            if f"_m{gi}" in arrays:
+                # v0.2 assembly (:586-678): one group per (device, index)
+                # with >=1 indexed metric, top-level metrics merged INTO
+                # it (v0.1 keeps them apart); an empty dimension value
+                # is never added and suppresses the group unless
+                # ignore_empty_dimensions
+                m, dims = F.col(f"_m{gi}"), F.col(f"_d{gi}")
+                empty = F.exists(dims, lambda s: s["dimension_value"] == "")
+                emitted.append(F.when(
+                    (F.size(m) > 0)
+                    & ~(empty & F.lit(not g["ignore_empty_dimensions"])),
+                    group(
+                        gi, g, m if v01 else F.concat(m, tm),
+                        F.concat(F.filter(
+                            dims, lambda s: s["dimension_value"] != ""
+                        ), td),
+                    ),
+                ))
+                if not v01:
+                    # v0.2: only devices with no indexed metric get the
+                    # top-level-only group (reference else-branch)
+                    top = top & ~F.col(f"__h{gi}")
+            # the reference's fallback branch attaches top-level dims
+            # ONLY when top-level metrics exist (:661-668); a metric-less
+            # fallback group is fully empty
+            emitted.append(F.when(top, group(
+                gi, g, tm,
+                F.when(F.size(tm) > 0, td).otherwise(F.expr(_EMPTY_D)),
+            )))
+
+        df = w.select(
+            "device_id",
+            F.explode(
+                F.filter(F.array(*emitted), lambda x: x.isNotNull())
+            ).alias("g"),
+        ).select(
+            "device_id",
+            F.col("g.gname").alias("metrics_group_type"),
+            F.lit(self.interval).cast("long").alias("metrics_group_interval"),
             F.expr(
-                "array_sort(metrics, (a, b) -> CASE"
+                "array_sort(g.metrics, (a, b) -> CASE"
                 " WHEN a.metric_name < b.metric_name THEN -1"
                 " WHEN a.metric_name > b.metric_name THEN 1 ELSE 0 END)"
-            ),
-        ).withColumn(
-            "dimensions",
+            ).alias("metrics"),
             F.expr(
-                "array_sort(dimensions, (a, b) -> CASE"
+                "array_sort(g.dimensions, (a, b) -> CASE"
                 " WHEN a.dimension_name < b.dimension_name THEN -1"
                 " WHEN a.dimension_name > b.dimension_name THEN 1 ELSE 0 END)"
-            ),
+            ).alias("dimensions"),
+            F.col("g.gpos").alias("__gpos"),
         )
         # The reference accumulates groups into a python SET
         # (PanoptesMetricsGroupSet, framework/metrics.py:411-418) whose

@@ -13,8 +13,8 @@ the batch, instead of a per-device python loop. State (rate, dedup,
 reconcile) stays in the dedicated streaming operators; this pipeline is
 the stateless compile-and-emit stage.
 
-At scale: a micro-batch is partitioned by (device_id, index) through
-the compiler's one-pivot shuffle; the output sink projection
+At scale: a micro-batch is partitioned by device_id through the
+compiler's one exchange; the output sink projection
 (line-protocol or Kafka fan-out) is map-only on top of it.
 """
 
@@ -33,21 +33,18 @@ def compile_batch(
     program: dict,
     interval_sec: int = 60,
     schema_version: str = "0.2",
-) -> tuple[DataFrame, MetricDSLCompiler]:
+) -> DataFrame:
     """Compile one micro-batch of walk snapshots into metrics-group rows
     (the body of the foreachBatch callback, separated for testability).
-    Returns the output AND the compiler so the caller can
-    ``unpersist()`` its cached frames once the sink has consumed the
-    batch — without it, a long-running stream accumulates dead cached
-    blocks from old batches in executor storage."""
-    compiler = MetricDSLCompiler(
+    The plan persists nothing, so a finished batch leaves no cached
+    blocks behind."""
+    return MetricDSLCompiler(
         spark,
         program,
         batch_df,
         interval_sec=interval_sec,
         schema_version=schema_version,
-    )
-    return compiler.compile(), compiler
+    ).compile()
 
 
 def run_polling_stream(
@@ -69,17 +66,14 @@ def run_polling_stream(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        out, compiler = compile_batch(
-            spark, batch_df, program,
-            interval_sec=interval_sec,
-            schema_version=schema_version,
+        sink(
+            compile_batch(
+                spark, batch_df, program,
+                interval_sec=interval_sec,
+                schema_version=schema_version,
+            ),
+            batch_id,
         )
-        try:
-            sink(out, batch_id)
-        finally:
-            # bound executor-storage growth: the sink has consumed the
-            # batch, so this trigger's cached frames are dead
-            compiler.unpersist()
 
     writer = walk_stream.writeStream.foreachBatch(_process)
     if checkpoint_dir:

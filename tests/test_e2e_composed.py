@@ -214,7 +214,7 @@ def test_four_subsystem_composed_with_restart(spark, tmp_path):
     # ---- enrichment join + fan-out + influx lines -----------------------
     from panoptes_spark.streaming.polling_stream import compile_batch
 
-    groups2, _ = compile_batch(
+    groups2 = compile_batch(
         spark, spark.createDataFrame(WALK2, WALK_SCHEMA), PROGRAM
     )
     store_df = _read_store(spark, paths["store"])

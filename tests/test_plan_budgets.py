@@ -76,17 +76,21 @@ def test_shuffle_budget(spark_plans, name):
     )
 
 
-#: gate -> max DISTINCT Exchange nodes. The metric-compiler gates persist
-#: the program-wide pivot, and toString re-prints a cached subplan under
-#: every InMemoryTableScan that references it — raw line counts would
-#: charge the one pivot shuffle once per referencing target. Distinct
-#: exchange text = exchanges that actually execute.
+#: gate -> max DISTINCT Exchange nodes in the plan of a ``count()`` run
+#: after ``session.release`` — the state every benchmark op and bench.py
+#: gate runs in (a release drops every persist, so nothing cached may
+#: stand in for a subtree). Distinct exchange text = exchanges that
+#: actually execute. Each DSL gate compiles to one pass over its oid
+#: tables: their own (device_id, idx) aggregate, the compiler's one
+#: device_id exchange, and the count's final single-partition exchange.
 UNIQUE_BUDGETS = {
-    # r3: 23 raw exchanges; pivot-once + direct-projection fabric: 6
-    "dsl_metric_program": 8,
-    # r3: 40 raw exchanges; now 5 (pivot, union of 2 groups' assembly)
-    "p7_empty_dimension_policy": 6,
+    "dsl_metric_program": 3,
+    "p7_empty_dimension_policy": 3,
+    "s2_scalar_get_program": 3,
 }
+
+#: max Spark jobs of one post-release ``count()`` of each DSL gate
+DSL_JOB_BUDGET = 4
 
 
 def _unique_shuffles(plan: str) -> int:
@@ -98,13 +102,44 @@ def _unique_shuffles(plan: str) -> int:
     return len(uniq)
 
 
+def _released_count_plan(spark, name: str) -> str:
+    from panoptes_spark.session import release
+
+    df = entrymod.queries()[name](spark, SF)
+    release(spark)
+    return (
+        df.groupBy().count()._jdf.queryExecution().executedPlan().toString()
+    )
+
+
 @pytest.mark.parametrize("name", sorted(UNIQUE_BUDGETS))
 def test_unique_shuffle_budget(spark, name):
-    qs = entrymod.queries()
-    plan = qs[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
+    plan = _released_count_plan(spark, name)
     got = _unique_shuffles(plan)
     assert got <= UNIQUE_BUDGETS[name], (
         f"{name}: {got} distinct exchanges > budget {UNIQUE_BUDGETS[name]}"
+    )
+    scans = re.findall(r"FileScan parquet [^\n]*lineitem\.parquet", plan)
+    assert len(scans) == 1, f"{name}: {len(scans)} lineitem scans\n{plan}"
+
+
+@pytest.mark.parametrize("name", sorted(UNIQUE_BUDGETS))
+def test_dsl_gate_jobs_after_release(spark, name):
+    """A post-release ``count()`` runs the same jobs every time — no
+    cache to fill on one run and hit on the next — and few of them."""
+    from panoptes_spark.session import release, spark_jobs
+
+    qs = entrymod.queries()
+    jobs = []
+    for _ in range(3):
+        df = qs[name](spark, SF)
+        release(spark)
+        with spark_jobs(spark) as window:
+            df.count()
+        jobs.append(window["jobs"])
+    assert len(set(jobs)) == 1, f"{name}: jobs per run {jobs}"
+    assert jobs[0] <= DSL_JOB_BUDGET, (
+        f"{name}: {jobs[0]} jobs > budget {DSL_JOB_BUDGET}"
     )
 
 
