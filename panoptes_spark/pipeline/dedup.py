@@ -24,8 +24,6 @@ skewed buckets (boilerplate docs), cap bucket size before the pair join.
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -33,7 +31,7 @@ from pyspark.sql import functions as F
 MINHASH_PRIME = 2147483647  # 2^31 - 1
 
 
-def spread_for_compute(df: DataFrame, min_factor: int = 1) -> DataFrame:
+def spread_for_compute(df: DataFrame) -> DataFrame:
     """Repartition a scan whose split count is below the session's
     parallelism BEFORE an expensive per-row expression. Parquet's split
     unit is the ROW GROUP: a file written as one giant row group scans
@@ -51,8 +49,7 @@ def spread_for_compute(df: DataFrame, min_factor: int = 1) -> DataFrame:
     (micro-batch sizing is the stream's concern)."""
     if df.isStreaming or df.is_cached:
         return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * int(min_factor)
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
@@ -94,52 +91,18 @@ def persist_registered(df: DataFrame) -> DataFrame:
     """LAZY registered persist: the cache fills on the first consuming
     action (no eager count job), later consumers read the blocks, and
     ``release_materialized`` still drops them. For frames whose
-    consumers are SEQUENTIAL driver-side actions (the iterative
-    trainers' per-round centroid/codebook tables: each round's collect
-    or write is one action at a time), where ``materialize_once``'s
-    eager count would only add a job — the concurrent-leaf race it
-    exists to close cannot happen between sequential actions, and the
-    worst case under a future concurrent consumer is one duplicated
-    (cheap) fill, never a wrong answer."""
+    consumers are SEQUENTIAL driver-side actions (the PQ trainer's
+    per-round codebook tables: each round's collect or write is one
+    action at a time), where ``materialize_once``'s eager count would
+    only add a job — the concurrent-leaf race it exists to close cannot
+    happen between sequential actions, and the worst case under a future
+    concurrent consumer is one duplicated (cheap) fill, never a wrong
+    answer."""
     if df.is_cached:
         return df
     df = df.persist()
     _MATERIALIZED.append(df)
     return df
-
-
-#: a shuffle in an executed-plan string; a BroadcastExchange is not one
-_SHUFFLE_IN_PLAN = re.compile(
-    r"ShuffleExchange|ShuffleQueryStage|Exchange (?:hashpartitioning|"
-    r"rangepartitioning|SinglePartition|RoundRobin)"
-)
-
-
-def source_is_wide(source: DataFrame) -> bool:
-    """True when ``source``'s scan has at least the session's default
-    parallelism worth of splits — the same input-derived signal
-    ``spread_for_compute`` keys on, inverted: wide input means one
-    recomputed pass over it costs real cluster time, so derived
-    dim-tables are worth pinning; a narrow input (the bench corpora
-    ship one row group) recomputes faster than any persist round trip
-    (paired A/B at sf0.1: none 2.39s / persist 3.26s / localCheckpoint
-    3.57s / driver-collect 4.74s for the same 2-round Lloyd)."""
-    if source.isStreaming:
-        return False
-    sc = source.sparkSession.sparkContext
-    try:
-        # Shuffle-bearing (derived) frames: with AQE, converting to an
-        # RDD materializes upstream query stages — the probe would
-        # itself run jobs. A derived lineage containing a shuffle is
-        # expensive to recompute by definition, so answer True without
-        # touching the RDD; other plans (scans, broadcast joins of
-        # scans) fall through to the split count.
-        plan = source._jdf.queryExecution().executedPlan().toString()
-        if _SHUFFLE_IN_PLAN.search(plan):
-            return True
-        return source.rdd.getNumPartitions() >= sc.defaultParallelism
-    except Exception:
-        return True
 
 
 def release_materialized() -> int:

@@ -56,33 +56,19 @@ def train_bigram_lm(
     """Returns (unigram_counts(prev, cu), bigram_counts(prev, cur, cb),
     vocab_size — a 1-row DataFrame (v)). Unigram counts are the
     CONTEXT counts (how often ``prev`` opens a bigram), which is what
-    the conditional denominator needs."""
-    from .dedup import source_is_wide
-
+    the conditional denominator needs. All three are lazy plans over
+    ``corpus``; nothing is persisted."""
     bg = _doc_bigrams(corpus, text_col, id_col)
     bigrams = bg.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("cb"))
     unigrams = bigrams.groupBy("prev").agg(F.sum("cb").alias("cu"))
-    if source_is_wide(corpus):
-        # wide input (r11): the vocabulary is the distinct prev∪cur of
-        # the bigram PAIRS (every token occurs in some bigram: reals as
-        # `cur`, <s> as `prev`), so counting distinct over the
-        # vocab²-bounded dim table equals counting over the exploded
-        # instances — and its lineage reuses the bigram aggregation's
-        # shuffle instead of replaying the tokenize+explode as the two
-        # union arms below do (subtrees ReusedExchange cannot dedup =
-        # two extra corpus passes per trained model). Lazy, no persist.
-        vocab = bigrams.select(
-            F.explode(F.array(F.col("prev"), F.col("cur"))).alias("w")
-        ).agg(F.count_distinct("w").alias("v"))
-    else:
-        # narrow (bench-layout) input: the union-arm scans are cheaper
-        # than surfacing the extra reused-exchange query stage (paired
-        # profile at sf0.1: +1 job, +0.1-0.3 s); same value either way
-        vocab = (
-            bg.select(F.col("cur").alias("w"))
-            .union(bg.select(F.col("prev")))
-            .agg(F.count_distinct("w").alias("v"))
-        )
+    # distinct tokens over two union arms of the exploded grams; the
+    # same count over the bigram PAIR table costs one more query stage
+    # (paired profile at sf0.1: +1 job, +0.1-0.3 s)
+    vocab = (
+        bg.select(F.col("cur").alias("w"))
+        .union(bg.select(F.col("prev")))
+        .agg(F.count_distinct("w").alias("v"))
+    )
     return unigrams, bigrams, vocab
 
 

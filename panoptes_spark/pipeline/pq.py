@@ -185,13 +185,12 @@ def pq_train_kmeans(
     (m · n_codes) rows — a dim table by parameter — but as an
     unpersisted plan every downstream collect (``pq_encode`` and
     ``pq_adc_topk`` each do one via ``_codebook_tensor``) re-runs the
-    whole training round from the corpus scan. Unlike
-    ``kmeans_refine`` (whose trained centroids are collected ONCE by
-    the broadcast top-k path, making recompute-vs-persist a wash at
-    bench SF), trained codebooks always have ≥ 2 collecting consumers,
-    and the paired A/B inside ``pq_recall_trained`` measured the
-    persist 1.0 s faster even on the one-row-group sf0.1 corpus
-    (4.42 → 3.44 s median) — so it is unconditional here.
+    whole training round from the corpus scan. Trained codebooks always
+    have ≥ 2 collecting consumers, and the paired A/B inside
+    ``pq_recall_trained`` measured the persist 1.0 s faster on the
+    one-row-group sf0.1 corpus (4.42 → 3.44 s median). The IVF
+    centroids of ``kmeans_refine`` stay unpersisted instead: there the
+    recompute measured cheaper than the persist.
     """
     from .dedup import persist_registered
 

@@ -295,22 +295,14 @@ def kmeans_refine(
     partition. Cells left empty by an iteration keep their previous
     centroid (Lloyd convention).
 
-    Each iteration's result is a registered LAZY persist when the
-    corpus scan is WIDE (r11): the centroid table is dim-sized by
-    construction (|cells| rows), but as an unpersisted plan every
-    downstream ``centroids.collect()`` — and ``ivf_assign`` does one
-    per call — re-runs the whole Lloyd chain from the corpus scan up:
-    ``ivf_topk`` over trained cells pays the full training twice more
-    (its two assignment passes). On a wide corpus each avoided pass is
-    real cluster time; on a narrow one (the bench tables ship one row
-    group) the recompute is cheaper than any materialization round
-    trip (paired A/B at sf0.1: unpersisted 2.39s vs persist 3.26s vs
-    driver-collect 4.74s), so ``source_is_wide`` keys the persist on
-    the input's own split count — the ``spread_for_compute`` signal.
+    The result is one lazy, unpersisted plan chained over the rounds.
+    Each round's ``ivf_assign`` collects the previous round's centroids
+    (|cells| rows), so round r replays the r-1 earlier rounds from the
+    corpus scan. At the small fixed iteration counts used here (1-2)
+    that recompute measured cheaper than pinning each round (paired A/B
+    at sf0.1: unpersisted 2.39 s vs persist 3.26 s vs driver-collect
+    4.74 s).
     """
-    from .dedup import persist_registered, source_is_wide
-
-    wide = source_is_wide(corpus)
     cents = centroids
     for _ in range(int(iters)):
         assigned = ivf_assign(corpus, cents, id_col, vec_col, nprobe=1)
@@ -338,7 +330,7 @@ def kmeans_refine(
                 lambda s: s.m,
             ).alias("new_centroid")
         )
-        nxt = (
+        cents = (
             cents.select(
                 "cell_id",
                 F.transform(
@@ -351,7 +343,6 @@ def kmeans_refine(
                 F.coalesce("new_centroid", "centroid").alias("centroid"),
             )
         )
-        cents = persist_registered(nxt) if wide else nxt
     return cents
 
 

@@ -149,7 +149,6 @@ def grouped_quantile(
     key_cols: list[str],
     value_col: str,
     p: float = 0.5,
-    wide: bool = False,
 ) -> DataFrame:
     """Exact per-group type-1 quantile of an integer-valued column —
     ``global_quantiles``' histogram-fold recipe, grouped: one keyed
@@ -162,21 +161,11 @@ def grouped_quantile(
     distinct) can collect tens of millions of structs on one executor
     for a dominant group (r10 ADVICE).
 
-    ``wide=True`` is the score-domain path: a TWO-PHASE fold with the
-    same exact answer. Phase 1 collapses values to 65536-wide coarse
-    buckets (``value >> 16``, arithmetic shift so negatives bucket
-    correctly) and folds the bucket histogram to find the bucket
-    containing the target rank plus the cumulative count below it;
-    phase 2 folds ONLY that bucket's values with the residual rank.
-    Per-group array sizes: |distinct|/65536 structs in phase 1 and at
-    most 65536 in phase 2 — both executor-bounded at any distinct
-    count, for one extra keyed shuffle and a broadcast join.
+    Score-like domains take ``grouped_quantiles_wide`` instead.
 
     Returns key cols + (q bigint, n bigint)."""
     if not key_cols:
         raise ValueError("grouped_quantile requires key columns")
-    if wide:
-        return _grouped_quantile_wide(df, key_cols, value_col, p)
     if not 0 < p <= 1:
         raise ValueError(f"quantile must lie in (0, 1]: {p}")
     hist = df.groupBy(
@@ -198,28 +187,24 @@ def grouped_quantile(
     return one.select(*key_cols, F.expr(fold).alias("q"), "n")
 
 
-def _grouped_quantile_wide(
-    df: DataFrame, key_cols: list[str], value_col: str, p: float
-) -> DataFrame:
-    """Two-phase exact type-1 quantile for wide (score-like) integer
-    domains — see ``grouped_quantile(wide=True)``. Single-p facade over
-    :func:`grouped_quantiles_wide` (one shared implementation; the
-    multi-p form exists because callers like ``perplexity_buckets``
-    need two cuts of the SAME distribution and paying the histogram
-    pass per cut doubled the gate, r11)."""
-    out = grouped_quantiles_wide(df, key_cols, value_col, {"q": p})
-    return out.select(*key_cols, F.col("q_q").alias("q"), "n")
-
-
 def grouped_quantiles_wide(
     df: DataFrame,
     key_cols: list[str],
     value_col: str,
     ps: dict[str, float],
 ) -> DataFrame:
-    """Several exact per-group type-1 quantiles of a wide integer
-    domain in ONE histogram pass — the multi-p twin of
-    ``grouped_quantile(wide=True)``, with identical per-p answers.
+    """Several exact per-group type-1 quantiles of a wide (score-like)
+    integer domain in ONE histogram pass, with the same answers as
+    ``grouped_quantile`` at each p.
+
+    A TWO-PHASE fold bounds the per-group arrays. Phase 1 collapses
+    values to 65536-wide coarse buckets (``value >> 16``, arithmetic
+    shift so negatives bucket correctly) and folds the bucket histogram
+    to find the bucket containing the target rank plus the cumulative
+    count below it; phase 2 folds ONLY that bucket's values with the
+    residual rank. Per-group arrays hold |distinct|/65536 structs in
+    phase 1 and at most 65536 in phase 2 — executor-bounded at any
+    distinct count, for one extra keyed shuffle and a broadcast join.
 
     The distinct-value histogram (the only data-sized relation) is
     built once and ``materialize_once``'d: it feeds the coarse-bucket
@@ -229,9 +214,6 @@ def grouped_quantiles_wide(
     removes). All requested quantiles fold over the same coarse array
     in one projection, are unpivoted with ``stack``, and share one
     broadcast join back onto the histogram.
-
-    Per-group array bounds match the single-p path: |distinct|/65536
-    structs in phase 1, ≤ 65536 in phase 2.
 
     Returns key cols + one ``q_<label>`` bigint column per ``ps`` entry
     + ``n``. Labels must be SQL-identifier-safe."""

@@ -1624,6 +1624,16 @@ def test_materialize_once_composition_aware(spark):
     assert not m1.is_cached
 
 
+def test_spread_for_compute_skips_well_split_input(spark):
+    """Input with at least the session's parallelism in splits keeps its
+    layout; a narrower input is round-robin spread to it."""
+    n = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 100, 1, n)
+    assert dedup.spread_for_compute(wide) is wide
+    spread = dedup.spread_for_compute(spark.range(0, 100, 1, 1))
+    assert spread.rdd.getNumPartitions() == n
+
+
 def test_index_build_validates_corpus(spark, tmp_path):
     """An empty corpus is a clear error, and a corpus smaller than the
     requested n_codes records the ACTUAL trained codebook size in the
@@ -2375,14 +2385,18 @@ def test_compaction_cadence_survives_restart(spark, tmp_path, sf_dir):
     assert len(IvfPqIndex(spark, path).segments()) == 1
 
 
-def test_grouped_quantile_wide_parity(spark):
-    """wide=True (two-phase coarse-bucket fold for score-like domains)
-    returns the identical type-1 quantile as the one-phase fold —
-    negatives, heavy tie groups, and tiny domains included — while
-    bounding per-group array sizes (r10 ADVICE on perplexity_buckets)."""
+def test_grouped_quantiles_wide_parity(spark):
+    """grouped_quantiles_wide (two-phase coarse-bucket fold for
+    score-like domains) returns the identical type-1 quantile as the
+    one-phase grouped_quantile fold — negatives, heavy tie groups, and
+    tiny domains included — while bounding per-group array sizes (r10
+    ADVICE on perplexity_buckets)."""
     import random
 
-    from panoptes_spark.pipeline.stats import grouped_quantile
+    from panoptes_spark.pipeline.stats import (
+        grouped_quantile,
+        grouped_quantiles_wide,
+    )
 
     random.seed(7)
     rows = [
@@ -2401,9 +2415,9 @@ def test_grouped_quantile_wide_parity(spark):
             b = sorted(
                 map(
                     tuple,
-                    grouped_quantile(
-                        frame, ["src"], "v", p, wide=True
-                    ).collect(),
+                    grouped_quantiles_wide(frame, ["src"], "v", {"q": p})
+                    .select("src", "q_q", "n")
+                    .collect(),
                 )
             )
             assert a == b, (p, a, b)

@@ -49,6 +49,10 @@ BUDGETS = {
     "ann_ivfpq_topk": 3,
     # LSH: (band, code) equi-join + top-k window
     "ann_lsh_topk": 2,
+    # one unpersisted plan shape per trainer: the LM's bigram/unigram
+    # counts + union-arm vocab + per-doc scoring, and two Lloyd rounds
+    "lm_perplexity": 6,
+    "ann_kmeans_refine": 4,
 }
 
 

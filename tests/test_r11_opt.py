@@ -91,10 +91,7 @@ def test_ivf_assign_keep_cols_passthrough(spark, sf_dir):
 def test_grouped_quantiles_wide_multi_matches_single(spark):
     """One multi-p histogram pass must equal independent per-p wide
     calls (values spanning several coarse buckets and negatives)."""
-    from panoptes_spark.pipeline.stats import (
-        grouped_quantile,
-        grouped_quantiles_wide,
-    )
+    from panoptes_spark.pipeline.stats import grouped_quantiles_wide
 
     data = [("a", v) for v in [5, 70000, 131072, -70000, 3, 9] * 3] + [
         ("b", v) for v in range(-5, 40)
@@ -108,30 +105,15 @@ def test_grouped_quantiles_wide_multi_matches_single(spark):
     }
     for label, p in (("lo", 1 / 3), ("hi", 2 / 3), ("med", 0.5)):
         single = {
-            r["src"]: (r["q"], r["n"])
-            for r in grouped_quantile(
-                frame, ["src"], "v", p, wide=True
+            r["src"]: (r["q_q"], r["n"])
+            for r in grouped_quantiles_wide(
+                frame, ["src"], "v", {"q": p}
             ).collect()
         }
         assert set(single) == set(multi)
         for src, (q, n) in single.items():
             assert multi[src][f"q_{label}"] == q, (label, src)
             assert multi[src]["n"] == n
-
-
-def test_lm_vocab_from_bigrams_matches_union(spark, sf_dir):
-    """train_bigram_lm's wide-input vocab (distinct prev∪cur of the
-    bigram PAIR table) must equal the narrow-input union-arm count over
-    instances — same value, one fewer corpus pass."""
-    from panoptes_spark.pipeline.lm import train_bigram_lm
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sc = spark.sparkContext
-    wide = docs.repartition(sc.defaultParallelism)
-    narrow = docs.coalesce(1)
-    v_wide = train_bigram_lm(wide)[2].collect()[0][0]
-    v_narrow = train_bigram_lm(narrow)[2].collect()[0][0]
-    assert v_wide == v_narrow and v_wide > 0
 
 
 def test_dsir_target_pred_equals_target_frame(spark, sf_dir):

@@ -1,7 +1,7 @@
 """Focused tests for the round-12 optimization changes: the byte-bounded
 two-step ivf_topk probe must route to the identical plans (broadcast when
 the set fits, cogroup when it doesn't) with bounded driver collects, and
-source_is_wide must not run jobs on shuffle-bearing inputs."""
+the trainers keep one unpersisted plan shape on shuffle-bearing inputs."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -59,25 +59,28 @@ def test_ivf_topk_byte_budget_forces_cogroup(spark, sf_dir, monkeypatch):
     assert fallback == base and len(base) > 0
 
 
-def test_source_is_wide_true_for_derived_frames(spark, sf_dir):
-    """A shuffle-bearing frame answers wide (recompute is expensive)
-    without materializing its query stages."""
-    from panoptes_spark.pipeline.dedup import source_is_wide
+def test_trainers_one_shape_on_shuffled_corpus(spark, sf_dir):
+    """A shuffle-bearing corpus trains the same centroids and LM vocab
+    as the raw read, and registers no persist."""
+    from panoptes_spark.pipeline import dedup, similarity
+    from panoptes_spark.pipeline.lm import train_bigram_lm
 
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    derived = docs.groupBy("source").agg(F.count("*").alias("n"))
-    assert source_is_wide(derived) is True
-    # plain narrow scan still answers by split count (bench layout: one
-    # row group -> narrow)
-    assert source_is_wide(docs.coalesce(1)) is False
-    # a broadcast exchange is not a shuffle: a narrow scan broadcast-
-    # joined to a small frame is still narrow
-    small = docs.where(F.col("doc_id") % 7 == 0).select("doc_id")
-    joined = docs.coalesce(1).join(F.broadcast(small), "doc_id")
-    assert "BroadcastExchange" in (
-        joined._jdf.queryExecution().executedPlan().toString()
-    )
-    assert source_is_wide(joined) is False
+    seeds = similarity.seed_centroids(emb, n_cells=8)
+    dedup.release_materialized()
+
+    def cents(corpus):
+        rows = similarity.kmeans_refine(corpus, seeds, iters=1).collect()
+        return sorted((r.cell_id, tuple(r.centroid)) for r in rows)
+
+    assert cents(emb.repartition(7)) == cents(emb)
+    vocab = [
+        train_bigram_lm(d)[2].collect()[0][0]
+        for d in (docs.repartition(7), docs)
+    ]
+    assert vocab[0] == vocab[1] > 0
+    assert dedup._MATERIALIZED == []
 
 
 def _churn_batches(spark):
