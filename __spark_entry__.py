@@ -3715,43 +3715,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "p5_wire_validation": _p5_wire_validation,
             "s9_kafka_fanout": _s9_kafka_fanout,
             "s2_scalar_get_program": _s2_scalar_get_program,
-            # r7: composed telemetry end-state (newest — leads the
-            # family after the newest-first reversal)
+            # r7: composed telemetry end-state
             "telemetry_e2e": _telemetry_e2e,
         }
     )
     from panoptes_spark.pipeline.gate_queries import QUERIES as _PIPE_QUERIES
 
-    # Interleave the two gate families (panoptes-twin vs LLM-pipeline) so a
-    # driver that samples only a PREFIX of this dict still exercises both —
-    # round 3's driver sampled the first 50 entries and missed the pipeline
-    # family entirely because it was appended last. Within each family the
-    # order is NEWEST FIRST (r5 verdict: gates append last in source, so the
-    # driver's prefix sample never reached exactly the code most likely to
-    # be wrong — the current round's additions).
-    out = _interleave(_newest_first(_PIPE_QUERIES), _newest_first(out))
-
-    # r10 (VERDICT r9 #1/directive 2): order the non-priority remainder
-    # by LAST-DRIVER-SAMPLED ROUND ASCENDING, computed from the committed
-    # CORRECTNESS_r*.json artifacts themselves — the r8 fixed-step offset
-    # rotation (17 slots/round over a ~135-entry list through a ~32-slot
-    # prefix window) needed ~8 rounds for a full cycle, leaving 65 gates
-    # >3 rounds without a CORRECTNESS row by round 9. With
-    # staleness-ascending ordering the driver's 50-entry prefix always
-    # holds the stalest gates, so every gate is re-sampled within
-    # ceil(n_gates / 50) rounds of its last row — the best achievable
-    # cadence at the driver's sample size. Never-sampled gates sort
-    # first (round 0); ties break by name for determinism.
-    head = [n for n in _DRIVER_PRIORITY if n in out]
-    last = _last_sampled_rounds()
-    rest = sorted(
-        ((k, v) for k, v in out.items() if k not in set(head)),
-        key=lambda kv: (last.get(kv[0], 0), kv[0]),
-    )
-    out = {
-        **{n: out[n] for n in head},
-        **dict(rest),
-    }
+    out = _driver_order({**_PIPE_QUERIES, **out})
 
     from panoptes_spark.session import tune_runtime
 
@@ -3768,7 +3738,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 #: SEMANTICS changed this round lead the dict so the driver's prefix
 #: sample always covers the code most likely to be wrong. Kept SHORT on
 #: purpose: every head slot displaces one stale gate from the 50-entry
-#: prefix, and the staleness-ascending ordering above is what bounds
+#: prefix, and ``_driver_order``'s staleness-ascending order bounds
 #: every older gate's re-sample cadence. (Refactor-only surfaces whose
 #: gates produce byte-identical canon — materialize swaps, artifact
 #: sharing — are covered by the full local sweep and rotate normally.)
@@ -3815,23 +3785,23 @@ def _last_sampled_rounds() -> dict[str, int]:
     return out
 
 
-def _newest_first(d: dict) -> dict:
-    """Reverse a gate-family dict: source order appends new gates last, so
-    reversing puts the most recently added gates at the head — the prefix a
-    sampling driver actually reads."""
-    return dict(reversed(list(d.items())))
-
-
-def _interleave(first: dict, second: dict) -> dict:
-    """Round-robin merge of two ordered dicts, leading with ``first`` —
-    any prefix of the result holds a ~50/50 mix of both families."""
-    a, b = list(first.items()), list(second.items())
-    merged: dict = {}
-    for i in range(max(len(a), len(b))):
-        for src in (a, b):
-            if i < len(src):
-                merged[src[i][0]] = src[i][1]
-    return merged
+def _driver_order(d: dict) -> dict:
+    """Both gate families in driver-sample order: the
+    ``_DRIVER_PRIORITY`` head, then every other gate by LAST-DRIVER-
+    SAMPLED ROUND ASCENDING, computed from the committed
+    CORRECTNESS_r*.json artifacts themselves. The driver samples a
+    50-entry prefix, so staleness-ascending order puts the stalest gates
+    in it and every gate is re-sampled within ceil(n_gates / 50) rounds
+    of its last row, the best cadence at that sample size. Never-sampled
+    gates sort first (round 0); ties break by name, so the order is
+    total and does not depend on the order of ``d``."""
+    head = [n for n in _DRIVER_PRIORITY if n in d]
+    last = _last_sampled_rounds()
+    rest = sorted(
+        (n for n in d if n not in set(head)),
+        key=lambda n: (last.get(n, 0), n),
+    )
+    return {n: d[n] for n in head + rest}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -3905,6 +3875,6 @@ def oracle_sql() -> dict[str, str]:
     )
     from panoptes_spark.pipeline.gate_queries import ORACLES as _PIPE_ORACLES
 
-    # Same interleaved newest-first order as queries() so name <-> oracle
-    # pairing is positionally stable for any prefix-sampling driver.
-    return _interleave(_newest_first(_PIPE_ORACLES), _newest_first(out))
+    # same order as queries(), so name <-> oracle pairing is positionally
+    # stable for any prefix-sampling driver
+    return _driver_order({**_PIPE_ORACLES, **out})

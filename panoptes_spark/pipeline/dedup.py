@@ -55,23 +55,27 @@ def spread_for_compute(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-#: frames ``materialize_once`` persisted and never released — callers
-#: that finish a pipeline can drop them all with ``release_materialized``
-#: (repeated invocations in one session otherwise accumulate cached
-#: blocks until executor storage evicts them)
+#: frames ``materialize_once`` / ``persist_registered`` persisted and
+#: not yet released; ``release_materialized`` drops them all (a run of
+#: gates otherwise accumulates cached blocks until executor storage
+#: evicts them)
 _MATERIALIZED: list[DataFrame] = []
 
 
 def materialize_once(df: DataFrame) -> DataFrame:
-    """Persist AND eagerly fill the cache for a frame that feeds multiple
+    """Persist AND eagerly fill the cache for a frame that feeds several
     downstream branches. A lazy ``persist()`` is populated by the first
     stage that scans it — but independent LEAF stages of one job start
-    concurrently, and each recomputes the un-cached upstream expression
-    (the r7 sf1 soak measured the banded-simhash gate at ~2.5× its
-    signature cost from exactly this: four branches racing to compute the
-    60-bit fold). One count() action fills the cache before the fan-out;
-    its cost is the single materialization the plan needs anyway.
+    concurrently, and each recomputes the un-cached upstream (the r7 sf1
+    soak measured the banded-simhash gate at ~2.5× its signature cost
+    from exactly this: four branches racing to compute the 60-bit
+    fold). One count() action fills the cache before the fan-out.
     Default storage level (memory+disk) keeps it spill-safe.
+
+    The fill is one more Spark job while the gate is still being built,
+    so a call stays only where a paired A/B measured it cheaper than
+    the recompute it saves: SCALE.md's "Build-time persists" table
+    holds one row per call site, kept or deleted.
 
     Composition-aware (r8): a frame that is ALREADY cached is returned
     as-is after a (cheap, cache-served) fill action — re-persisting a
@@ -94,10 +98,8 @@ def persist_registered(df: DataFrame) -> DataFrame:
     consumers are SEQUENTIAL driver-side actions (the PQ trainer's
     per-round codebook tables: each round's collect or write is one
     action at a time), where ``materialize_once``'s eager count would
-    only add a job — the concurrent-leaf race it exists to close cannot
-    happen between sequential actions, and the worst case under a future
-    concurrent consumer is one duplicated (cheap) fill, never a wrong
-    answer."""
+    only add a job. Its one caller is kept by a measured crossover
+    (SCALE.md, "Build-time persists")."""
     if df.is_cached:
         return df
     df = df.persist()
@@ -106,9 +108,10 @@ def persist_registered(df: DataFrame) -> DataFrame:
 
 
 def release_materialized() -> int:
-    """Unpersist every frame ``materialize_once`` registered in this
-    session and return how many were released. Call after the consuming
-    actions complete (bench/gate harnesses call it between queries)."""
+    """Unpersist every frame ``materialize_once`` or
+    ``persist_registered`` registered in this session and return how
+    many were released. Call after the consuming actions complete
+    (``session.release`` calls it between gates)."""
     n = 0
     while _MATERIALIZED:
         _MATERIALIZED.pop().unpersist()
@@ -390,6 +393,7 @@ def minhash_dedup(
     The signature frame feeds both the candidate join and the verify join —
     persist it (eagerly: concurrent leaf stages would otherwise race to
     recompute the un-cached shingling) so hashing runs once."""
+    # kept: SCALE.md "Build-time persists", minhash_dedup
     sig = materialize_once(
         minhash_signature(df, text_col, k_shingle, num_hashes)
     )
@@ -410,6 +414,7 @@ def minhash_dedup_keep(
     """Survivors after near-dup collapse, with BOTH routes composed:
     verified pairs (normal buckets) drop the larger id; oversized buckets
     drop every member but the min-id representative."""
+    # kept: SCALE.md "Build-time persists", minhash_dedup_keep
     sig = materialize_once(
         minhash_signature(df, text_col, k_shingle, num_hashes)
     )
@@ -654,6 +659,7 @@ def hamming_band_pairs(
     # projection makes Catalyst inline the (expensive) fingerprint
     # expression into both the filter and the output — evaluated twice
     # per row; over the cache it's a free scan predicate
+    # kept: SCALE.md "Build-time persists", hamming_band_pairs
     hashed = materialize_once(df.select(id_col, hash_col)).where(
         F.col(hash_col).isNotNull()
     )
@@ -868,6 +874,7 @@ def winnow_pairs(
     is bounded by ``max_df``²; the join itself is a plain fp equi-join
     (no cartesian). The df-filter join and the pair self-join share the
     fp hash partitioning."""
+    # kept: SCALE.md "Build-time persists", winnow_pairs
     e = materialize_once(winnow_fingerprints(df, id_col, text_col, k, window))
     dfreq = e.groupBy("fp").agg(F.count("*").alias("__df"))
     kept = e.join(

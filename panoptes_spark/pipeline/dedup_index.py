@@ -71,6 +71,7 @@ def build_dedup_index(
     """
     spark = docs.sparkSession
     os.makedirs(path, exist_ok=True)
+    # kept: SCALE.md "Build-time persists", build_dedup_index
     sig = dedup.materialize_once(
         dedup.minhash_signature(docs, text_col, k_shingle, num_hashes)
     )
@@ -169,6 +170,7 @@ def update_dedup_index(
         )
 
     os.makedirs(path, exist_ok=True)
+    # kept: SCALE.md "Build-time persists", update_dedup_index
     sig_new = dedup.materialize_once(
         dedup.minhash_signature(new_docs, text_col, k_shingle, num_hashes)
     )
@@ -190,6 +192,7 @@ def update_dedup_index(
             ).drop("__bn")
         else:
             eligible = banded
+        # kept: SCALE.md "Build-time persists", update_dedup_index
         eligible = dedup.materialize_once(eligible)
 
         # candidate pairs with >= 1 new member (old-old candidacy is

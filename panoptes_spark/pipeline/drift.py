@@ -132,12 +132,11 @@ def embedding_drift(
     (cell, pos)-keyed conditional aggregate yields both mean vectors —
     the previous per-side subtrees ran two assignment passes, four
     eager materializations, and two mean shuffles for the same answer.
-    The count frame (cell-count-sized) still materializes before
-    fanning into the total/fraction subtrees (the crossJoin-broadcast
-    recompute rule)."""
+    The count frame feeds both the totals and the fractions unpersisted:
+    a paired A/B measured its eager fill slower than the recompute of
+    the cell-count-sized aggregate (SCALE.md, "Build-time persists")."""
     from pyspark.sql import functions as F
 
-    from .dedup import materialize_once
     from .similarity import ivf_assign, seed_centroids
 
     cents = seed_centroids(old, n_cells, id_col, vec_col)
@@ -148,11 +147,9 @@ def embedding_drift(
         both, cents, id_col, vec_col, nprobe=1, keep_cols=["__is_old"]
     ).select("cell_id", "__is_old", vec_col)
 
-    counts = materialize_once(
-        asg.groupBy("cell_id").agg(
-            F.count_if(F.col("__is_old")).alias("n_old"),
-            F.count_if(~F.col("__is_old")).alias("n_new"),
-        )
+    counts = asg.groupBy("cell_id").agg(
+        F.count_if(F.col("__is_old")).alias("n_old"),
+        F.count_if(~F.col("__is_old")).alias("n_new"),
     )
     totals = counts.agg(
         F.sum("n_old").alias("t_old"), F.sum("n_new").alias("t_new")

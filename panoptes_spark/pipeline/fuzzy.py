@@ -72,11 +72,13 @@ def fuzzy_join(
     # each side's signature feeds its banding AND the verify join —
     # materialize eagerly so the expensive shingle fold runs once per
     # side, not once per concurrent consumer stage
+    # kept: SCALE.md "Build-time persists", fuzzy_join
     lsig = materialize_once(
         minhash_signature(
             left.select(left_id, text_col), text_col, k_shingle, num_hashes
         )
     )
+    # kept: SCALE.md "Build-time persists", fuzzy_join
     rsig = materialize_once(
         minhash_signature(
             right.select(right_id, text_col), text_col, k_shingle, num_hashes

@@ -950,13 +950,8 @@ def q_ivf_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     and both IVF rankings."""
     emb = fx.read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 25 == 0)
-    # materialize_once, not a bare .persist(): registered persists are
-    # released by dedup.release_materialized() between driver/bench
-    # queries; a bare persist leaks cached blocks for the whole
-    # correctness-driver session (r9 ADVICE)
-    bf = dedup.materialize_once(
-        similarity.cosine_topk_bruteforce(emb, queries, k=_TOPK)
-        .select("query_id", "nbr_id")
+    bf = similarity.cosine_topk_bruteforce(emb, queries, k=_TOPK).select(
+        "query_id", "nbr_id"
     )
     seeds = similarity.seed_centroids(emb, n_cells=_IVF_CELLS)
     counts = []
@@ -1816,6 +1811,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _dedup_artifact(spark, sf_dir).pairs()
     # the splits dim feeds BOTH sides of the leakage join (split_a and
     # split_b) — materialize so the murmur3 chain runs once, not per side
+    # kept: SCALE.md "Build-time persists", split_leakage
     splits = dedup.materialize_once(
         assign_split(
             docs, "doc_id", salt="leak", fractions=_LEAK_FRACS
@@ -2327,13 +2323,8 @@ def q_pq_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-encodes, and re-ranks."""
     emb = fx.read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 25 == 0)
-    # materialize_once, not a bare .persist(): registered persists are
-    # released by dedup.release_materialized() between driver/bench
-    # queries; a bare persist leaks cached blocks for the whole
-    # correctness-driver session (r9 ADVICE)
-    bf = dedup.materialize_once(
-        similarity.cosine_topk_bruteforce(emb, queries, k=_TOPK)
-        .select("query_id", "nbr_id")
+    bf = similarity.cosine_topk_bruteforce(emb, queries, k=_TOPK).select(
+        "query_id", "nbr_id"
     )
     counts = []
     for label, cbs in (
@@ -2485,11 +2476,9 @@ def q_hybrid_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fx.read_table(spark, sf_dir, "documents")
     embs = fx.read_table(spark, sf_dir, "embeddings")
     kw = dict(k=_HYBRID_K, leg_k=_HYBRID_LEG_K, c=_HYBRID_C)
-    # the lexical leg is identical in both fused variants: compute its
-    # corpus scans once, persist the leg-k-sized result
-    lex = dedup.materialize_once(
-        bm25_multi_query(docs, _HYBRID_QUERIES, leg_k=_HYBRID_LEG_K)
-    )
+    # the lexical leg is identical in both fused variants: one plan
+    # serves both, unpersisted (SCALE.md, "Build-time persists")
+    lex = bm25_multi_query(docs, _HYBRID_QUERIES, leg_k=_HYBRID_LEG_K)
     brute = hybrid_search_rrf(
         docs, embs, _HYBRID_QUERIES, lex_leg=lex, **kw
     ).select("query_id", "doc_id")
@@ -2817,7 +2806,7 @@ def q_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(base):
         path_f = _os.path.join(base, "frozen")
         path_r = _os.path.join(base, "retrained")
-        corpus = dedup.materialize_once(_drifted_embeddings(spark, sf_dir))
+        corpus = _drifted_embeddings(spark, sf_dir)
         build_ivfpq_index(
             corpus.where(_RETRAIN_TRAIN_PRED), path_f, m=_PQ_M,
             n_codes=_PQ_CODES, n_cells=_IVF_CELLS,
@@ -2837,12 +2826,10 @@ def q_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     path_f, path_r = _artifact(
         spark, "ann_retrain", sf_dir, "embeddings", build
     )
-    corpus = dedup.materialize_once(_drifted_embeddings(spark, sf_dir))
+    corpus = _drifted_embeddings(spark, sf_dir)
     queries = corpus.where(F.col("vec_id") % 25 == 0)
-    bf = dedup.materialize_once(
-        similarity.cosine_topk_bruteforce(corpus, queries, k=_TOPK).select(
-            "query_id", "nbr_id"
-        )
+    bf = similarity.cosine_topk_bruteforce(corpus, queries, k=_TOPK).select(
+        "query_id", "nbr_id"
     )
     counts = []
     for label, path in (("frozen", path_f), ("retrained", path_r)):

@@ -164,18 +164,13 @@ def perplexity_buckets(
     """
     from .stats import grouped_quantiles_wide
 
-    from .dedup import materialize_once
-
     lo, hi = fracs
     src = docs.select(F.col(id_col), F.col(source_col))
     joined = scored.select(id_col, "avg_neg_logp").join(src, id_col)
     # exact micro-integer representation of the 6 dp-quantized score;
-    # materialized once — it feeds two quantile folds + the final map
-    us = materialize_once(
-        joined.withColumn(
-            "__us",
-            F.expr("cast(floor(avg_neg_logp * 1e6 + 0.5) as bigint)"),
-        )
+    # it feeds the quantile histogram and the final map unpersisted
+    us = joined.withColumn(
+        "__us", F.expr("cast(floor(avg_neg_logp * 1e6 + 0.5) as bigint)")
     )
     # wide path (r10 ADVICE): the micro-int score domain is ~1e7
     # distinct values, so the one-phase fold's per-source collected
@@ -184,8 +179,8 @@ def perplexity_buckets(
     # phases' arrays (|distinct|/65536, then <= 65536) with the same
     # exact answer. BOTH cuts come from ONE histogram pass
     # (grouped_quantiles_wide): two independent wide calls each rebuilt
-    # the distinct-score histogram from the cached frame twice (two
-    # consumers apiece), which tripled the gate (r11).
+    # the distinct-score histogram twice (two consumers apiece), which
+    # tripled the gate (r11).
     ts = grouped_quantiles_wide(
         us, [source_col], "__us", {"lo": lo, "hi": hi}
     ).select(

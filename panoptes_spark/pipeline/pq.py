@@ -234,6 +234,7 @@ def pq_train_kmeans(
                 F.coalesce("new_cv", "codevec").alias("codevec"),
             )
         )
+        # kept: SCALE.md "Build-time persists", pq_train_kmeans
         cbs = persist_registered(nxt)
     return cbs
 

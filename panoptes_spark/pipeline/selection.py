@@ -127,40 +127,31 @@ def dsir_logweights(
         )
     # gram-hash RAW exactly once (r11): the per-occurrence (id, bucket)
     # relation is materialized and serves BOTH the raw count model and
-    # the per-doc weight sum — previously those were independent plan
+    # the per-doc weight sum — unpersisted, those are independent plan
     # subtrees, each replaying the full tokenize + md5 explode over the
-    # corpus (the most expensive work here). The cached relation is two
-    # ints per gram occurrence, far cheaper than a second hashing pass
-    # at any scale. With ``target_pred`` the target counts fold from
-    # this same relation; with a ``target`` frame, the target hashes
-    # its own (sub)corpus once and its bucket-bounded counts
-    # materialize as before (each of tn/tc otherwise re-runs the
-    # target explode — sf3 spot soak).
+    # corpus (the most expensive work here). With ``target_pred`` the
+    # target counts fold from this same relation; with a ``target``
+    # frame, the target hashes its own (sub)corpus. The bucket-sized
+    # count tables stay unpersisted: each feeds one broadcast join and
+    # one 1-row total, and a paired A/B measured their eager fills
+    # slower than folding them twice (SCALE.md, "Build-time persists").
+    keep = []
     if target_pred is not None:
-        grams = spark_materialize(
-            doc_gram_buckets(
-                raw.withColumn("__is_target", F.expr(target_pred)),
-                id_col,
-                text_col,
-                buckets,
-                keep_cols=["__is_target"],
-            )
-        )
-        tc = spark_materialize(
+        raw = raw.withColumn("__is_target", F.expr(target_pred))
+        keep = ["__is_target"]
+    # kept: SCALE.md "Build-time persists", dsir_logweights grams
+    grams = spark_materialize(
+        doc_gram_buckets(raw, id_col, text_col, buckets, keep_cols=keep)
+    )
+    if target_pred is not None:
+        tc = (
             grams.where("__is_target")
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
     else:
-        grams = spark_materialize(
-            doc_gram_buckets(raw, id_col, text_col, buckets)
-        )
-        tc = spark_materialize(
-            fit_bucket_counts(target, id_col, text_col, buckets)
-        )
-    rc = spark_materialize(
-        grams.groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))
-    )
+        tc = fit_bucket_counts(target, id_col, text_col, buckets)
+    rc = grams.groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))
     tn = tc.agg(F.sum("cnt").alias("t_total"))
     rn = rc.agg(F.sum("cnt").alias("r_total"))
     term = (
@@ -300,11 +291,7 @@ def domain_mixture_weights(
     ``lm.score_documents``); everything here after the per-group
     partial-agg average operates on a DOMAIN-count-sized relation, and
     the min/normalizer are 1-row broadcasts."""
-    # materialize the domain-count-sized per-group table: the caller's
-    # doc_losses lineage is data-sized (the LM scorer's bigram join),
-    # and the min/softmax/normalizer crossJoins would re-evaluate it
-    # ~4× as independent plan subtrees (measured in the sf3 spot soak)
-    per = spark_materialize(
+    per = (
         doc_losses.join(docs.select(id_col, group_col), id_col)
         .groupBy(group_col)
         .agg(

@@ -206,19 +206,16 @@ def grouped_quantiles_wide(
     phase 1 and at most 65536 in phase 2 — executor-bounded at any
     distinct count, for one extra keyed shuffle and a broadcast join.
 
-    The distinct-value histogram (the only data-sized relation) is
-    built once and ``materialize_once``'d: it feeds the coarse-bucket
-    fold AND the fine per-bucket fold, and without the persist each
-    consumer would replay the full upstream (for LM scores that is the
-    whole corpus-scoring pass — the r11 regression this function
-    removes). All requested quantiles fold over the same coarse array
-    in one projection, are unpivoted with ``stack``, and share one
-    broadcast join back onto the histogram.
+    The distinct-value histogram (the only data-sized relation) is one
+    unpersisted aggregate feeding the coarse-bucket fold AND the fine
+    per-bucket fold; a paired A/B on ``perplexity_buckets`` measured an
+    eager fill of it slower than planning it twice (SCALE.md,
+    "Build-time persists"). All requested quantiles fold over the same
+    coarse array in one projection, are unpivoted with ``stack``, and
+    share one broadcast join back onto the histogram.
 
     Returns key cols + one ``q_<label>`` bigint column per ``ps`` entry
     + ``n``. Labels must be SQL-identifier-safe."""
-    from .dedup import materialize_once
-
     if not key_cols:
         raise ValueError("grouped_quantiles_wide requires key columns")
     if not ps:
@@ -227,7 +224,7 @@ def grouped_quantiles_wide(
         if not 0 < p <= 1:
             raise ValueError(f"quantile must lie in (0, 1]: {p}")
     labels = sorted(ps)
-    hist = materialize_once(
+    hist = (
         df.groupBy(*key_cols, F.col(value_col).cast("bigint").alias("__v"))
         .agg(F.count(F.lit(1)).alias("__c"))
         # arithmetic right shift = floor division by 2^16 for negatives

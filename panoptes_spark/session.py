@@ -80,10 +80,12 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
 
 
 def release(spark: SparkSession) -> None:
-    """Drop per-query persists so memory stays flat across a run of
-    gates: clearCache drops the blocks, release_materialized clears the
-    persist markers materialize_once registered (otherwise re-running a
-    gate logs 'already cached' and re-fills against cold storage)."""
+    """Drop what a gate left cached so memory stays flat across a run
+    of gates and the next gate builds against an empty cache.
+    ``release_materialized`` unpersists the few frames a gate build
+    still persists through ``dedup.materialize_once`` or
+    ``persist_registered`` (each call kept by a measured crossover in
+    SCALE.md); clearCache drops every other cached block."""
     from panoptes_spark.pipeline import dedup
 
     dedup.release_materialized()

@@ -1,9 +1,10 @@
 """bench.py's ``run_gate`` is the one loop that times a gate (the
 battery, the warm battery and tools/profile_gate.py run through it):
-it counts the same rows as a plain ``count()``, reads the same nonzero
-job count on every call, and leaves no persist behind. The job window
-it reads survives a status store that evicts stages. Every tool still
-imports after a helper moves."""
+it counts the same rows as a plain ``count()``, reads the job count of
+a fresh post-release run on every call, and leaves no persist behind.
+The job window it reads survives a status store that evicts stages.
+``queries()`` and ``oracle_sql()`` list the gates in one order. Every
+tool still imports after a helper moves."""
 
 import glob
 import importlib.util
@@ -16,24 +17,39 @@ import pytest
 import __spark_entry__ as entrymod
 import bench
 from panoptes_spark.pipeline import dedup
+from panoptes_spark.session import release, spark_jobs
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+#: a gate whose build persists a frame (dedup.materialize_once)
+PERSISTING_GATE = "dedup_winnow_pairs"
 
-@pytest.mark.parametrize("name", ["j1_enrichment_join", "p1_dsl_metadata_like"])
+
+@pytest.mark.parametrize(
+    "name", ["j1_enrichment_join", "p1_dsl_metadata_like", PERSISTING_GATE]
+)
 def test_run_gate_counts_jobs_and_releases(spark, sf_dir, name):
+    """Every run builds against an empty cache, so a gate that persists
+    reports the jobs of a fresh post-release build + ``count()``, not
+    those of a run that read an earlier run's blocks."""
     fn = entrymod.queries()[name]
     rows = fn(spark, sf_dir).count()
+    release(spark)
+    with spark_jobs(spark) as fresh:
+        fn(spark, sf_dir).count()
+    release(spark)
     cache = spark._jsparkSession.sharedState().cacheManager()
-    seen = []
     for _ in range(2):
         r = bench.run_gate(spark, fn, sf_dir)
         assert r["rows"] == rows
-        assert r["jobs"] > 0
+        assert r["jobs"] == fresh["jobs"] > 0
         assert not dedup._MATERIALIZED
         assert cache.isEmpty()
-        seen.append(r["jobs"])
-    assert seen[0] == seen[1], seen
+
+
+def test_oracles_in_query_order():
+    """The driver pairs gates with oracles by position in a prefix."""
+    assert list(entrymod.queries()) == list(entrymod.oracle_sql())
 
 
 # a job that reuses a shuffle skips its map stage; once the store is

@@ -27,6 +27,9 @@ _TESTPLUGIN = (
 )
 
 
+@pytest.mark.skipif(
+    not _EXAMPLE.is_file(), reason="reference plugin files not available"
+)
 def test_parses_reference_example_file():
     spec = load_plugin_config(_EXAMPLE.read_text())
     assert spec.name == "Device Interface Metrics Plugin"
@@ -40,6 +43,9 @@ def test_parses_reference_example_file():
     assert spec.normalized_name == "Device_Interface_Metrics_Plugin"
 
 
+@pytest.mark.skipif(
+    not _TESTPLUGIN.is_file(), reason="reference plugin files not available"
+)
 def test_parses_reference_test_plugin_and_extra_keys():
     spec = load_plugin_config(_TESTPLUGIN.read_text())
     assert spec.name == "Test Polling Plugin"

@@ -4,8 +4,8 @@ Usage: python tools/profile_gate.py <sf_dir>[,<sf_dir>...] <gate> [<gate> ...] [
        python tools/profile_gate.py <sf_dir> --plans-dir plans/r11 --suffix before <gate>...
 
 For each (scale factor, gate) pair: runs the gate through bench.py's
-``run_gate`` (best-of-N with ``count()`` as the action, one release
-after the N runs — the battery's own loop, so the numbers compare with
+``run_gate`` (best-of-N with ``count()`` as the action, a release
+after every run — the battery's own loop, so the numbers compare with
 BENCH_DETAIL.json) and reports seconds AND the Spark jobs of the best
 run (the fixed-overhead signal at small SF: a gate whose time is
 job-count-bound, not data-bound, needs fewer actions/passes, not faster
