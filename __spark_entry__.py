@@ -3,6 +3,8 @@
 ``entry(spark)`` — flagship query smoke check at sf0.001.
 ``queries()`` / ``oracle_sql()`` — per-operator Spark/DuckDB pairs, keyed by
 SURVEY.md §2 operator ids. The driver hash-compares both sides at sf0.01.
+Each gate is one ``(name, build, oracle)`` row, in ``_twin_gates`` below
+or in ``gate_queries.GATES``; both functions project the merged table.
 """
 
 from __future__ import annotations
@@ -19,19 +21,18 @@ from panoptes_spark.sources import tpch_fixtures as fx
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
+#: a gate's Spark build: (session, sf_dir) -> DataFrame
+Build = Callable[[SparkSession, str], DataFrame]
+#: one registry row: (name, Spark build, DuckDB oracle SQL)
+Gate = tuple[str, Build, str]
+
 # ---------------------------------------------------------------------------
-# DSL query corpus (FIXTURES.md §7 shapes, targeting the derived resources)
+# DSL query gates (FIXTURES.md §7 shapes, targeting the derived resources;
+# the four DSL texts are rows of ``_twin_gates``)
 # ---------------------------------------------------------------------------
 
-_DSL_QUERIES = {
-    "p1_dsl_field_filter": 'resource_class = "network" AND resource_subclass = "machinery"',
-    "p1_dsl_metadata_like": 'resource_metadata.make NOT LIKE "Arista%" AND resource_metadata.os_version LIKE "2%"',
-    "p1_dsl_in_or": 'resource_site NOT IN ("AFRICA", "EUROPE") OR resource_metadata.model IN ("model-3", "model-5")',
-    "p1_dsl_mixed": 'resource_type ne "generic" AND resource_metadata.os_version LIKE "4%" OR resource_class = "system"',
-}
 
-
-def _dsl_query(dsl: str) -> Callable[[SparkSession, str], DataFrame]:
+def _dsl_query(dsl: str) -> Build:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         rf = ResourceFilter(dsl)
         res = fx.resources(spark, sf_dir)
@@ -46,6 +47,10 @@ def _dsl_oracle(dsl: str) -> str:
         f"WITH {fx.RESOURCES_CTE} "
         f"SELECT * FROM resources_flat WHERE {rf.to_flat_sql()}"
     )
+
+
+def _dsl_gate(name: str, dsl: str) -> Gate:
+    return name, _dsl_query(dsl), _dsl_oracle(dsl)
 
 
 # ---------------------------------------------------------------------------
@@ -3648,90 +3653,128 @@ ORDER BY device_id, metric_name
 """
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        name: _dsl_query(dsl) for name, dsl in _DSL_QUERIES.items()
-    }
-    out.update(
-        {
-            "s6_store_scan_pushdown": _store_scan,
-            "p11_site_grouping": _site_grouping,
-            "j1_enrichment_join": _enrichment_join,
-            "s13_enrich_build": _enrich_build_query,
-            "j6_rate_batch": _rate_batch,
-            "a_pricing_summary": _pricing_summary,
-            "dsl_metric_program": _dsl_metric_program,
-            "j5_reconcile_plan": _reconcile_plan,
-            "j5_reconcile_apply": _reconcile_apply,
-            "j5_field_diff": _j5_field_diff,
-            "j1_interface_pipeline": _iface_query,
-            "a2_group_count": _a2_group_count,
-            "a4_status_rollup": _a4_status_rollup,
-            "a5_ping_stats": _a5_ping_stats,
-            "w3_ttl_upsert_expire": _w3_ttl_upsert,
-            "s5_namespace_scan": _s5_namespace_scan,
-            "p8_line_protocol": _p8_line_protocol,
-            "u1_groupset_union": _u1_groupset_union,
-            "u2_set_ops": _u2_set_ops,
-            "u3_multigroupset": _u_multigroupset,
-            "f_scalar_functions": _f_functions,
-            "w6_uniform_splay": _w6_uniform_splay,
-            "f14_ip_resolve": _f14_ip_resolve,
-            "p9_nested_roundtrip": _p9_nested_roundtrip,
-            "w_sessionize_events": _sessionize_events,
-            "p7_empty_dimension_policy": _p7_empty_dims,
-            "w_tumbling_window_agg": _w_tumbling_agg,
-            "j8_asof_align": _asof_align,
-            "j9_interval_join": _interval_contain,
-            "w5_scd2_history": _scd2_history,
-            "w7_moving_avg": _w_moving_avg,
-            "p12_pivot_wide": _p_pivot_wide,
-            "a9_retention_cohorts": _a_retention_cohorts,
-            "a10_shipping_priority": _olap_shipping_priority,
-            "a11_regional_volume": _olap_regional_volume,
-            "a12_rollup_totals": _olap_rollup,
-            "w8_rank_suite": _w8_rank_suite,
-            "a14_large_orders": _olap_large_orders,
-            "a15_returned_revenue": _olap_returned_revenue,
-            "a13_above_nation_avg": _olap_above_nation_avg,
-            "w9_resample_ffill": _w9_resample,
-            "w15_multires_rollup": _w15_multires_rollup,
-            "j10_pit_features": _j10_pit_features,
-            "w10_gap_report": _w10_gap_report,
-            "w11_zscore_anomaly": _w11_zscore,
-            "a16_custdist": _olap_custdist,
-            "a17_small_qty_revenue": _olap_small_qty_revenue,
-            "a18_dormant_value": _olap_dormant_value,
-            "a19_cube_summary": _olap_cube,
-            "w12_funnel": _w12_funnel,
-            "a20_sole_late_supplier": _olap_sole_late_supplier,
-            "w13_transition_matrix": _w13_transitions,
-            "w14_rolling_engagement": _w14_rolling_engagement,
-            "s14_device_enrich": _s14_device_enrich,
-            "s15_heartbeat": _s15_heartbeat,
-            "s16_srx_functional": _s16_srx_functional,
-            "s17_ping_poll": _s17_ping_poll,
-            "o2_dsl_order_by": _o2_dsl_order_by,
-            "p5_wire_validation": _p5_wire_validation,
-            "s9_kafka_fanout": _s9_kafka_fanout,
-            "s2_scalar_get_program": _s2_scalar_get_program,
-            # r7: composed telemetry end-state
-            "telemetry_e2e": _telemetry_e2e,
-        }
-    )
-    from panoptes_spark.pipeline.gate_queries import QUERIES as _PIPE_QUERIES
+# ---------------------------------------------------------------------------
+# Gate registry: one row per gate, (name, Spark build, DuckDB oracle SQL)
+# ---------------------------------------------------------------------------
 
-    out = _driver_order({**_PIPE_QUERIES, **out})
+def _twin_gates() -> list[Gate]:
+    """Every panoptes-twin gate once. ``gate_queries.GATES`` holds the
+    pipeline family; ``_gates`` merges the two."""
+    return [
+        _dsl_gate(
+            "p1_dsl_field_filter",
+            'resource_class = "network" AND resource_subclass = "machinery"',
+        ),
+        _dsl_gate(
+            "p1_dsl_metadata_like",
+            'resource_metadata.make NOT LIKE "Arista%" AND resource_metadata.os_version LIKE "2%"',
+        ),
+        _dsl_gate(
+            "p1_dsl_in_or",
+            'resource_site NOT IN ("AFRICA", "EUROPE") OR resource_metadata.model IN ("model-3", "model-5")',
+        ),
+        _dsl_gate(
+            "p1_dsl_mixed",
+            'resource_type ne "generic" AND resource_metadata.os_version LIKE "4%" OR resource_class = "system"',
+        ),
+        ("s6_store_scan_pushdown", _store_scan, _STORE_SCAN_ORACLE),
+        ("p11_site_grouping", _site_grouping, _SITE_GROUPING_ORACLE),
+        ("j1_enrichment_join", _enrichment_join, _ENRICHMENT_JOIN_ORACLE),
+        ("s13_enrich_build", _enrich_build_query, _enrich_build_oracle()),
+        ("j6_rate_batch", _rate_batch, _RATE_ORACLE),
+        ("a_pricing_summary", _pricing_summary, _PRICING_SUMMARY_ORACLE),
+        ("dsl_metric_program", _dsl_metric_program, _DSL_METRIC_ORACLE),
+        ("j5_reconcile_plan", _reconcile_plan, _RECONCILE_PLAN_ORACLE),
+        ("j5_reconcile_apply", _reconcile_apply, _RECONCILE_APPLY_ORACLE),
+        ("j5_field_diff", _j5_field_diff, _J5_FIELD_DIFF_ORACLE),
+        ("j1_interface_pipeline", _iface_query, _IFACE_ORACLE),
+        ("a2_group_count", _a2_group_count, _A2_ORACLE),
+        ("a4_status_rollup", _a4_status_rollup, _A4_ORACLE),
+        ("a5_ping_stats", _a5_ping_stats, _A5_ORACLE),
+        ("w3_ttl_upsert_expire", _w3_ttl_upsert, _W3_ORACLE),
+        ("s5_namespace_scan", _s5_namespace_scan, _S5_ORACLE),
+        ("p8_line_protocol", _p8_line_protocol, _P8_ORACLE),
+        ("u1_groupset_union", _u1_groupset_union, _U1_ORACLE),
+        ("u2_set_ops", _u2_set_ops, _U2_ORACLE),
+        ("u3_multigroupset", _u_multigroupset, _U_MULTIGROUPSET_ORACLE),
+        ("f_scalar_functions", _f_functions, _F_FUNCTIONS_ORACLE),
+        ("w6_uniform_splay", _w6_uniform_splay, _w6_oracle()),
+        ("f14_ip_resolve", _f14_ip_resolve, _F14_ORACLE),
+        ("p9_nested_roundtrip", _p9_nested_roundtrip, _P9_ORACLE),
+        ("w_sessionize_events", _sessionize_events, _SESSIONIZE_ORACLE),
+        ("p7_empty_dimension_policy", _p7_empty_dims, _P7_ORACLE),
+        ("w_tumbling_window_agg", _w_tumbling_agg, _W_TUMBLING_ORACLE),
+        ("j8_asof_align", _asof_align, _ASOF_ORACLE),
+        ("j9_interval_join", _interval_contain, _INTERVAL_ORACLE),
+        ("w5_scd2_history", _scd2_history, _SCD2_ORACLE),
+        ("w7_moving_avg", _w_moving_avg, _W_MOVING_AVG_ORACLE),
+        ("p12_pivot_wide", _p_pivot_wide, _PIVOT_ORACLE),
+        ("a9_retention_cohorts", _a_retention_cohorts, _RETENTION_ORACLE),
+        ("a10_shipping_priority", _olap_shipping_priority, _OLAP_Q3_ORACLE),
+        ("a11_regional_volume", _olap_regional_volume, _OLAP_Q5_ORACLE),
+        ("a12_rollup_totals", _olap_rollup, _OLAP_ROLLUP_ORACLE),
+        ("w8_rank_suite", _w8_rank_suite, _W8_RANK_ORACLE),
+        ("a14_large_orders", _olap_large_orders, _OLAP_Q18_ORACLE),
+        ("a15_returned_revenue", _olap_returned_revenue, _OLAP_Q10_ORACLE),
+        ("a13_above_nation_avg", _olap_above_nation_avg,
+         _OLAP_ABOVE_AVG_ORACLE),
+        ("w9_resample_ffill", _w9_resample, _W9_RESAMPLE_ORACLE),
+        ("w15_multires_rollup", _w15_multires_rollup, _W15_MULTIRES_ORACLE),
+        ("j10_pit_features", _j10_pit_features, _J10_PIT_ORACLE),
+        ("w10_gap_report", _w10_gap_report, _W10_GAP_ORACLE),
+        ("w11_zscore_anomaly", _w11_zscore, _W11_ZSCORE_ORACLE),
+        ("a16_custdist", _olap_custdist, _OLAP_Q13_ORACLE),
+        ("a17_small_qty_revenue", _olap_small_qty_revenue, _OLAP_Q17_ORACLE),
+        ("a18_dormant_value", _olap_dormant_value, _OLAP_Q22_ORACLE),
+        ("a19_cube_summary", _olap_cube, _OLAP_CUBE_ORACLE),
+        ("w12_funnel", _w12_funnel, _W12_FUNNEL_ORACLE),
+        ("a20_sole_late_supplier", _olap_sole_late_supplier, _OLAP_Q21_ORACLE),
+        ("w13_transition_matrix", _w13_transitions, _W13_TRANSITIONS_ORACLE),
+        ("w14_rolling_engagement", _w14_rolling_engagement,
+         _W14_ENGAGEMENT_ORACLE),
+        ("s14_device_enrich", _s14_device_enrich, _S14_ORACLE),
+        ("s15_heartbeat", _s15_heartbeat, _S15_ORACLE),
+        ("s16_srx_functional", _s16_srx_functional, _S16_ORACLE),
+        ("s17_ping_poll", _s17_ping_poll, _S17_ORACLE),
+        ("o2_dsl_order_by", _o2_dsl_order_by, _o2_oracle()),
+        ("p5_wire_validation", _p5_wire_validation, _P5_WIRE_ORACLE),
+        ("s9_kafka_fanout", _s9_kafka_fanout, _S9_ORACLE),
+        ("s2_scalar_get_program", _s2_scalar_get_program, _s2_oracle()),
+        # r7: composed telemetry end-state
+        ("telemetry_e2e", _telemetry_e2e, _TELEMETRY_E2E_ORACLE),
+    ]
 
+
+def _merge_gates(*families: list[Gate]) -> dict[str, tuple[Build, str]]:
+    """name -> (build, oracle) over every family, in ``_driver_order``.
+    A name registered twice, within one family or across two, raises
+    ``ValueError`` instead of one row silently replacing the other."""
+    out: dict[str, tuple[Build, str]] = {}
+    twice = []
+    for family in families:
+        for name, build, oracle in family:
+            if name in out:
+                twice.append(name)
+            out[name] = (build, oracle)
+    if twice:
+        raise ValueError(f"gate(s) registered twice: {sorted(set(twice))}")
+    return _driver_order(out)
+
+
+def _gates() -> dict[str, tuple[Build, str]]:
+    from panoptes_spark.pipeline.gate_queries import GATES
+
+    return _merge_gates(_twin_gates(), GATES)
+
+
+def queries() -> dict[str, Build]:
+    """name -> Spark build of every gate, in driver-sample order. Also
+    turns off PySpark's per-call call-site capture for this process
+    (``session.tune_runtime``), which every build then runs without."""
     from panoptes_spark.session import tune_runtime
 
-    def _tuned(fn: Callable[[SparkSession, str], DataFrame]):
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            return fn(tune_runtime(spark), sf_dir)
-
-        return run
-
-    return {name: _tuned(fn) for name, fn in out.items()}
+    tune_runtime()
+    return {name: build for name, (build, _) in _gates().items()}
 
 
 #: driver-sample priority: THIS round's new gates and gates whose
@@ -3805,76 +3848,6 @@ def _driver_order(d: dict) -> dict:
 
 
 def oracle_sql() -> dict[str, str]:
-    out = {name: _dsl_oracle(dsl) for name, dsl in _DSL_QUERIES.items()}
-    out.update(
-        {
-            "s6_store_scan_pushdown": _STORE_SCAN_ORACLE,
-            "p11_site_grouping": _SITE_GROUPING_ORACLE,
-            "j1_enrichment_join": _ENRICHMENT_JOIN_ORACLE,
-            "s13_enrich_build": _enrich_build_oracle(),
-            "j6_rate_batch": _RATE_ORACLE,
-            "a_pricing_summary": _PRICING_SUMMARY_ORACLE,
-            "dsl_metric_program": _DSL_METRIC_ORACLE,
-            "j5_reconcile_plan": _RECONCILE_PLAN_ORACLE,
-            "j5_reconcile_apply": _RECONCILE_APPLY_ORACLE,
-            "j5_field_diff": _J5_FIELD_DIFF_ORACLE,
-            "j1_interface_pipeline": _IFACE_ORACLE,
-            "a2_group_count": _A2_ORACLE,
-            "a4_status_rollup": _A4_ORACLE,
-            "a5_ping_stats": _A5_ORACLE,
-            "w3_ttl_upsert_expire": _W3_ORACLE,
-            "s5_namespace_scan": _S5_ORACLE,
-            "p8_line_protocol": _P8_ORACLE,
-            "u1_groupset_union": _U1_ORACLE,
-            "u2_set_ops": _U2_ORACLE,
-            "u3_multigroupset": _U_MULTIGROUPSET_ORACLE,
-            "f_scalar_functions": _F_FUNCTIONS_ORACLE,
-            "w6_uniform_splay": _w6_oracle(),
-            "f14_ip_resolve": _F14_ORACLE,
-            "p9_nested_roundtrip": _P9_ORACLE,
-            "w_sessionize_events": _SESSIONIZE_ORACLE,
-            "p7_empty_dimension_policy": _P7_ORACLE,
-            "w_tumbling_window_agg": _W_TUMBLING_ORACLE,
-            "j8_asof_align": _ASOF_ORACLE,
-            "j9_interval_join": _INTERVAL_ORACLE,
-            "w5_scd2_history": _SCD2_ORACLE,
-            "w7_moving_avg": _W_MOVING_AVG_ORACLE,
-            "p12_pivot_wide": _PIVOT_ORACLE,
-            "a9_retention_cohorts": _RETENTION_ORACLE,
-            "a10_shipping_priority": _OLAP_Q3_ORACLE,
-            "a11_regional_volume": _OLAP_Q5_ORACLE,
-            "a12_rollup_totals": _OLAP_ROLLUP_ORACLE,
-            "w8_rank_suite": _W8_RANK_ORACLE,
-            "a14_large_orders": _OLAP_Q18_ORACLE,
-            "a15_returned_revenue": _OLAP_Q10_ORACLE,
-            "a13_above_nation_avg": _OLAP_ABOVE_AVG_ORACLE,
-            "w9_resample_ffill": _W9_RESAMPLE_ORACLE,
-            "w15_multires_rollup": _W15_MULTIRES_ORACLE,
-            "j10_pit_features": _J10_PIT_ORACLE,
-            "w10_gap_report": _W10_GAP_ORACLE,
-            "w11_zscore_anomaly": _W11_ZSCORE_ORACLE,
-            "a16_custdist": _OLAP_Q13_ORACLE,
-            "a17_small_qty_revenue": _OLAP_Q17_ORACLE,
-            "a18_dormant_value": _OLAP_Q22_ORACLE,
-            "a19_cube_summary": _OLAP_CUBE_ORACLE,
-            "w12_funnel": _W12_FUNNEL_ORACLE,
-            "a20_sole_late_supplier": _OLAP_Q21_ORACLE,
-            "w13_transition_matrix": _W13_TRANSITIONS_ORACLE,
-            "w14_rolling_engagement": _W14_ENGAGEMENT_ORACLE,
-            "s14_device_enrich": _S14_ORACLE,
-            "s15_heartbeat": _S15_ORACLE,
-            "s16_srx_functional": _S16_ORACLE,
-            "s17_ping_poll": _S17_ORACLE,
-            "o2_dsl_order_by": _o2_oracle(),
-            "p5_wire_validation": _P5_WIRE_ORACLE,
-            "s9_kafka_fanout": _S9_ORACLE,
-            "s2_scalar_get_program": _s2_oracle(),
-            # r7: composed telemetry end-state
-            "telemetry_e2e": _TELEMETRY_E2E_ORACLE,
-        }
-    )
-    from panoptes_spark.pipeline.gate_queries import ORACLES as _PIPE_ORACLES
-
-    # same order as queries(), so name <-> oracle pairing is positionally
-    # stable for any prefix-sampling driver
-    return _driver_order({**_PIPE_ORACLES, **out})
+    """name -> DuckDB oracle SQL of every gate, in the order of
+    ``queries()``: a prefix-sampling driver pairs them by position."""
+    return {name: oracle for name, (_, oracle) in _gates().items()}

@@ -4568,211 +4568,114 @@ SELECT doc_id, component, n_chars FROM (
 """
 
 
-QUERIES = {
-    "dedup_exact": q_dedup_exact,
-    "dedup_minhash_pairs": q_dedup_minhash,
-    "dedup_simhash": q_simhash,
-    "dedup_representatives": q_dedup_representatives,
-    "text_features": q_text_features,
-    "text_fingerprint": q_text_fingerprint,
-    "ann_cosine_topk": q_ann_topk,
-    "ann_ivf_topk": q_ivf_topk,
-    "ann_lsh_topk": q_lsh_topk,
-    "ann_kmeans_refine": q_kmeans_refine,
-    "ann_recall": q_ann_recall,
-    "vocab_coverage": q_vocab_coverage,
-    "embedding_neardup": q_embedding_neardup,
-    "semdedup": q_semdedup,
-    "multimodal_features": q_multimodal_features,
-    "media_audio_decode": q_media_audio_decode,
-    "media_frame_sample": q_media_frame_sample,
-    "dedup_simhash_pairs": q_simhash_pairs,
-    "dedup_components": q_dedup_components,
-    "split_assignment": q_split_assignment,
-    "weighted_sample": q_weighted_sample,
-    "temperature_mixture": q_temperature_mixture,
-    "pack_sequences": q_pack_sequences,
-    "token_frequencies": q_token_frequencies,
-    "chunk_documents": q_chunk_documents,
-    "bm25_search": q_bm25_search,
-    "incremental_dedup": q_incremental_dedup,
-    "global_quantiles": q_global_quantiles,
-    "split_leakage": q_split_leakage,
-    "curation_e2e": q_curation_e2e,
-    "lm_perplexity": q_lm_perplexity,
-    "corpus_divergence": q_corpus_divergence,
-    "source_overlap": q_source_overlap,
-    "skew_report": q_skew_report,
-    "binned_quantiles": q_binned_quantiles,
-    "zorder_codes": q_zorder_codes,
-    "ks_drift": q_ks_drift,
-    "text_repetition": q_text_repetition,
-    "text_pii_scrub": q_text_pii_scrub,
-    "line_dedup": q_line_dedup,
-    "nfc_normalize": q_nfc_normalize,
-    "corpus_stats": q_corpus_stats,
-    "cap_per_group": q_cap_per_group,
-    "url_features": q_url_features,
-    "quality_filter": q_quality_filter,
-    "decontaminate": q_decontaminate,
-    "dup_span_stats": q_dup_spans,
-    "bpe_train": q_bpe_train,
-    "embedding_quantize": q_embedding_quantize,
-    "compaction_plan": q_compaction_plan,
-    "pagerank_centrality": q_pagerank,
-    "bpe_encode": q_bpe_encode,
-    "dq_checks": q_dq_checks,
-    "dq_profile": q_dq_profile,
-    "fuzzy_join": q_fuzzy_join,
-    "sample_per_group": q_sample_per_group,
-    "text_readability": q_text_readability,
-    "text_tfidf": q_text_tfidf,
-    # --- r5 additions (keep chronological: the entry harness reverses each
-    # family so the sampling driver's prefix reads newest gates first) ---
-    "hybrid_search": q_hybrid_search,
-    "leakage_safe_splits": q_leakage_safe_splits,
-    # --- r6 additions ---
-    "hybrid_search_ivf": q_hybrid_search_ivf,
-    "pq_encode": q_pq_encode,
-    "pq_recall": q_pq_recall,
-    "ann_ivfpq_topk": q_ivfpq_topk,
-    # --- r7 additions ---
-    "pq_recall_trained": q_pq_recall_trained,
-    # --- r8 additions ---
-    "ann_index_topk": q_ann_index_topk,
-    "dedup_incremental_pairs": q_dedup_incremental_pairs,
-    "dedup_winnow_pairs": q_winnow_pairs,
-    "dsir_weights": q_dsir_weights,
-    "dsir_select": q_dsir_select,
-    "cluster_topics": q_cluster_topics,
-    "domain_mixture": q_domain_mixture,
-    "training_shards": q_training_shards,
-    "embedding_drift": q_embedding_drift,
-    "trim_dup_spans": q_trim_dup_spans,
-    "ngram_novelty": q_ngram_novelty,
-    "dedup_stream_pairs": q_dedup_stream_pairs,
-    "ivf_recall_trained": q_ivf_recall_trained,
-    "perplexity_buckets": q_perplexity_buckets,
-    "length_outliers": q_length_outliers,
-    "minhash_calibration": q_minhash_calibration,
-    "token_budget": q_token_budget,
-    "boilerplate_ngrams": q_boilerplate_ngrams,
-    "label_balance": q_label_balance,
-    "dedup_cluster_stats": q_dedup_cluster_stats,
-    "ann_index_append_topk": q_ann_index_append_topk,
-    "dedup_best_representatives": q_dedup_best_representatives,
-    # --- r10 additions ---
-    "dedup_log_compacted_pairs": q_dedup_log_compacted_pairs,
-    "ann_index_compacted_topk": q_ann_index_compacted_topk,
-    "ann_stream_topk": q_ann_stream_topk,
-    # r11: generation lifecycle — drift-triggered retrain + atomic swap
-    "ann_retrain_swap": q_ann_retrain_swap,
-    # r11: metadata-filtered search (filter before scoring, two
-    # selectivities)
-    "ann_filtered_topk": q_ann_filtered_topk,
-}
-
-ORACLES = {
-    "dedup_exact": O_DEDUP_EXACT,
-    "dedup_minhash_pairs": O_DEDUP_MINHASH,
-    "dedup_simhash": O_SIMHASH,
-    "dedup_representatives": O_DEDUP_REPRESENTATIVES,
-    "text_features": O_TEXT_FEATURES,
-    "text_fingerprint": O_TEXT_FINGERPRINT,
-    "ann_cosine_topk": O_ANN_TOPK,
-    "ann_ivf_topk": O_IVF_TOPK,
-    "ann_lsh_topk": O_LSH_TOPK,
-    "ann_kmeans_refine": O_KMEANS_REFINE,
-    "ann_recall": _o_ann_recall(),
-    "vocab_coverage": _o_vocab_coverage(),
-    "embedding_neardup": O_EMBEDDING_NEARDUP,
-    "semdedup": O_SEMDEDUP,
-    "multimodal_features": O_MULTIMODAL_FEATURES,
-    "media_audio_decode": O_MEDIA_AUDIO_DECODE,
-    "media_frame_sample": O_MEDIA_FRAME_SAMPLE,
-    "dedup_simhash_pairs": O_SIMHASH_PAIRS,
-    "dedup_components": O_DEDUP_COMPONENTS,
-    "split_assignment": _o_split_assignment(),
-    "weighted_sample": _o_weighted_sample(),
-    "temperature_mixture": _o_temperature_mixture(),
-    "pack_sequences": O_PACK_SEQUENCES,
-    "token_frequencies": O_TOKEN_FREQUENCIES,
-    "chunk_documents": O_CHUNK_DOCUMENTS,
-    "bm25_search": _o_bm25_search(),
-    "incremental_dedup": O_INCREMENTAL_DEDUP,
-    "global_quantiles": O_GLOBAL_QUANTILES,
-    "split_leakage": _o_split_leakage(),
-    "curation_e2e": _o_curation_e2e(),
-    "lm_perplexity": _o_lm_perplexity(),
-    "corpus_divergence": O_CORPUS_DIVERGENCE,
-    "source_overlap": _o_source_overlap(),
-    "skew_report": O_SKEW_REPORT,
-    "binned_quantiles": O_BINNED_QUANTILES,
-    "zorder_codes": _o_zorder_codes(),
-    "ks_drift": _o_ks_drift(),
-    "text_repetition": O_TEXT_REPETITION,
-    "text_pii_scrub": _o_text_pii_scrub(),
-    "line_dedup": O_LINE_DEDUP,
-    "nfc_normalize": O_NFC_NORMALIZE,
-    "corpus_stats": O_CORPUS_STATS,
-    "cap_per_group": _o_cap_per_group(),
-    "url_features": _o_url_features(),
-    "quality_filter": _o_quality_filter(),
-    "decontaminate": O_DECONTAMINATE,
-    "dup_span_stats": O_DUP_SPANS,
-    "bpe_train": _o_bpe_train(),
-    "embedding_quantize": O_EMBEDDING_QUANTIZE,
-    "compaction_plan": O_COMPACTION_PLAN,
-    "pagerank_centrality": _o_pagerank(),
-    "bpe_encode": _o_bpe_encode(),
-    "dq_checks": O_DQ_CHECKS,
-    "dq_profile": O_DQ_PROFILE,
-    "fuzzy_join": _o_fuzzy_join(),
-    "sample_per_group": _o_sample_per_group(),
-    "text_readability": O_TEXT_READABILITY,
-    "text_tfidf": O_TEXT_TFIDF,
-    # --- r5 additions (chronological; see QUERIES note) ---
-    "hybrid_search": _o_hybrid_search(),
-    "leakage_safe_splits": _o_leakage_safe_splits(),
-    # --- r6 additions ---
-    "hybrid_search_ivf": _o_hybrid_search_ivf(),
-    "pq_encode": O_PQ_ENCODE,
-    "pq_recall": _o_pq_recall(),
-    "ann_ivfpq_topk": _o_ivfpq_topk(),
-    # --- r7 additions ---
-    "pq_recall_trained": _o_pq_recall_trained(),
-    # --- r8 additions ---
-    "ann_index_topk": _o_ivfpq_topk(),
+#: every pipeline gate once: (name, build, DuckDB oracle SQL).
+#: ``__spark_entry__`` merges it with the panoptes-twin table, rejects
+#: a name registered twice, and derives ``queries()`` and
+#: ``oracle_sql()`` from the merge.
+GATES = [
+    ("dedup_exact", q_dedup_exact, O_DEDUP_EXACT),
+    ("dedup_minhash_pairs", q_dedup_minhash, O_DEDUP_MINHASH),
+    ("dedup_simhash", q_simhash, O_SIMHASH),
+    ("dedup_representatives", q_dedup_representatives,
+     O_DEDUP_REPRESENTATIVES),
+    ("text_features", q_text_features, O_TEXT_FEATURES),
+    ("text_fingerprint", q_text_fingerprint, O_TEXT_FINGERPRINT),
+    ("ann_cosine_topk", q_ann_topk, O_ANN_TOPK),
+    ("ann_ivf_topk", q_ivf_topk, O_IVF_TOPK),
+    ("ann_lsh_topk", q_lsh_topk, O_LSH_TOPK),
+    ("ann_kmeans_refine", q_kmeans_refine, O_KMEANS_REFINE),
+    ("ann_recall", q_ann_recall, _o_ann_recall()),
+    ("vocab_coverage", q_vocab_coverage, _o_vocab_coverage()),
+    ("embedding_neardup", q_embedding_neardup, O_EMBEDDING_NEARDUP),
+    ("semdedup", q_semdedup, O_SEMDEDUP),
+    ("multimodal_features", q_multimodal_features, O_MULTIMODAL_FEATURES),
+    ("media_audio_decode", q_media_audio_decode, O_MEDIA_AUDIO_DECODE),
+    ("media_frame_sample", q_media_frame_sample, O_MEDIA_FRAME_SAMPLE),
+    ("dedup_simhash_pairs", q_simhash_pairs, O_SIMHASH_PAIRS),
+    ("dedup_components", q_dedup_components, O_DEDUP_COMPONENTS),
+    ("split_assignment", q_split_assignment, _o_split_assignment()),
+    ("weighted_sample", q_weighted_sample, _o_weighted_sample()),
+    ("temperature_mixture", q_temperature_mixture, _o_temperature_mixture()),
+    ("pack_sequences", q_pack_sequences, O_PACK_SEQUENCES),
+    ("token_frequencies", q_token_frequencies, O_TOKEN_FREQUENCIES),
+    ("chunk_documents", q_chunk_documents, O_CHUNK_DOCUMENTS),
+    ("bm25_search", q_bm25_search, _o_bm25_search()),
+    ("incremental_dedup", q_incremental_dedup, O_INCREMENTAL_DEDUP),
+    ("global_quantiles", q_global_quantiles, O_GLOBAL_QUANTILES),
+    ("split_leakage", q_split_leakage, _o_split_leakage()),
+    ("curation_e2e", q_curation_e2e, _o_curation_e2e()),
+    ("lm_perplexity", q_lm_perplexity, _o_lm_perplexity()),
+    ("corpus_divergence", q_corpus_divergence, O_CORPUS_DIVERGENCE),
+    ("source_overlap", q_source_overlap, _o_source_overlap()),
+    ("skew_report", q_skew_report, O_SKEW_REPORT),
+    ("binned_quantiles", q_binned_quantiles, O_BINNED_QUANTILES),
+    ("zorder_codes", q_zorder_codes, _o_zorder_codes()),
+    ("ks_drift", q_ks_drift, _o_ks_drift()),
+    ("text_repetition", q_text_repetition, O_TEXT_REPETITION),
+    ("text_pii_scrub", q_text_pii_scrub, _o_text_pii_scrub()),
+    ("line_dedup", q_line_dedup, O_LINE_DEDUP),
+    ("nfc_normalize", q_nfc_normalize, O_NFC_NORMALIZE),
+    ("corpus_stats", q_corpus_stats, O_CORPUS_STATS),
+    ("cap_per_group", q_cap_per_group, _o_cap_per_group()),
+    ("url_features", q_url_features, _o_url_features()),
+    ("quality_filter", q_quality_filter, _o_quality_filter()),
+    ("decontaminate", q_decontaminate, O_DECONTAMINATE),
+    ("dup_span_stats", q_dup_spans, O_DUP_SPANS),
+    ("bpe_train", q_bpe_train, _o_bpe_train()),
+    ("embedding_quantize", q_embedding_quantize, O_EMBEDDING_QUANTIZE),
+    ("compaction_plan", q_compaction_plan, O_COMPACTION_PLAN),
+    ("pagerank_centrality", q_pagerank, _o_pagerank()),
+    ("bpe_encode", q_bpe_encode, _o_bpe_encode()),
+    ("dq_checks", q_dq_checks, O_DQ_CHECKS),
+    ("dq_profile", q_dq_profile, O_DQ_PROFILE),
+    ("fuzzy_join", q_fuzzy_join, _o_fuzzy_join()),
+    ("sample_per_group", q_sample_per_group, _o_sample_per_group()),
+    ("text_readability", q_text_readability, O_TEXT_READABILITY),
+    ("text_tfidf", q_text_tfidf, O_TEXT_TFIDF),
+    ("hybrid_search", q_hybrid_search, _o_hybrid_search()),
+    ("leakage_safe_splits", q_leakage_safe_splits, _o_leakage_safe_splits()),
+    ("hybrid_search_ivf", q_hybrid_search_ivf, _o_hybrid_search_ivf()),
+    ("pq_encode", q_pq_encode, O_PQ_ENCODE),
+    ("pq_recall", q_pq_recall, _o_pq_recall()),
+    ("ann_ivfpq_topk", q_ivfpq_topk, _o_ivfpq_topk()),
+    ("pq_recall_trained", q_pq_recall_trained, _o_pq_recall_trained()),
+    ("ann_index_topk", q_ann_index_topk, _o_ivfpq_topk()),
     # the incremental update must equal the full rebuild, so its oracle
     # is the FULL-corpus pair replay
-    "dedup_incremental_pairs": O_DEDUP_MINHASH,
-    "dedup_winnow_pairs": O_WINNOW_PAIRS,
-    "dsir_weights": _o_dsir_weights(),
-    "dsir_select": _o_dsir_select(),
-    "cluster_topics": O_CLUSTER_TOPICS,
-    "domain_mixture": _o_domain_mixture(),
-    "training_shards": _o_training_shards(),
-    "embedding_drift": O_EMBEDDING_DRIFT,
-    "trim_dup_spans": O_TRIM_DUP_SPANS,
-    "ngram_novelty": O_NGRAM_NOVELTY,
+    ("dedup_incremental_pairs", q_dedup_incremental_pairs, O_DEDUP_MINHASH),
+    ("dedup_winnow_pairs", q_winnow_pairs, O_WINNOW_PAIRS),
+    ("dsir_weights", q_dsir_weights, _o_dsir_weights()),
+    ("dsir_select", q_dsir_select, _o_dsir_select()),
+    ("cluster_topics", q_cluster_topics, O_CLUSTER_TOPICS),
+    ("domain_mixture", q_domain_mixture, _o_domain_mixture()),
+    ("training_shards", q_training_shards, _o_training_shards()),
+    ("embedding_drift", q_embedding_drift, O_EMBEDDING_DRIFT),
+    ("trim_dup_spans", q_trim_dup_spans, O_TRIM_DUP_SPANS),
+    ("ngram_novelty", q_ngram_novelty, O_NGRAM_NOVELTY),
     # the streamed multi-append fold must equal the one-shot rebuild,
     # so its oracle IS the full-corpus pair replay
-    "dedup_stream_pairs": O_DEDUP_MINHASH,
-    "ivf_recall_trained": _o_ivf_recall_trained(),
-    "perplexity_buckets": _o_perplexity_buckets(),
-    "length_outliers": O_LENGTH_OUTLIERS,
-    "minhash_calibration": O_MINHASH_CALIBRATION,
-    "token_budget": O_TOKEN_BUDGET,
-    "boilerplate_ngrams": O_BOILERPLATE_NGRAMS,
-    "label_balance": _o_label_balance(),
-    "dedup_cluster_stats": _o_dedup_cluster_stats(),
-    "ann_index_append_topk": _o_ivfpq_topk(_ANN_APPEND_PRED),
-    # r10: compaction must be invisible to query answers — the compacted
+    ("dedup_stream_pairs", q_dedup_stream_pairs, O_DEDUP_MINHASH),
+    ("ivf_recall_trained", q_ivf_recall_trained, _o_ivf_recall_trained()),
+    ("perplexity_buckets", q_perplexity_buckets, _o_perplexity_buckets()),
+    ("length_outliers", q_length_outliers, O_LENGTH_OUTLIERS),
+    ("minhash_calibration", q_minhash_calibration, O_MINHASH_CALIBRATION),
+    ("token_budget", q_token_budget, O_TOKEN_BUDGET),
+    ("boilerplate_ngrams", q_boilerplate_ngrams, O_BOILERPLATE_NGRAMS),
+    ("label_balance", q_label_balance, _o_label_balance()),
+    ("dedup_cluster_stats", q_dedup_cluster_stats, _o_dedup_cluster_stats()),
+    ("ann_index_append_topk", q_ann_index_append_topk,
+     _o_ivfpq_topk(_ANN_APPEND_PRED)),
+    ("dedup_best_representatives", q_dedup_best_representatives,
+     _o_dedup_best_representatives()),
+    # compaction must be invisible to query answers: the compacted
     # artifacts answer the SAME oracles as their uncompacted sources
-    "dedup_log_compacted_pairs": O_DEDUP_MINHASH,
-    "ann_index_compacted_topk": _o_ivfpq_topk(_ANN_APPEND_PRED),
-    "ann_stream_topk": _o_ivfpq_topk(_ANN_APPEND_PRED),
-    "ann_retrain_swap": _o_ann_retrain_swap(),
-    "ann_filtered_topk": _o_ann_filtered_topk(),
-    "dedup_best_representatives": _o_dedup_best_representatives(),
-}
+    ("dedup_log_compacted_pairs", q_dedup_log_compacted_pairs,
+     O_DEDUP_MINHASH),
+    ("ann_index_compacted_topk", q_ann_index_compacted_topk,
+     _o_ivfpq_topk(_ANN_APPEND_PRED)),
+    ("ann_stream_topk", q_ann_stream_topk, _o_ivfpq_topk(_ANN_APPEND_PRED)),
+    # generation lifecycle: drift-triggered retrain + atomic swap
+    ("ann_retrain_swap", q_ann_retrain_swap, _o_ann_retrain_swap()),
+    # metadata-filtered search (filter before scoring, two selectivities)
+    ("ann_filtered_topk", q_ann_filtered_topk, _o_ann_filtered_topk()),
+]

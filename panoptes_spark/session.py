@@ -57,7 +57,7 @@ def get_spark(
     return tune_runtime(spark)
 
 
-def tune_runtime(spark: SparkSession) -> SparkSession:
+def tune_runtime(spark: SparkSession | None = None) -> SparkSession | None:
     """Python-side tuning for sessions built elsewhere (the driver's).
 
     Disables PySpark's per-API-call user-call-site capture
@@ -68,7 +68,8 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
     session), so for sessions built elsewhere the python-side gate cache is
     the only reachable switch; guarded so a pyspark-internals change
     degrades to a no-op. ``get_spark`` also sets the conf properly at
-    build time for sessions we own.
+    build time for sessions we own. The switch is process-wide and read
+    once, so ``queries()`` calls this once, with no session.
     """
     try:
         from pyspark.errors import utils as _eu

@@ -3,12 +3,16 @@ battery, the warm battery and tools/profile_gate.py run through it):
 it counts the same rows as a plain ``count()``, reads the job count of
 a fresh post-release run on every call, and leaves no persist behind.
 The job window it reads survives a status store that evicts stages.
-``queries()`` and ``oracle_sql()`` list the gates in one order. Every
-tool still imports after a helper moves."""
+``queries()`` and ``oracle_sql()`` list the gates in one order, both
+projected from one registry in which every gate is one (name, build,
+oracle) row and no name is registered twice; every gate COVERAGE.md
+cites is registered. Every tool still imports after a helper moves."""
 
+import fnmatch
 import glob
 import importlib.util
 import os
+import re
 import subprocess
 import sys
 
@@ -50,6 +54,63 @@ def test_run_gate_counts_jobs_and_releases(spark, sf_dir, name):
 def test_oracles_in_query_order():
     """The driver pairs gates with oracles by position in a prefix."""
     assert list(entrymod.queries()) == list(entrymod.oracle_sql())
+
+
+def _row(name):
+    return name, lambda spark, sf_dir: None, "SELECT 1"
+
+
+def test_merge_rejects_a_gate_registered_twice():
+    """A repeated name raises instead of one row replacing the other,
+    within one family and across the two."""
+    with pytest.raises(ValueError, match="'dup'"):
+        entrymod._merge_gates([_row("a"), _row("dup"), _row("dup")])
+    with pytest.raises(ValueError, match="'dup'"):
+        entrymod._merge_gates([_row("dup")], [_row("b"), _row("dup")])
+    assert list(entrymod._merge_gates([_row("b")], [_row("a")])) == ["a", "b"]
+
+
+def test_every_gate_has_a_build_and_an_oracle():
+    gates = entrymod._gates()
+    assert gates
+    for name, (build, oracle) in gates.items():
+        assert callable(build), name
+        assert isinstance(oracle, str) and oracle.strip(), name
+
+
+def test_driver_priority_names_registered_gates():
+    """``_driver_order`` drops a head name that is not a gate."""
+    unknown = set(entrymod._DRIVER_PRIORITY) - set(entrymod.queries())
+    assert not unknown
+
+
+def test_queries_turns_off_call_site_capture(monkeypatch):
+    """PySpark reads the switch once per process; ``queries()`` sets it
+    before any gate builds, so no build pays the stack inspection."""
+    from pyspark.errors import utils as eu
+
+    monkeypatch.setattr(eu, "_enable_debugging_cache", None)
+    entrymod.queries()
+    assert eu._enable_debugging_cache is False
+
+
+#: "gate `x`" / "gates `x`, `y` and `p1_dsl_*`" in COVERAGE.md
+_CITED_GATES = re.compile(
+    r"\bgates?:?\s+((?:`[\w*]+`(?:\s*(?:,|and|or|\+|/)\s*)*)+)"
+)
+
+
+def test_coverage_cites_only_registered_gates():
+    with open(os.path.join(ROOT, "COVERAGE.md")) as f:
+        text = f.read()
+    cited = {
+        name
+        for run in _CITED_GATES.finditer(text)
+        for name in re.findall(r"`([\w*]+)`", run.group(1))
+    }
+    names = list(entrymod.queries())
+    assert len(cited) > 100
+    assert not [c for c in sorted(cited) if not fnmatch.filter(names, c)]
 
 
 # a job that reuses a shuffle skips its map stage; once the store is
