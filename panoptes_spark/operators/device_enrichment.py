@@ -8,23 +8,36 @@ bulk_walk OIDs) plus ``metrics_groups`` DSL programs
 plugin_enrichment_juniper_device_metrics.py:233-428``,
 ``.../cisco/ios/plugin_enrichment_cisco_ios_device_metrics.py``).
 
-Spark shape: ONE pass over the long walk frame tags rows with their MIB
-table (prefix match — map-only), each enrichment component is then a
-projection + one device-keyed aggregate over its dim-sized slice, and
-the per-device fragments union into a single groupBy that assembles the
-enrichment JSON with ``to_json`` map fragments and literal DSL-program
-templates. No joins against the raw walk beyond the tag pass; at 100 TB
-the walk is read once and everything downstream is device-dimension
-sized.
+Spark shape: one map-only pass (:func:`slice_walk`) tags each walk row
+with its MIB table. Each enrichment component is a projection plus one
+device-keyed aggregate over its table (:func:`_table`), emitted as a
+(device_id, frag_name, frag) fragment by :func:`_frag` or
+:func:`_count_frag`. All ten builders end in :func:`_assemble`: it
+unions the fragments, folds each device's into one sorted map,
+left-joins that to the device frame and renders the enrichment JSON
+from the oids entries (:func:`_static`, :func:`_bulk`, :func:`_get`)
+and the metrics-group templates (:func:`_groups`, :func:`_splice_count`).
+Each persist is decided at its call site, not inside a helper.
+
+The walk is read once only where a builder persists its slice and reads
+nothing else of the walk: juniper, cisco IOS, BGP, NX-OS, ciena light,
+cisco ASA and aruba WAP. Aruba device persists its slice but reads the
+walk again for its scalar memory-total get. Juniper SRX and ciena device
+do not persist their slice, so each of their two table reads re-reads
+the walk (SRX's choice is measured in SCALE.md, "Build-time persists").
+Past the slice, everything is device-dimension sized.
 
 Replayed value-exactly against the reference's own goldens
 (``tests/plugins/enrichment/generic/snmp/juniper/data/*_results.json``)
-in ``tests/test_golden_device_enrichment.py``.
+in ``tests/test_golden_device_enrichment.py`` where the reference corpus
+is present; hand-computed cases for every builder are in
+``tests/test_device_enrichment_family.py``.
 """
 
 from __future__ import annotations
 
 import json
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -98,30 +111,45 @@ def cpu_interval_oid(polling_frequency: int) -> str:
 
 
 def slice_walk(walk: DataFrame, tables: dict[str, str]) -> DataFrame:
-    """(device_id, oid, value) -> (device_id, table, index, value) in one
-    map-only pass: prefix-tag each row with the first matching MIB table
-    (reference bulk_walk = prefix scan), index = the OID remainder."""
+    """(device_id, oid, value, ...) -> (device_id, table, index, value,
+    ...) in one map-only pass: prefix-tag each row with the first
+    matching MIB table (reference bulk_walk = prefix scan), index = the
+    OID remainder. Every walk column besides device_id and oid rides
+    along (BGP's ``value_hex``)."""
     tag = None
     for name, base in tables.items():
         prefix = base.lstrip(".") + "."
         cond = F.col("oid").startswith(prefix)
-        idx = F.expr(f"substring(oid, {len(prefix) + 1})")
-        branch = F.when(
-            cond, F.struct(F.lit(name).alias("table"), idx.alias("index"))
+        payload = F.struct(
+            F.lit(name).alias("table"),
+            F.expr(f"substring(oid, {len(prefix) + 1})").alias("index"),
         )
-        tag = branch if tag is None else tag.when(
-            cond, F.struct(F.lit(name).alias("table"), idx.alias("index"))
-        )
+        tag = F.when(cond, payload) if tag is None else tag.when(cond, payload)
+    values = [c for c in walk.columns if c not in ("device_id", "oid")]
     return (
-        walk.select("device_id", tag.alias("t"), "value")
+        walk.select("device_id", tag.alias("t"), *values)
         .where(F.col("t").isNotNull())
-        .select("device_id", "t.table", "t.index", "value")
+        .select("device_id", "t.table", "t.index", *values)
     )
 
 
-def _frag(df: DataFrame, name: str, key: F.Column, value: F.Column) -> DataFrame:
+def _table(tagged: DataFrame, name: str) -> DataFrame:
+    """One MIB table of a :func:`slice_walk` frame: (device_id, index,
+    value, ...)."""
+    return tagged.where(F.col("table") == name).drop("table")
+
+
+def _last_index(col: str = "index") -> F.Column:
+    """The last dot-separated element of an OID index (or OID value)."""
+    return F.element_at(F.split(col, r"\."), -1)
+
+
+def _frag(
+    df: DataFrame, name: str, key: str | F.Column, value: str | F.Column
+) -> DataFrame:
     """Per-device JSON object fragment of one static-values map:
     (device_id, name, to_json(map(key -> value)))."""
+    key, value = (F.col(c) if isinstance(c, str) else c for c in (key, value))
     return df.groupBy("device_id").agg(
         F.lit(name).alias("frag_name"),
         F.to_json(
@@ -133,24 +161,106 @@ def _frag(df: DataFrame, name: str, key: F.Column, value: F.Column) -> DataFrame
 
 
 def _count_frag(df: DataFrame, name: str) -> DataFrame:
+    """Per-device row count fragment: (device_id, name, str(count))."""
     return df.groupBy("device_id").agg(
         F.lit(name).alias("frag_name"),
         F.count(F.lit(1)).cast("string").alias("frag"),
     )
 
 
-def _static(values_json: str | F.Column) -> F.Column:
-    if isinstance(values_json, str):
-        values_json = F.lit(values_json)
+def _frag_of(name: str, default: str = "{}") -> F.Column:
+    """A device's fragment ``name`` from the folded map ``m``."""
+    return F.coalesce(F.element_at("m", F.lit(name)), F.lit(default))
+
+
+def _count_of(name: str, type_: str = "int") -> F.Column:
+    """A device's count fragment ``name`` as a number, 0 when absent."""
+    return F.coalesce(F.element_at("m", F.lit(name)).cast(type_), F.lit(0))
+
+
+def _static(values_json: F.Column) -> F.Column:
     return F.concat(
         F.lit('{"method": "static", "values": '), values_json, F.lit("}")
     )
 
 
-def _bulk(oid: str | F.Column) -> F.Column:
+def _bulk(oid: str | F.Column, index_transform: str | None = None) -> F.Column:
+    """bulk_walk entry; ``index_transform`` names the fragment that
+    re-keys the walked rows."""
     if isinstance(oid, str):
         oid = F.lit(oid)
-    return F.concat(F.lit('{"method": "bulk_walk", "oid": "'), oid, F.lit('"}'))
+    if index_transform is None:
+        return F.concat(F.lit('{"method": "bulk_walk", "oid": "'), oid, F.lit('"}'))
+    return F.concat(
+        F.lit('{"method": "bulk_walk", "oid": "'), oid,
+        F.lit('", "index_transform": '), _frag_of(index_transform), F.lit("}"),
+    )
+
+
+def _get(oid: str) -> F.Column:
+    return F.lit('{"method": "get", "oid": "' + oid + '"}')
+
+
+def _splice_count(template: dict, count: F.Column) -> F.Column:
+    """Render a metrics-group template whose ``"__N__"`` placeholder is a
+    per-device integer literal."""
+    pre, post = json.dumps(template).split('"__N__"')
+    return F.concat(F.lit(pre), count.cast("string"), F.lit(post))
+
+
+def _groups(*groups: dict | F.Column | None) -> F.Column:
+    """The metrics_groups JSON array. A dict renders verbatim; a Column
+    renders per device, and a null value (or a None argument) leaves its
+    group out."""
+    cols = [
+        F.lit(json.dumps(g)) if isinstance(g, dict) else g
+        for g in groups
+        if g is not None
+    ]
+    return F.concat(F.lit("["), F.concat_ws(", ", *cols), F.lit("]"))
+
+
+def _assemble(
+    devices: DataFrame,
+    frags: list[DataFrame],
+    oids: list[str | tuple[str, F.Column]],
+    groups: F.Column,
+    namespace: str = "metrics",
+) -> DataFrame:
+    """Every builder's last step: union the per-device fragments, fold
+    each device's into one map ``m`` (fragment name -> JSON text),
+    left-join it to ``devices`` so a device with no walk rows still gets
+    a program, and render (device_id, namespace, enrichment).
+
+    ``oids`` lists the oids-map entries in order: a ``(key, column)``
+    pair, or a bare name for the static map of the fragment of that
+    name. ``oids`` and ``groups`` may read ``m`` and any ``devices``
+    column; a null oids entry leaves its key out.
+    """
+    per_device = devices.join(
+        reduce(DataFrame.unionByName, frags).groupBy("device_id").agg(
+            F.map_from_entries(
+                # deterministic: collect_list order is task-dependent
+                F.array_sort(F.collect_list(F.struct("frag_name", "frag")))
+            ).alias("m")
+        ),
+        "device_id",
+        "left",
+    )
+    entries = [(e, _static(_frag_of(e))) if isinstance(e, str) else e for e in oids]
+    oids_json = F.concat(
+        F.lit("{"),
+        F.concat_ws(", ", *[F.concat(F.lit(f'"{k}": '), v) for k, v in entries]),
+        F.lit("}"),
+    )
+    return per_device.select(
+        "device_id",
+        F.lit(namespace).alias("namespace"),
+        F.concat(
+            F.lit('{"oids": '), oids_json,
+            F.lit(', "metrics_groups": '), groups, F.lit("}"),
+        ).alias("enrichment"),
+    )
 
 
 # -- juniper metrics_groups DSL templates (plugin :321-428), rendered
@@ -211,8 +321,7 @@ _JUNIPER_POWER_GROUP = {
         },
     },
 }
-# fans group's fans_total is a per-device integer literal -> split template
-_JUNIPER_FANS_PRE = {
+_JUNIPER_FANS_GROUP = {
     "group_name": "environment",
     "dimensions": {},
     "metrics": {
@@ -220,7 +329,8 @@ _JUNIPER_FANS_PRE = {
             "metric_type": "gauge",
             "value": "len([(x,y) for (x,y) in oper_status.items() if x in "
             "fans and y not in ['6']])",
-        }
+        },
+        "fans_total": "__N__",
     },
 }
 _JUNIPER_DISK_GROUP = {
@@ -280,28 +390,25 @@ def juniper_device_enrichment(
         "st_units": HR_STORAGE_UNITS,
         "st_size": HR_STORAGE_SIZE,
     }
+    # kept: this and the four persists below, measured together in
+    # SCALE.md "Build-time persists"
     tagged = slice_walk(walk, tables).persist()
-
-    def tbl(name: str) -> DataFrame:
-        return tagged.where(F.col("table") == name).select(
-            "device_id", "index", "value"
-        )
 
     # entity universe: index -> description (threaded_cached_property
     # _entity_names, :56-66); device-dim sized, reused by 4 components
-    entity = tbl("descr").withColumnRenamed("value", "name").persist()
+    entity = _table(tagged, "descr").withColumnRenamed("value", "name").persist()
 
     # _cpus (:85-101) ALWAYS walks the poll-rate load-average column;
     # the EX4300 model only swaps the cpu_util OID string REPORTED in
     # the oids map (:245-247)
-    cpus = tbl("cpuN").select("device_id", "index").join(
+    cpus = _table(tagged, "cpuN").select("device_id", "index").join(
         entity, ["device_id", "index"]
     ).where(
         F.lower(F.col("name")).rlike("|".join(CPU_NAME_TYPES))
     ).persist()
 
     temps = (
-        tbl("temp")
+        _table(tagged, "temp")
         .where(
             (F.col("value").cast("long") > 0)
             & (F.col("value").cast("long") < MELTING_POINT_STEEL)
@@ -309,7 +416,7 @@ def juniper_device_enrichment(
         .join(entity, ["device_id", "index"])
     )
 
-    memory = tbl("memory").select(
+    memory = _table(tagged, "memory").select(
         "device_id",
         "index",
         (F.col("value").cast("long") * (2**20)).alias("memory_total"),
@@ -331,40 +438,38 @@ def juniper_device_enrichment(
     ).persist()
 
     frags = [
-        _frag(cpus, "cpu_name", F.col("index"), F.col("name")),
-        _frag(
-            cpus, "cpu_no", F.col("index"), F.concat(F.lit("Module "), "index")
-        ),
-        _frag(memory, "memory_total", F.col("index"), F.col("memory_total")),
-        _frag(temps, "temp_sensor_name", F.col("index"), F.col("name")),
-        _frag(fans, "fans", F.col("index"), F.col("name")),
-        _frag(power, "power_modules", F.col("index"), F.col("name")),
-        _frag(power, "power_module_types", F.col("index"), F.col("ptype")),
+        _frag(cpus, "cpu_name", "index", "name"),
+        _frag(cpus, "cpu_no", "index", F.concat(F.lit("Module "), "index")),
+        _frag(memory, "memory_total", "index", "memory_total"),
+        _frag(temps, "temp_sensor_name", "index", "name"),
+        _frag(fans, "fans", "index", "name"),
+        _frag(power, "power_modules", "index", "name"),
+        _frag(power, "power_module_types", "index", "ptype"),
         _frag(
             power.groupBy("device_id", "ptype").agg(
                 F.count(F.lit(1)).alias("n")
             ),
             "power_units_total",
-            F.col("ptype"),
-            F.col("n"),
+            "ptype",
+            "n",
         ),
         # identity rows the reference appends to power_module_types
         # (_add_power_module_types_mapping, :231-233)
         _frag(
             power.select("device_id", "ptype").distinct(),
             "power_type_identity",
-            F.col("ptype"),
-            F.col("ptype"),
+            "ptype",
+            "ptype",
         ),
         _count_frag(fans, "_n_fans"),
         _count_frag(power, "_n_power"),
     ]
     if include_disk:
-        st_descr = tbl("st_descr")
-        st_units = tbl("st_units").select(
+        st_descr = _table(tagged, "st_descr")
+        st_units = _table(tagged, "st_units").select(
             "device_id", "index", F.col("value").cast("long").alias("units")
         )
-        st_type = tbl("st_type").select(
+        st_type = _table(tagged, "st_type").select(
             "device_id",
             "index",
             F.coalesce(
@@ -376,50 +481,26 @@ def juniper_device_enrichment(
                             for x in (k, v)
                         ]
                     ),
-                    F.element_at(F.split("value", r"\."), -1),
+                    _last_index("value"),
                 ),
                 F.lit("unknown"),
             ).alias("tname"),
         )
-        st_size = tbl("st_size").select(
+        st_size = _table(tagged, "st_size").select(
             "device_id", "index", F.col("value").cast("long").alias("size")
         ).join(st_units, ["device_id", "index"])
         frags += [
-            _frag(st_descr, "storage_description", F.col("index"), F.col("value")),
-            _frag(st_type, "storage_type", F.col("index"), F.col("tname")),
-            _frag(st_units, "storage_allocation_units", F.col("index"), F.col("units")),
+            _frag(st_descr, "storage_description", "index", "value"),
+            _frag(st_type, "storage_type", "index", "tname"),
+            _frag(st_units, "storage_allocation_units", "index", "units"),
             _frag(
                 st_size,
                 "storage_total_bytes",
-                F.col("index"),
+                "index",
                 (F.col("size") * F.col("units")),
             ),
             _count_frag(st_descr, "_n_storage"),
         ]
-
-    allfrags = frags[0]
-    for fdf in frags[1:]:
-        allfrags = allfrags.unionByName(fdf)
-    per_device = allfrags.groupBy("device_id").agg(
-        F.map_from_entries(
-            # array_sort: collect_list order is task-scheduling-dependent;
-            # sorted entries make the fragment map deterministic
-            F.array_sort(F.collect_list(F.struct("frag_name", "frag")))
-        ).alias("m")
-    )
-    # the fragment map is device-dim-sized: broadcast it so the device
-    # dim never shuffle-sorts (same small-side policy as the J1 joins)
-    per_device = devices.select("device_id", "model").join(
-        F.broadcast(per_device), "device_id", "left"
-    )
-
-    def g(name: str) -> F.Column:  # fragment with empty-map default
-        return F.coalesce(F.element_at("m", F.lit(name)), F.lit("{}"))
-
-    def n(name: str) -> F.Column:
-        return F.coalesce(
-            F.element_at("m", F.lit(name)).cast("int"), F.lit(0)
-        )
 
     cpu_oid = F.when(
         F.col("model").contains("EX4300"), F.lit(JNX_CPU)
@@ -436,84 +517,45 @@ def juniper_device_enrichment(
     pmt = F.when(F.element_at("m", F.lit("power_module_types")).isNull(),
                  F.lit("{}")).otherwise(pmt)
 
-    oid_entries = [
-        ('"cpu_name": ', _static(g("cpu_name"))),
-        ('"cpu_no": ', _static(g("cpu_no"))),
-        ('"cpu_util": ', _bulk(cpu_oid)),
-        ('"memory_used": ', _bulk(JNX_BUFFER)),
-        ('"memory_total": ', _static(g("memory_total"))),
-        ('"oper_status": ', _bulk(JNX_STATE)),
-        ('"fans": ', _static(g("fans"))),
-        ('"power_modules": ', _static(g("power_modules"))),
-        ('"power_module_types": ', _static(pmt)),
-        ('"power_units_total": ', _static(g("power_units_total"))),
-        ('"temp_sensor_values": ', _bulk(JNX_TEMP)),
-        ('"temp_sensor_name": ', _static(g("temp_sensor_name"))),
+    oids = [
+        "cpu_name",
+        "cpu_no",
+        ("cpu_util", _bulk(cpu_oid)),
+        ("memory_used", _bulk(JNX_BUFFER)),
+        "memory_total",
+        ("oper_status", _bulk(JNX_STATE)),
+        "fans",
+        "power_modules",
+        ("power_module_types", _static(pmt)),
+        "power_units_total",
+        ("temp_sensor_values", _bulk(JNX_TEMP)),
+        "temp_sensor_name",
     ]
     if include_disk:
-        oid_entries += [
-            ('"storage_description": ', _static(g("storage_description"))),
-            ('"storage_type": ', _static(g("storage_type"))),
-            ('"storage_allocation_failures": ', _bulk(HR_STORAGE_FAILS)),
-            ('"storage_allocation_units": ', _static(g("storage_allocation_units"))),
-            ('"storage_used_bytes": ', _bulk(HR_STORAGE_USED)),
-            ('"storage_total_bytes": ', _static(g("storage_total_bytes"))),
+        oids += [
+            "storage_description",
+            "storage_type",
+            ("storage_allocation_failures", _bulk(HR_STORAGE_FAILS)),
+            "storage_allocation_units",
+            ("storage_used_bytes", _bulk(HR_STORAGE_USED)),
+            "storage_total_bytes",
         ]
-    oids_json = F.concat(
-        F.lit("{"),
-        F.concat_ws(
-            ", ",
-            *[F.concat(F.lit(k), v) for k, v in oid_entries],
-        ),
-        F.lit("}"),
-    )
-
-    fans_group = F.concat(
-        F.lit(
-            json.dumps(_JUNIPER_FANS_PRE)[:-2]  # strip the closing '}}'
-            + ', "fans_total": '
-        ),
-        n("_n_fans").cast("string"),
-        F.lit("}}"),
-    )
-    groups_json = F.concat(
-        F.lit(
-            "["
-            + json.dumps(_JUNIPER_ENV_GROUP)
-            + ", "
-            + json.dumps(_JUNIPER_CPU_GROUP)
-            + ", "
-            + json.dumps(_JUNIPER_MEMORY_GROUP)
+    groups = _groups(
+        _JUNIPER_ENV_GROUP,
+        _JUNIPER_CPU_GROUP,
+        _JUNIPER_MEMORY_GROUP,
+        F.when(
+            _count_of("_n_power") > 0, F.lit(json.dumps(_JUNIPER_POWER_GROUP))
         ),
         F.when(
-            n("_n_power") > 0,
-            F.lit(", " + json.dumps(_JUNIPER_POWER_GROUP)),
-        ).otherwise(F.lit("")),
-        F.when(n("_n_fans") > 0, F.concat(F.lit(", "), fans_group)).otherwise(
-            F.lit("")
+            _count_of("_n_fans") > 0,
+            _splice_count(_JUNIPER_FANS_GROUP, _count_of("_n_fans")),
         ),
-        (
-            F.when(
-                n("_n_storage") > 0,
-                F.lit(", " + json.dumps(_JUNIPER_DISK_GROUP)),
-            ).otherwise(F.lit(""))
-            if include_disk
-            else F.lit("")
-        ),
-        F.lit("]"),
+        F.when(
+            _count_of("_n_storage") > 0, F.lit(json.dumps(_JUNIPER_DISK_GROUP))
+        ) if include_disk else None,
     )
-
-    return per_device.select(
-        "device_id",
-        F.lit("metrics").alias("namespace"),
-        F.concat(
-            F.lit('{"oids": '),
-            oids_json,
-            F.lit(', "metrics_groups": '),
-            groups_json,
-            F.lit("}"),
-        ).alias("enrichment"),
-    )
+    return _assemble(devices.select("device_id", "model"), frags, oids, groups)
 
 
 # ---------------------------------------------------------------------------
@@ -643,11 +685,74 @@ _CISCO_TEMP_GROUP = {
 }
 
 
-def _splice_count(template: dict, count: F.Column) -> F.Column:
-    """Render a metrics-group template whose ``"__N__"`` placeholder is a
-    per-device integer literal."""
-    pre, post = json.dumps(template).split('"__N__"')
-    return F.concat(F.lit(pre), count.cast("string"), F.lit(post))
+def _by_eid(tagged: DataFrame, table: str, value_as: str | None = None) -> DataFrame:
+    """An entity-keyed table as (device_id, eid[, value_as]); the
+    plugins cast every entity index with int()."""
+    cols = [F.col("index").cast("long").alias("eid")]
+    if value_as is not None:
+        cols.append(F.col("value").alias(value_as))
+    return _table(tagged, table).select("device_id", *cols)
+
+
+def _mem_pools(tagged: DataFrame) -> DataFrame:
+    """Memory pools (cisco ios :236-263, asa): id = last index element,
+    total = used + free."""
+    def pool(table: str, col: str) -> DataFrame:
+        return _table(tagged, table).select(
+            "device_id",
+            _last_index().cast("long").alias("mid"),
+            F.col("value").alias(col),
+        )
+
+    return (
+        pool("mem_name", "memory_name")
+        .join(pool("mem_used", "used"), ["device_id", "mid"])
+        .join(pool("mem_free", "free"), ["device_id", "mid"])
+        .select(
+            "device_id", "mid", "memory_name",
+            (F.col("used").cast("long") + F.col("free").cast("long"))
+            .alias("memory_total"),
+        )
+    )
+
+
+def _power_supplies(tagged: DataFrame, names: DataFrame) -> DataFrame:
+    """Power supplies (cisco ios :161-174): entPhysicalClass == '6'."""
+    return (
+        _table(tagged, "pclass")
+        .where(F.col("value") == "6")
+        .select("device_id", F.col("index").cast("long").alias("eid"))
+        .join(names, ["device_id", "eid"])
+    )
+
+
+def _temp_sensors(tagged: DataFrame, names: DataFrame) -> DataFrame:
+    """Temperature sensors (cisco ios :121-149): entSensorType == '8',
+    with the signed exponent of the sensor's scale and its entity name,
+    'celsius' renamed 'fahrenheit'."""
+    exp_map = F.create_map(
+        *[F.lit(x) for i, e in enumerate(SENSOR_EXPONENTS) for x in (i + 1, e)]
+    )
+    scales = _table(tagged, "s_scale").select(
+        "device_id",
+        F.col("index").cast("long").alias("eid"),
+        F.col("value").cast("int").alias("scale"),
+    )
+    return (
+        _table(tagged, "s_type")
+        .where(F.col("value") == "8")
+        .select("device_id", F.col("index").cast("long").alias("eid"))
+        .join(scales, ["device_id", "eid"])
+        .join(names, ["device_id", "eid"], "left")
+        .select(
+            "device_id",
+            "eid",
+            exp_map[F.col("scale")].alias("exponent"),
+            F.regexp_replace(
+                F.coalesce("name", F.lit("")), "celsius", "fahrenheit"
+            ).alias("sensor_name"),
+        )
+    )
 
 
 def cisco_ios_device_enrichment(
@@ -680,11 +785,6 @@ def cisco_ios_device_enrichment(
     }
     tagged = slice_walk(walk, tables).persist()
 
-    def tbl(name: str) -> DataFrame:
-        return tagged.where(F.col("table") == name).select(
-            "device_id", "index", "value"
-        )
-
     flags = devices.select(
         "device_id",
         "model",
@@ -695,25 +795,11 @@ def cisco_ios_device_enrichment(
         .alias("is49xx"),
     ).persist()
 
-    # int-keyed entity dicts (plugin casts every index with int())
-    names = tbl("name").select(
-        "device_id",
-        F.col("index").cast("long").alias("eid"),
-        F.col("value").alias("name"),
-    ).persist()
-    descr = tbl("descr").select(
-        "device_id",
-        F.col("index").cast("long").alias("eid"),
-        F.col("value").alias("descr"),
-    )
-    relpos_ids = tbl("relpos").select(
-        "device_id", F.col("index").cast("long").alias("eid")
-    )
+    names = _by_eid(tagged, "name", "name").persist()
 
     # cpus (:265-287): cpu_id = last element of the walk index
-    cpu_walk = tbl("cpu").select(
-        "device_id",
-        F.element_at(F.split("index", r"\."), -1).cast("long").alias("cpu_id"),
+    cpu_walk = _table(tagged, "cpu").select(
+        "device_id", _last_index().cast("long").alias("cpu_id")
     )
     dev3560 = flags.where("is3560").select("device_id")
     # non-3560: cpu_id must exist in BOTH entity names and relpos keys
@@ -721,7 +807,7 @@ def cisco_ios_device_enrichment(
         cpu_walk.join(dev3560, "device_id", "left_anti")
         .join(names.withColumnRenamed("eid", "cpu_id"), ["device_id", "cpu_id"])
         .join(
-            relpos_ids.withColumnRenamed("eid", "cpu_id").distinct(),
+            _by_eid(tagged, "relpos").withColumnRenamed("eid", "cpu_id").distinct(),
             ["device_id", "cpu_id"],
         )
         .select("device_id", "cpu_id", F.col("name").alias("cpu_name"))
@@ -739,77 +825,23 @@ def cisco_ios_device_enrichment(
         )
         .groupBy("device_id", "cpu_id")
         .agg(F.min("eid").alias("eid"))
-        .join(descr, ["device_id", "eid"])
+        .join(_by_eid(tagged, "descr", "descr"), ["device_id", "eid"])
         .select("device_id", "cpu_id", F.col("descr").alias("cpu_name"))
     )
     cpus = cpus_std.unionByName(cpus_3560).persist()
-
-    # memory pools (:236-263): id = last index element, total = used+free
-    def _mem(name: str, col: str) -> DataFrame:
-        return tbl(name).select(
-            "device_id",
-            F.element_at(F.split("index", r"\."), -1).cast("long").alias("mid"),
-            F.col("value").alias(col),
-        )
-
-    memory = (
-        _mem("mem_name", "memory_name")
-        .join(_mem("mem_used", "used"), ["device_id", "mid"])
-        .join(_mem("mem_free", "free"), ["device_id", "mid"])
-        .select(
-            "device_id",
-            "mid",
-            "memory_name",
-            (F.col("used").cast("long") + F.col("free").cast("long")).alias(
-                "memory_total"
-            ),
-        )
-        .persist()
-    )
-
-    # power supplies (:161-174): entPhysicalClass == '6'
-    power = (
-        tbl("pclass")
-        .where(F.col("value") == "6")
-        .select("device_id", F.col("index").cast("long").alias("eid"))
-        .join(names, ["device_id", "eid"])
-        .persist()
-    )
+    memory = _mem_pools(tagged).persist()
+    power = _power_supplies(tagged, names).persist()
 
     # per-device fan universe: ENV-MON models walk ciscoEnvMonFanState,
     # everyone else cefcFanTrayOperStatus (:117-119, :152-159)
     dev_env = flags.where("env_mon").select("device_id")
-    fans = tbl("fan_env").join(dev_env, "device_id", "left_semi").unionByName(
-        tbl("fan_fru").join(dev_env, "device_id", "left_anti")
+    fans = _table(tagged, "fan_env").join(dev_env, "device_id", "left_semi").unionByName(
+        _table(tagged, "fan_fru").join(dev_env, "device_id", "left_anti")
     )
 
-    # temperature sensors (:121-149): entSensorType == '8'
-    scales = tbl("s_scale").select(
-        "device_id",
-        F.col("index").cast("long").alias("eid"),
-        F.col("value").cast("int").alias("scale"),
-    )
-    exp_map = F.create_map(
-        *[
-            F.lit(x)
-            for i, e in enumerate(SENSOR_EXPONENTS)
-            for x in (i + 1, e)
-        ]
-    )
+    # 49xx models report their scale one decade too high
     temps = (
-        tbl("s_type")
-        .where(F.col("value") == "8")
-        .select("device_id", F.col("index").cast("long").alias("eid"))
-        .join(scales, ["device_id", "eid"])
-        .join(names, ["device_id", "eid"], "left")
-        .select(
-            "device_id",
-            "eid",
-            exp_map[F.col("scale")].alias("exponent"),
-            F.regexp_replace(
-                F.coalesce("name", F.lit("")), "celsius", "fahrenheit"
-            ).alias("sensor_name"),
-        )
+        _temp_sensors(tagged, names)
         .join(flags.select("device_id", "is49xx"), "device_id")
         .withColumn(
             "scale_value",
@@ -822,106 +854,56 @@ def cisco_ios_device_enrichment(
         .persist()
     )
 
+    cpu_key = F.col("cpu_id").cast("string")
+    mid, eid = F.col("mid").cast("string"), F.col("eid").cast("string")
     frags = [
-        _frag(cpus, "cpu_name", F.col("cpu_id").cast("string"), F.col("cpu_name")),
-        _frag(
-            cpus,
-            "cpu_no",
-            F.col("cpu_id").cast("string"),
-            F.concat(F.lit("Module "), F.col("cpu_id").cast("string")),
-        ),
-        _frag(memory, "memory_name", F.col("mid").cast("string"), F.col("memory_name")),
-        _frag(memory, "memory_total", F.col("mid").cast("string"), F.col("memory_total")),
-        _frag(power, "power_supplies", F.col("eid").cast("string"), F.col("name")),
-        _frag(temps, "temp_sensor_name", F.col("eid").cast("string"), F.col("sensor_name")),
-        _frag(temps, "temp_sensor_scales", F.col("eid").cast("string"), F.col("scale_value")),
+        _frag(cpus, "cpu_name", cpu_key, "cpu_name"),
+        _frag(cpus, "cpu_no", cpu_key, F.concat(F.lit("Module "), cpu_key)),
+        _frag(memory, "memory_name", mid, "memory_name"),
+        _frag(memory, "memory_total", mid, "memory_total"),
+        _frag(power, "power_supplies", eid, "name"),
+        _frag(temps, "temp_sensor_name", eid, "sensor_name"),
+        _frag(temps, "temp_sensor_scales", eid, "scale_value"),
         _count_frag(fans, "_n_fans"),
         _count_frag(power, "_n_power"),
     ]
-    allfrags = frags[0]
-    for fdf in frags[1:]:
-        allfrags = allfrags.unionByName(fdf)
-    per_device = flags.join(
-        allfrags.groupBy("device_id").agg(
-            F.map_from_entries(
-                # deterministic: collect_list order is task-dependent
-                F.array_sort(F.collect_list(F.struct("frag_name", "frag")))
-            ).alias("m")
-        ),
-        "device_id",
-        "left",
-    )
 
-    def g(name: str) -> F.Column:
-        return F.coalesce(F.element_at("m", F.lit(name)), F.lit("{}"))
-
-    def n(name: str) -> F.Column:
-        return F.coalesce(F.element_at("m", F.lit(name)).cast("int"), F.lit(0))
+    # temp_sensor_* keys and the temp group only exist for non-3560
+    # models (:317-335)
+    def unless_3560(col: F.Column) -> F.Column:
+        return F.when(F.col("is3560"), F.lit(None)).otherwise(col)
 
     fan_oid = F.when(
         F.col("env_mon"), F.lit(ENVMON_FAN_STATE)
     ).otherwise(F.lit(CEFC_FANTRAY_STATUS))
-
-    oid_entries = [
-        ('"cpu_name": ', _static(g("cpu_name"))),
-        ('"cpu_no": ', _static(g("cpu_no"))),
-        ('"cpu_util": ', _bulk(cpu_oid)),
-        ('"memory_used": ', _bulk(CISCO_MEM_POOL_USED)),
-        ('"memory_total": ', _static(g("memory_total"))),
-        ('"memory_name": ', _static(g("memory_name"))),
-        ('"fan_statuses": ', _bulk(fan_oid)),
-        ('"entity_fru_control": ', _bulk(CEFC_FRU_POWER_STATUS)),
-        ('"power_status": ', _bulk(ENVMON_SUPPLY_STATE)),
-        ('"power_supplies": ', _static(g("power_supplies"))),
-        ('"ent_sensor_values": ', _bulk(ENT_SENSOR_VALUES)),
+    oids = [
+        "cpu_name",
+        "cpu_no",
+        ("cpu_util", _bulk(cpu_oid)),
+        ("memory_used", _bulk(CISCO_MEM_POOL_USED)),
+        "memory_total",
+        "memory_name",
+        ("fan_statuses", _bulk(fan_oid)),
+        ("entity_fru_control", _bulk(CEFC_FRU_POWER_STATUS)),
+        ("power_status", _bulk(ENVMON_SUPPLY_STATE)),
+        "power_supplies",
+        ("ent_sensor_values", _bulk(ENT_SENSOR_VALUES)),
+        *[
+            (k, unless_3560(_static(_frag_of(k))))
+            for k in ("temp_sensor_scales", "temp_sensor_name")
+        ],
     ]
-    base_oids = F.concat_ws(
-        ", ", *[F.concat(F.lit(k), v) for k, v in oid_entries]
+    n_fans, n_power = _count_of("_n_fans"), _count_of("_n_power")
+    groups = _groups(
+        F.when(F.col("env_mon"), _splice_count(_CISCO_FANS_ENV, n_fans))
+        .otherwise(_splice_count(_CISCO_FANS_FRU, n_fans)),
+        F.when(F.col("is3560"), _splice_count(_CISCO_POWER_3560, n_power))
+        .otherwise(_splice_count(_CISCO_POWER_FRU, n_power)),
+        _CISCO_CPU_GROUP,
+        _CISCO_MEMORY_GROUP,
+        unless_3560(F.lit(json.dumps(_CISCO_TEMP_GROUP))),
     )
-    # temp_sensor_* keys only exist for non-3560 models (:317-335)
-    temp_oids = F.concat(
-        F.lit(', "temp_sensor_scales": '),
-        _static(g("temp_sensor_scales")),
-        F.lit(', "temp_sensor_name": '),
-        _static(g("temp_sensor_name")),
-    )
-    oids_json = F.concat(
-        F.lit("{"),
-        base_oids,
-        F.when(F.col("is3560"), F.lit("")).otherwise(temp_oids),
-        F.lit("}"),
-    )
-
-    fans_group = F.when(
-        F.col("env_mon"), _splice_count(_CISCO_FANS_ENV, n("_n_fans"))
-    ).otherwise(_splice_count(_CISCO_FANS_FRU, n("_n_fans")))
-    power_group = F.when(
-        F.col("is3560"), _splice_count(_CISCO_POWER_3560, n("_n_power"))
-    ).otherwise(_splice_count(_CISCO_POWER_FRU, n("_n_power")))
-    groups_json = F.concat(
-        F.lit("["),
-        fans_group,
-        F.lit(", "),
-        power_group,
-        F.lit(", " + json.dumps(_CISCO_CPU_GROUP)),
-        F.lit(", " + json.dumps(_CISCO_MEMORY_GROUP)),
-        F.when(F.col("is3560"), F.lit("")).otherwise(
-            F.lit(", " + json.dumps(_CISCO_TEMP_GROUP))
-        ),
-        F.lit("]"),
-    )
-
-    return per_device.select(
-        "device_id",
-        F.lit("metrics").alias("namespace"),
-        F.concat(
-            F.lit('{"oids": '),
-            oids_json,
-            F.lit(', "metrics_groups": '),
-            groups_json,
-            F.lit("}"),
-        ).alias("enrichment"),
-    )
+    return _assemble(flags, frags, oids, groups)
 
 
 # ---------------------------------------------------------------------------
@@ -1068,30 +1050,12 @@ def bgp_session_enrichment(
         "if_alias": IFX_ALIAS,
         "ipnet": IP_NET_TO_PHYSICAL,
     }
-    tag = None
-    for name, base in tables.items():
-        prefix = base.lstrip(".") + "."
-        cond = F.col("oid").startswith(prefix)
-        payload = F.struct(
-            F.lit(name).alias("table"),
-            F.expr(f"substring(oid, {len(prefix) + 1})").alias("index"),
-        )
-        tag = F.when(cond, payload) if tag is None else tag.when(cond, payload)
-    tagged = (
-        walk.select("device_id", tag.alias("t"), "value", "value_hex")
-        .where(F.col("t").isNotNull())
-        .select("device_id", "t.table", "t.index", "value", "value_hex")
-        .persist()
-    )
-
-    def tbl(name: str) -> DataFrame:
-        return tagged.where(F.col("table") == name).select(
-            "device_id", "index", "value", "value_hex"
-        )
+    # slice_walk carries value_hex along with value
+    tagged = slice_walk(walk, tables).persist()
 
     # peer table: local/peer addresses decoded from the index structure
     parts = F.split("index", r"\.")
-    peers = tbl("peer_index").select(
+    peers = _table(tagged, "peer_index").select(
         "device_id",
         "index",
         F.col("value").alias("peer_no"),
@@ -1128,7 +1092,7 @@ def bgp_session_enrichment(
 
     # prefix-counter index_transform: '<peerNo>.<afi>.<safi>' -> peer index
     prefix_map = (
-        tbl("prefix_in")
+        _table(tagged, "prefix_in")
         .select(
             "device_id",
             "index",
@@ -1139,7 +1103,7 @@ def bgp_session_enrichment(
     )
 
     # ipNetToPhysicalState: ip -> ifIndex (:284-296); type 2 = ipv6
-    ipnet = tbl("ipnet").select(
+    ipnet = _table(tagged, "ipnet").select(
         "device_id",
         F.split("index", r"\.").alias("p"),
     )
@@ -1161,7 +1125,7 @@ def bgp_session_enrichment(
 
     # remote_addr octet strings -> readable, joined to the ip->if map
     remote = ip_octstr_readable(
-        tbl("remote_addr").select("device_id", "index", "value_hex"),
+        _table(tagged, "remote_addr").select("device_id", "index", "value_hex"),
         "value_hex",
         "ipaddr",
     )
@@ -1170,83 +1134,48 @@ def bgp_session_enrichment(
     )
 
     def if_static(table: str, name: str) -> DataFrame:
-        ifvals = tbl(table).select(
+        ifvals = _table(tagged, table).select(
             "device_id", F.col("index").alias("ifidx"), "value"
         )
         return _frag(
-            peer_to_if.join(ifvals, ["device_id", "ifidx"]),
-            name,
-            F.col("index"),
-            F.col("value"),
+            peer_to_if.join(ifvals, ["device_id", "ifidx"]), name, "index", "value"
         )
 
     frags = [
         if_static("if_name", "interface_name"),
         if_static("if_speed", "interface_speed"),
         if_static("if_alias", "interface_alias"),
-        _frag(peers, "local_address", F.col("index"), F.col("local_address")),
-        _frag(peers, "peer_address", F.col("index"), F.col("peer_address")),
-        _frag(prefix_map, "prefix_transform", F.col("index"), F.col("peer_index")),
+        _frag(peers, "local_address", "index", "local_address"),
+        _frag(peers, "peer_address", "index", "peer_address"),
+        _frag(prefix_map, "prefix_transform", "index", "peer_index"),
     ]
-    allfrags = frags[0]
-    for fdf in frags[1:]:
-        allfrags = allfrags.unionByName(fdf)
-    per_device = devices.select("device_id").join(
-        allfrags.groupBy("device_id").agg(
-            F.map_from_entries(
-                # deterministic: collect_list order is task-dependent
-                F.array_sort(F.collect_list(F.struct("frag_name", "frag")))
-            ).alias("m")
-        ),
-        "device_id",
-        "left",
-    )
-
-    def g(name: str) -> F.Column:
-        return F.coalesce(F.element_at("m", F.lit(name)), F.lit("{}"))
-
-    def _bulk_xform(oid: str) -> F.Column:
-        return F.concat(
-            F.lit('{"method": "bulk_walk", "oid": "' + oid + '",'
-                  ' "index_transform": '),
-            g("prefix_transform"),
-            F.lit("}"),
-        )
-
-    oid_entries = [
-        ('"peer_state": ', _bulk(BGP_PEER_STATE)),
-        ('"peer_status": ', _bulk(BGP_PEER_STATUS)),
-        ('"peer_local_as": ', _bulk(BGP_PEER_LOCAL_AS)),
-        ('"peer_remote_as": ', _bulk(BGP_PEER_REMOTE_AS)),
-        ('"peer_index": ', _bulk(BGP_PEER_INDEX)),
-        ('"peer_session_established_time": ', _bulk(BGP_PEER_ESTABLISHED_TIME)),
-        ('"peer_in_updates": ', _bulk(BGP_PEER_IN_UPDATES)),
-        ('"peer_out_updates": ', _bulk(BGP_PEER_OUT_UPDATES)),
-        ('"peer_session_transitions": ', _bulk(BGP_PEER_TRANSITIONS)),
-        ('"prefix_in_prefixes": ', _bulk_xform(BGP_PREFIX_IN)),
-        ('"prefix_in_prefixes_accepted": ', _bulk_xform(BGP_PREFIX_ACCEPTED)),
-        ('"prefix_in_prefixes_rejected": ', _bulk_xform(BGP_PREFIX_REJECTED)),
-        ('"prefix_in_prefixes_active": ', _bulk_xform(BGP_PREFIX_ACTIVE)),
-        ('"interface_name": ', _static(g("interface_name"))),
-        ('"interface_speed": ', _static(g("interface_speed"))),
-        ('"interface_alias": ', _static(g("interface_alias"))),
-        ('"local_address": ', _static(g("local_address"))),
-        ('"peer_address": ', _static(g("peer_address"))),
+    oids = [
+        ("peer_state", _bulk(BGP_PEER_STATE)),
+        ("peer_status", _bulk(BGP_PEER_STATUS)),
+        ("peer_local_as", _bulk(BGP_PEER_LOCAL_AS)),
+        ("peer_remote_as", _bulk(BGP_PEER_REMOTE_AS)),
+        ("peer_index", _bulk(BGP_PEER_INDEX)),
+        ("peer_session_established_time", _bulk(BGP_PEER_ESTABLISHED_TIME)),
+        ("peer_in_updates", _bulk(BGP_PEER_IN_UPDATES)),
+        ("peer_out_updates", _bulk(BGP_PEER_OUT_UPDATES)),
+        ("peer_session_transitions", _bulk(BGP_PEER_TRANSITIONS)),
+        *[
+            (k, _bulk(oid, "prefix_transform"))
+            for k, oid in [
+                ("prefix_in_prefixes", BGP_PREFIX_IN),
+                ("prefix_in_prefixes_accepted", BGP_PREFIX_ACCEPTED),
+                ("prefix_in_prefixes_rejected", BGP_PREFIX_REJECTED),
+                ("prefix_in_prefixes_active", BGP_PREFIX_ACTIVE),
+            ]
+        ],
+        "interface_name",
+        "interface_speed",
+        "interface_alias",
+        "local_address",
+        "peer_address",
     ]
-    oids_json = F.concat(
-        F.lit("{"),
-        F.concat_ws(", ", *[F.concat(F.lit(k), v) for k, v in oid_entries]),
-        F.lit("}"),
-    )
-
-    return per_device.select(
-        "device_id",
-        F.lit("metrics").alias("namespace"),
-        F.concat(
-            F.lit('{"oids": '),
-            oids_json,
-            F.lit(', "metrics_groups": ' + json.dumps(_BGP_METRICS_GROUPS) + "}"),
-        ).alias("enrichment"),
+    return _assemble(
+        devices.select("device_id"), frags, oids, _groups(*_BGP_METRICS_GROUPS)
     )
 
 
@@ -1326,40 +1255,25 @@ def cisco_nxos_device_enrichment(
     }
     tagged = slice_walk(walk, tables).persist()
 
-    def tbl(name: str) -> DataFrame:
-        return tagged.where(F.col("table") == name).select(
-            "device_id", "index", "value"
-        )
-
     flags = devices.select(
         "device_id",
         F.col("model").isin(list(n3k_models)).alias("n3k"),
     ).persist()
 
-    names = tbl("name").select(
-        "device_id",
-        F.col("index").cast("long").alias("eid"),
-        F.col("value").alias("name"),
-    ).persist()
-    relpos = tbl("relpos").select(
-        "device_id",
-        F.col("index").cast("long").alias("eid"),
-        F.col("value").alias("relpos"),
-    ).persist()
+    names = _by_eid(tagged, "name", "name").persist()
+    relpos = _by_eid(tagged, "relpos", "relpos").persist()
     # inverse: module number (int of relpos) -> SMALLEST entity id
     inverse = relpos.groupBy(
         "device_id", F.col("relpos").cast("long").alias("relkey")
     ).agg(F.min("eid").alias("min_eid")).persist()
+    relpos_by_mid = relpos.select("device_id", F.col("eid").alias("mid"), "relpos")
 
-    def remap(df: DataFrame) -> DataFrame:
+    def remap(table: str) -> DataFrame:
         """raw walk id -> n3k inverse-table id (per-device conditional);
         non-n3k devices keep the raw id. A missing inverse entry on an
         n3k device is the reference's KeyError -> row dropped."""
-        raw = df.select(
-            "device_id",
-            F.element_at(F.split("index", r"\."), -1).cast("long")
-            .alias("raw_id"),
-            "value",
+        raw = _table(tagged, table).select(
+            "device_id", _last_index().cast("long").alias("raw_id"), "value"
         ).join(flags, "device_id")
         n3k = raw.where("n3k").join(
             inverse.withColumnRenamed("relkey", "raw_id"),
@@ -1372,14 +1286,9 @@ def cisco_nxos_device_enrichment(
 
     # cpus (:283-305): keep ids present in BOTH names and relpos
     cpus = (
-        remap(tbl("cpu"))
+        remap("cpu")
         .join(names.withColumnRenamed("eid", "mid"), ["device_id", "mid"])
-        .join(
-            relpos.withColumnRenamed("eid", "mid").select(
-                "device_id", "mid", "relpos"
-            ),
-            ["device_id", "mid"],
-        )
+        .join(relpos_by_mid, ["device_id", "mid"])
         .select(
             "device_id", "mid", F.col("name").alias("cpu_name"),
             F.concat(F.lit("Module "), "relpos").alias("cpu_no"),
@@ -1389,17 +1298,12 @@ def cisco_nxos_device_enrichment(
 
     # memory (:219-267): used + free on the mapped id; type from relpos
     memory = (
-        remap(tbl("mem_used")).withColumnRenamed("value", "used")
+        remap("mem_used").withColumnRenamed("value", "used")
         .join(
-            remap(tbl("mem_free")).withColumnRenamed("value", "free"),
+            remap("mem_free").withColumnRenamed("value", "free"),
             ["device_id", "mid"],
         )
-        .join(
-            relpos.withColumnRenamed("eid", "mid").select(
-                "device_id", "mid", "relpos"
-            ),
-            ["device_id", "mid"],
-        )
+        .join(relpos_by_mid, ["device_id", "mid"])
         .withColumn("relpos_eid", F.col("relpos").cast("long"))
         .join(
             names.select(
@@ -1426,134 +1330,54 @@ def cisco_nxos_device_enrichment(
         .persist()
     )
 
-    power = (
-        tbl("pclass")
-        .where(F.col("value") == "6")
-        .select("device_id", F.col("index").cast("long").alias("eid"))
-        .join(names, ["device_id", "eid"])
-        .persist()
-    )
+    power = _power_supplies(tagged, names).persist()
+    temps = _temp_sensors(tagged, names).select(
+        "device_id", "eid",
+        F.pow(F.lit(10.0), F.col("exponent")).alias("scale_value"),
+        "sensor_name",
+    ).persist()
 
-    scales = tbl("s_scale").select(
-        "device_id", F.col("index").cast("long").alias("eid"),
-        F.col("value").cast("int").alias("scale"),
-    )
-    exp_map = F.create_map(
-        *[F.lit(x) for i, e in enumerate(SENSOR_EXPONENTS) for x in (i + 1, e)]
-    )
-    temps = (
-        tbl("s_type")
-        .where(F.col("value") == "8")
-        .select("device_id", F.col("index").cast("long").alias("eid"))
-        .join(scales, ["device_id", "eid"])
-        .join(names, ["device_id", "eid"], "left")
-        .select(
-            "device_id", "eid",
-            F.pow(F.lit(10.0), exp_map[F.col("scale")]).alias("scale_value"),
-            F.regexp_replace(
-                F.coalesce("name", F.lit("")), "celsius", "fahrenheit"
-            ).alias("sensor_name"),
-        )
-        .persist()
-    )
-    fans = tbl("fan")
-
-    # n3k devices emit the inverse table as index_transform; others '{}'
-    xform_frag = _frag(
-        inverse.join(flags.where("n3k"), "device_id", "left_semi"),
-        "index_transform",
-        F.col("relkey").cast("string"),
-        F.col("min_eid").cast("string"),
-    )
+    mid, eid = F.col("mid").cast("string"), F.col("eid").cast("string")
     frags = [
-        _frag(cpus, "cpu_name", F.col("mid").cast("string"), F.col("cpu_name")),
-        _frag(cpus, "cpu_no", F.col("mid").cast("string"), F.col("cpu_no")),
-        _frag(memory, "memory_type", F.col("mid").cast("string"),
-              F.col("memory_type")),
-        _frag(memory, "memory_total", F.col("mid").cast("string"),
-              F.col("memory_total")),
-        _frag(power, "power_supplies", F.col("eid").cast("string"),
-              F.col("name")),
-        _frag(temps, "temp_sensor_name", F.col("eid").cast("string"),
-              F.col("sensor_name")),
-        _frag(temps, "temp_sensor_scales", F.col("eid").cast("string"),
-              F.col("scale_value")),
-        _count_frag(fans, "_n_fans"),
+        _frag(cpus, "cpu_name", mid, "cpu_name"),
+        _frag(cpus, "cpu_no", mid, "cpu_no"),
+        _frag(memory, "memory_type", mid, "memory_type"),
+        _frag(memory, "memory_total", mid, "memory_total"),
+        _frag(power, "power_supplies", eid, "name"),
+        _frag(temps, "temp_sensor_name", eid, "sensor_name"),
+        _frag(temps, "temp_sensor_scales", eid, "scale_value"),
+        _count_frag(_table(tagged, "fan"), "_n_fans"),
         _count_frag(power, "_n_power"),
-        xform_frag,
-    ]
-    allfrags = frags[0]
-    for fdf in frags[1:]:
-        allfrags = allfrags.unionByName(fdf)
-    per_device = flags.join(
-        allfrags.groupBy("device_id").agg(
-            F.map_from_entries(
-                # deterministic: collect_list order is task-dependent
-                F.array_sort(F.collect_list(F.struct("frag_name", "frag")))
-            ).alias("m")
+        # n3k devices emit the inverse table as index_transform; others '{}'
+        _frag(
+            inverse.join(flags.where("n3k"), "device_id", "left_semi"),
+            "index_transform",
+            F.col("relkey").cast("string"),
+            F.col("min_eid").cast("string"),
         ),
-        "device_id",
-        "left",
-    )
-
-    def g(name: str) -> F.Column:
-        return F.coalesce(F.element_at("m", F.lit(name)), F.lit("{}"))
-
-    def n(name: str) -> F.Column:
-        return F.coalesce(F.element_at("m", F.lit(name)).cast("int"), F.lit(0))
-
-    def _bulk_xform(oid: str) -> F.Column:
-        return F.concat(
-            F.lit('{"method": "bulk_walk", "oid": "' + oid + '",'
-                  ' "index_transform": '),
-            g("index_transform"),
-            F.lit("}"),
-        )
-
-    oid_entries = [
-        ('"cpu_name": ', _static(g("cpu_name"))),
-        ('"cpu_no": ', _static(g("cpu_no"))),
-        ('"cpu_util": ', _bulk_xform(cpu_oid)),
-        ('"memory_type": ', _static(g("memory_type"))),
-        ('"memory_used": ', _bulk_xform(CPM_CPU_MEMORY_USED)),
-        ('"memory_total": ', _static(g("memory_total"))),
-        ('"cefc_fru_fan": ', _bulk(CEFC_FANTRAY_STATUS)),
-        ('"entity_fru_control": ', _bulk(CEFC_FRU_POWER_STATUS)),
-        ('"power_supplies": ', _static(g("power_supplies"))),
-        ('"ent_sensor_values": ', _bulk(ENT_SENSOR_VALUES)),
-        ('"temp_sensor_scales": ', _static(g("temp_sensor_scales"))),
-        ('"temp_sensor_name": ', _static(g("temp_sensor_name"))),
     ]
-    oids_json = F.concat(
-        F.lit("{"),
-        F.concat_ws(", ", *[F.concat(F.lit(k), v) for k, v in oid_entries]),
-        F.lit("}"),
+    oids = [
+        "cpu_name",
+        "cpu_no",
+        ("cpu_util", _bulk(cpu_oid, "index_transform")),
+        "memory_type",
+        ("memory_used", _bulk(CPM_CPU_MEMORY_USED, "index_transform")),
+        "memory_total",
+        ("cefc_fru_fan", _bulk(CEFC_FANTRAY_STATUS)),
+        ("entity_fru_control", _bulk(CEFC_FRU_POWER_STATUS)),
+        "power_supplies",
+        ("ent_sensor_values", _bulk(ENT_SENSOR_VALUES)),
+        "temp_sensor_scales",
+        "temp_sensor_name",
+    ]
+    groups = _groups(
+        _NXOS_TEMP_GROUP,
+        _splice_count(_NXOS_FANS_GROUP, _count_of("_n_fans")),
+        _splice_count(_NXOS_POWER_GROUP, _count_of("_n_power")),
+        _CISCO_CPU_GROUP,
+        F.lit(json.dumps(_CISCO_MEMORY_GROUP).replace("memory_name", "memory_type")),
     )
-    groups_json = F.concat(
-        F.lit("[" + json.dumps(_NXOS_TEMP_GROUP) + ", "),
-        _splice_count(_NXOS_FANS_GROUP, n("_n_fans")),
-        F.lit(", "),
-        _splice_count(_NXOS_POWER_GROUP, n("_n_power")),
-        F.lit(
-            ", " + json.dumps(_CISCO_CPU_GROUP)
-            + ", " + json.dumps(_CISCO_MEMORY_GROUP).replace(
-                "memory_name", "memory_type"
-            )
-            + "]"
-        ),
-    )
-
-    return per_device.select(
-        "device_id",
-        F.lit("metrics").alias("namespace"),
-        F.concat(
-            F.lit('{"oids": '),
-            oids_json,
-            F.lit(', "metrics_groups": '),
-            groups_json,
-            F.lit("}"),
-        ).alias("enrichment"),
-    )
+    return _assemble(flags, frags, oids, groups)
 
 
 # ---------------------------------------------------------------------------
@@ -1634,106 +1458,46 @@ def aruba_device_enrichment(
     }
     tagged = slice_walk(walk, tables).persist()
 
-    def tbl(name: str) -> DataFrame:
-        return tagged.where(F.col("table") == name).select(
-            "device_id", "index", "value"
-        )
-
-    names = tbl("cpu_descr").select(
+    names = _table(tagged, "cpu_descr").select(
         "device_id", F.col("index").alias("cpu_id"),
         F.col("value").alias("cpu_name"),
     )
     cpus = (
-        tbl("cpu_load")
-        .select(
-            "device_id",
-            F.element_at(F.split("index", r"\."), -1).alias("cpu_id"),
-        )
+        _table(tagged, "cpu_load")
+        .select("device_id", _last_index().alias("cpu_id"))
         .join(names, ["device_id", "cpu_id"])
     )
-    mem_total = walk.where(
-        F.col("oid") == ARUBA_MEM_TOTAL.lstrip(".")
-    ).select("device_id", F.col("value").alias("frag")).withColumn(
-        "frag_name", F.lit("_mem_total")
+    # a scalar get, not a walk: read straight from the walk rows
+    mem_total = walk.where(F.col("oid") == ARUBA_MEM_TOTAL.lstrip(".")).select(
+        "device_id", F.lit("_mem_total").alias("frag_name"),
+        F.col("value").alias("frag"),
     )
-
     frags = [
-        _frag(cpus, "cpu_name", F.col("cpu_id"), F.col("cpu_name")),
-        _frag(cpus, "cpu_no", F.col("cpu_id"),
-              F.concat(F.lit("Module "), "cpu_id")),
-        _count_frag(tbl("fan"), "_n_fans"),
-        _count_frag(tbl("psu"), "_n_psu"),
-        mem_total.select("device_id", "frag_name", "frag"),
+        _frag(cpus, "cpu_name", "cpu_id", "cpu_name"),
+        _frag(cpus, "cpu_no", "cpu_id", F.concat(F.lit("Module "), "cpu_id")),
+        _count_frag(_table(tagged, "fan"), "_n_fans"),
+        _count_frag(_table(tagged, "psu"), "_n_psu"),
+        mem_total,
     ]
-    allfrags = frags[0]
-    for fdf in frags[1:]:
-        allfrags = allfrags.unionByName(fdf)
-    per_device = devices.select("device_id").join(
-        allfrags.groupBy("device_id").agg(
-            F.map_from_entries(
-                # deterministic: collect_list order is task-dependent
-                F.array_sort(F.collect_list(F.struct("frag_name", "frag")))
-            ).alias("m")
-        ),
-        "device_id",
-        "left",
-    )
-
-    def g(name: str) -> F.Column:
-        return F.coalesce(F.element_at("m", F.lit(name)), F.lit("{}"))
-
-    def n(name: str) -> F.Column:
-        return F.coalesce(F.element_at("m", F.lit(name)).cast("int"), F.lit(0))
-
-    oid_entries = [
-        ('"cpu_name": ', _static(g("cpu_name"))),
-        ('"cpu_no": ', _static(g("cpu_no"))),
-        ('"cpu_util": ', _bulk(ARUBA_CPU_LOAD)),
-        ('"memory_used": ',
-         F.lit('{"method": "get", "oid": "' + ARUBA_MEM_USED + '"}')),
-        ('"fan_statuses": ', _bulk(ARUBA_FAN_STATUS)),
-        ('"temperature": ',
-         F.lit('{"method": "get", "oid": "' + ARUBA_INT_TEMP + '"}')),
-        ('"power_status": ', _bulk(ARUBA_PSU_STATUS)),
+    oids = [
+        "cpu_name",
+        "cpu_no",
+        ("cpu_util", _bulk(ARUBA_CPU_LOAD)),
+        ("memory_used", _get(ARUBA_MEM_USED)),
+        ("fan_statuses", _bulk(ARUBA_FAN_STATUS)),
+        ("temperature", _get(ARUBA_INT_TEMP)),
+        ("power_status", _bulk(ARUBA_PSU_STATUS)),
     ]
-    oids_json = F.concat(
-        F.lit("{"),
-        F.concat_ws(", ", *[F.concat(F.lit(k), v) for k, v in oid_entries]),
-        F.lit("}"),
+    n_fans, n_psu = _count_of("_n_fans"), _count_of("_n_psu")
+    groups = _groups(
+        _ARUBA_CPU_GROUP,
+        # memory_total is baked into the program as an integer literal
+        _splice_count(_ARUBA_MEMORY_GROUP_PRE, _count_of("_mem_total", "long")),
+        _ARUBA_TEMP_GROUP,
+        F.when(n_fans > 0, _splice_count(_ARUBA_FANS_GROUP, n_fans)),
+        F.when(n_psu > 0, _splice_count(_ARUBA_POWER_GROUP, n_psu)),
     )
-    # memory_total is baked into the program as an integer literal
-    groups_json = F.concat(
-        F.lit("[" + json.dumps(_ARUBA_CPU_GROUP) + ", "),
-        _splice_count(
-            _ARUBA_MEMORY_GROUP_PRE,
-            F.coalesce(
-                F.element_at("m", F.lit("_mem_total")).cast("long"),
-                F.lit(0),
-            ),
-        ),
-        F.lit(", " + json.dumps(_ARUBA_TEMP_GROUP)),
-        F.when(
-            n("_n_fans") > 0,
-            F.concat(
-                F.lit(", "), _splice_count(_ARUBA_FANS_GROUP, n("_n_fans"))
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            n("_n_psu") > 0,
-            F.concat(
-                F.lit(", "), _splice_count(_ARUBA_POWER_GROUP, n("_n_psu"))
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("]"),
-    )
-    return per_device.select(
-        "device_id",
-        F.lit("metrics").alias("namespace"),
-        F.concat(
-            F.lit('{"oids": '), oids_json,
-            F.lit(', "metrics_groups": '), groups_json, F.lit("}"),
-        ).alias("enrichment"),
-    )
+    return _assemble(devices.select("device_id"), frags, oids, groups)
 
 
 CIENA_FAN_STATE = ".1.3.6.1.4.1.1271.3.4.6.25.1.3"
@@ -1768,56 +1532,21 @@ def ciena_ws_device_enrichment(
     """Ciena Waveserver device-metrics builder
     (plugin_enrichment_cienaws_device_metrics.py:22-112): chassis
     fan/PSU operational-state counts with conditional groups."""
-    fan_rows = walk.where(
-        F.col("oid").startswith(CIENA_FAN_STATE.lstrip(".") + ".")
-    ).select("device_id")
-    psu_rows = walk.where(
-        F.col("oid").startswith(CIENA_PSU_STATE.lstrip(".") + ".")
-    ).select("device_id")
-    counts = devices.select("device_id").join(
-        fan_rows.groupBy("device_id").agg(
-            F.count(F.lit(1)).alias("_n_fans")
-        ),
-        "device_id", "left",
-    ).join(
-        psu_rows.groupBy("device_id").agg(
-            F.count(F.lit(1)).alias("_n_psu")
-        ),
-        "device_id", "left",
-    ).select(
-        "device_id",
-        F.coalesce("_n_fans", F.lit(0)).alias("_n_fans"),
-        F.coalesce("_n_psu", F.lit(0)).alias("_n_psu"),
+    tagged = slice_walk(walk, {"fan": CIENA_FAN_STATE, "psu": CIENA_PSU_STATE})
+    frags = [
+        _count_frag(_table(tagged, "fan"), "_n_fans"),
+        _count_frag(_table(tagged, "psu"), "_n_psu"),
+    ]
+    oids = [
+        ("fan_status", _bulk(CIENA_FAN_STATE)),
+        ("power_status", _bulk(CIENA_PSU_STATE)),
+    ]
+    n_fans, n_psu = _count_of("_n_fans"), _count_of("_n_psu")
+    groups = _groups(
+        F.when(n_fans > 0, _splice_count(_CIENA_FANS_GROUP, n_fans)),
+        F.when(n_psu > 0, _splice_count(_CIENA_POWER_GROUP, n_psu)),
     )
-    oids_json = (
-        '{"fan_status": {"method": "bulk_walk", "oid": "'
-        + CIENA_FAN_STATE + '"}, "power_status": '
-        '{"method": "bulk_walk", "oid": "' + CIENA_PSU_STATE + '"}}'
-    )
-    groups_json = F.concat(
-        F.lit("["),
-        F.when(
-            F.col("_n_fans") > 0,
-            _splice_count(_CIENA_FANS_GROUP, F.col("_n_fans")),
-        ).otherwise(F.lit("")),
-        F.when(
-            (F.col("_n_fans") > 0) & (F.col("_n_psu") > 0), F.lit(", ")
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("_n_psu") > 0,
-            _splice_count(_CIENA_POWER_GROUP, F.col("_n_psu")),
-        ).otherwise(F.lit("")),
-        F.lit("]"),
-    )
-    return counts.select(
-        "device_id",
-        F.lit("metrics").alias("namespace"),
-        F.concat(
-            F.lit('{"oids": ' + oids_json + ', "metrics_groups": '),
-            groups_json,
-            F.lit("}"),
-        ).alias("enrichment"),
-    )
+    return _assemble(devices.select("device_id"), frags, oids, groups)
 
 
 CIENA_PORT_NAME = ".1.3.6.1.4.1.1271.3.4.7.4.1.2"
@@ -1866,15 +1595,10 @@ def ciena_ws_light_enrichment(
     }
     tagged = slice_walk(walk, tables).persist()
 
-    def tbl(name: str) -> DataFrame:
-        return tagged.where(F.col("table") == name).select(
-            "device_id", "index", "value"
-        )
-
     xcvr = (
-        tbl("xtype").where(F.col("value") == "4")
+        _table(tagged, "xtype").where(F.col("value") == "4")
         .select("device_id", "index")
-        .join(tbl("name"), ["device_id", "index"])
+        .join(_table(tagged, "name"), ["device_id", "index"])
         .select("device_id", "index", F.col("value").alias("port_name"))
         # python str.strip('.0') trims both chars from both ends
         .withColumn(
@@ -1886,7 +1610,7 @@ def ciena_ws_light_enrichment(
     )
 
     def light(table: str, name: str) -> DataFrame:
-        vals = tbl(table).select(
+        vals = _table(tagged, table).select(
             "device_id",
             F.col("index").alias("vidx"),
             (F.col("value").cast("double") / 10.0).alias("dbm"),
@@ -1903,48 +1627,26 @@ def ciena_ws_light_enrichment(
         picked = joined.groupBy("device_id", "port_name").agg(
             F.max(F.struct(F.col("vidx"), F.col("dbm"))).alias("s")
         ).select("device_id", "port_name", F.col("s.dbm").alias("dbm"))
-        return _frag(picked, name, F.col("port_name"), F.col("dbm"))
+        return _frag(picked, name, "port_name", "dbm")
 
     frags = [
-        _frag(xcvr, "xcvr_interfaces", F.col("index"), F.col("port_name")),
+        _frag(xcvr, "xcvr_interfaces", "index", "port_name"),
         light("rx", "rx_light_level"),
         light("tx", "tx_light_level"),
     ]
-    allfrags = frags[0]
-    for fdf in frags[1:]:
-        allfrags = allfrags.unionByName(fdf)
-    per_device = devices.select("device_id").join(
-        allfrags.groupBy("device_id").agg(
-            F.map_from_entries(
-                # deterministic: collect_list order is task-dependent
-                F.array_sort(F.collect_list(F.struct("frag_name", "frag")))
-            ).alias("m")
-        ),
-        "device_id", "left",
-    )
-
-    def g(name: str) -> F.Column:
-        return F.coalesce(F.element_at("m", F.lit(name)), F.lit("{}"))
-
-    oids_json = F.concat(
-        F.lit('{"xcvr_interfaces": '),
-        _static(g("xcvr_interfaces")),
-        F.lit(', "rx_light_level": {"method": "bulk_walk", "oid": "'
-              + CIENA_XCVR_RX + '", "values": '),
-        g("rx_light_level"),
-        F.lit('}, "tx_light_level": {"method": "bulk_walk", "oid": "'
-              + CIENA_XCVR_TX + '", "values": '),
-        g("tx_light_level"),
-        F.lit("}}"),
-    )
-    return per_device.select(
-        "device_id",
-        F.lit("metrics").alias("namespace"),
-        F.concat(
-            F.lit('{"oids": '), oids_json,
-            F.lit(', "metrics_groups": '
-                  + json.dumps([_CIENA_LIGHT_GROUP]) + "}"),
-        ).alias("enrichment"),
+    # values + oid hybrid entries, as the reference emits them
+    oids = ["xcvr_interfaces"] + [
+        (name, F.concat(
+            F.lit('{"method": "bulk_walk", "oid": "' + oid + '", "values": '),
+            _frag_of(name),
+            F.lit("}"),
+        ))
+        for name, oid in [
+            ("rx_light_level", CIENA_XCVR_RX), ("tx_light_level", CIENA_XCVR_TX)
+        ]
+    ]
+    return _assemble(
+        devices.select("device_id"), frags, oids, _groups(_CIENA_LIGHT_GROUP)
     )
 
 
@@ -1975,102 +1677,36 @@ def cisco_asa_device_enrichment(
     }
     tagged = slice_walk(walk, tables).persist()
 
-    def tbl(name: str) -> DataFrame:
-        return tagged.where(F.col("table") == name).select(
-            "device_id", "index", "value"
-        )
-
-    names = tbl("name").select(
-        "device_id", F.col("index").cast("long").alias("eid"),
-        F.col("value").alias("name"),
-    )
-    classes = tbl("pclass").select(
-        "device_id", F.col("index").cast("long").alias("eid"),
-        F.col("value").alias("cls"),
-    )
-    relpos_ids = tbl("relpos").select(
-        "device_id", F.col("index").cast("long").alias("eid")
-    ).distinct()
     cpus = (
-        tbl("cpu")
-        .select(
-            "device_id",
-            F.element_at(F.split("index", r"\."), -1).cast("long")
-            .alias("eid"),
+        _table(tagged, "cpu")
+        .select("device_id", _last_index().cast("long").alias("eid"))
+        .join(_by_eid(tagged, "name", "name"), ["device_id", "eid"])
+        .join(_by_eid(tagged, "relpos").distinct(), ["device_id", "eid"])
+        .join(
+            _by_eid(tagged, "pclass", "cls").where(F.col("cls") == "12"),
+            ["device_id", "eid"],
         )
-        .join(names, ["device_id", "eid"])
-        .join(relpos_ids, ["device_id", "eid"])
-        .join(classes.where(F.col("cls") == "12"), ["device_id", "eid"])
         .select("device_id", "eid", F.col("name").alias("cpu_name"))
     )
+    memory = _mem_pools(tagged)
 
-    def mem(table: str, col: str) -> DataFrame:
-        return tbl(table).select(
-            "device_id",
-            F.element_at(F.split("index", r"\."), -1).cast("long")
-            .alias("mid"),
-            F.col("value").alias(col),
-        )
-
-    memory = (
-        mem("mem_name", "memory_name")
-        .join(mem("mem_used", "used"), ["device_id", "mid"])
-        .join(mem("mem_free", "free"), ["device_id", "mid"])
-        .select(
-            "device_id", "mid", "memory_name",
-            (F.col("used").cast("long") + F.col("free").cast("long"))
-            .alias("memory_total"),
-        )
-    )
-
+    eid, mid = F.col("eid").cast("string"), F.col("mid").cast("string")
     frags = [
-        _frag(cpus, "cpu_name", F.col("eid").cast("string"),
-              F.col("cpu_name")),
-        _frag(cpus, "cpu_no", F.col("eid").cast("string"),
-              F.concat(F.lit("Module "), F.col("eid").cast("string"))),
-        _frag(memory, "memory_name", F.col("mid").cast("string"),
-              F.col("memory_name")),
-        _frag(memory, "memory_total", F.col("mid").cast("string"),
-              F.col("memory_total")),
+        _frag(cpus, "cpu_name", eid, "cpu_name"),
+        _frag(cpus, "cpu_no", eid, F.concat(F.lit("Module "), eid)),
+        _frag(memory, "memory_name", mid, "memory_name"),
+        _frag(memory, "memory_total", mid, "memory_total"),
     ]
-    allfrags = frags[0]
-    for fdf in frags[1:]:
-        allfrags = allfrags.unionByName(fdf)
-    per_device = devices.select("device_id").join(
-        allfrags.groupBy("device_id").agg(
-            F.map_from_entries(
-                # deterministic: collect_list order is task-dependent
-                F.array_sort(F.collect_list(F.struct("frag_name", "frag")))
-            ).alias("m")
-        ),
-        "device_id", "left",
-    )
-
-    def g(name: str) -> F.Column:
-        return F.coalesce(F.element_at("m", F.lit(name)), F.lit("{}"))
-
-    oid_entries = [
-        ('"cpu_name": ', _static(g("cpu_name"))),
-        ('"cpu_no": ', _static(g("cpu_no"))),
-        ('"cpu_util": ', _bulk(cpu_oid)),
-        ('"memory_used": ', _bulk(ASA_MEM_POOL_USED)),
-        ('"memory_total": ', _static(g("memory_total"))),
-        ('"memory_name": ', _static(g("memory_name"))),
+    oids = [
+        "cpu_name",
+        "cpu_no",
+        ("cpu_util", _bulk(cpu_oid)),
+        ("memory_used", _bulk(ASA_MEM_POOL_USED)),
+        "memory_total",
+        "memory_name",
     ]
-    oids_json = F.concat(
-        F.lit("{"),
-        F.concat_ws(", ", *[F.concat(F.lit(k), v) for k, v in oid_entries]),
-        F.lit("}"),
-    )
-    groups = [_CISCO_CPU_GROUP, _CISCO_MEMORY_GROUP]
-    return per_device.select(
-        "device_id",
-        F.lit("metrics").alias("namespace"),
-        F.concat(
-            F.lit('{"oids": '), oids_json,
-            F.lit(', "metrics_groups": ' + json.dumps(groups) + "}"),
-        ).alias("enrichment"),
-    )
+    groups = _groups(_CISCO_CPU_GROUP, _CISCO_MEMORY_GROUP)
+    return _assemble(devices.select("device_id"), frags, oids, groups)
 
 
 ARUBA_WAP_NUM_USERS = ARUBA_PREFIX + ".2.2.1.4.1.1"
@@ -2162,13 +1798,8 @@ def aruba_wap_enrichment(
     }
     tagged = slice_walk(walk, tables).persist()
 
-    def tbl(name: str) -> DataFrame:
-        return tagged.where(F.col("table") == name).select(
-            "device_id", "index", "value"
-        )
-
-    ap = tbl("ap_name").withColumnRenamed("value", "ap_name").join(
-        tbl("ap_ip").withColumnRenamed("value", "ap_ip"),
+    ap = _table(tagged, "ap_name").withColumnRenamed("value", "ap_name").join(
+        _table(tagged, "ap_ip").withColumnRenamed("value", "ap_ip"),
         ["device_id", "index"],
     ).persist()
     radios = ap.select(
@@ -2182,69 +1813,37 @@ def aruba_wap_enrichment(
         F.concat("ap_name", F.lit(".radio"), "radio_no").alias("radio_name"),
     )
     # 'last row wins' scalar: walk rows ascend -> max index
-    ap_count = tbl("ap_count").groupBy("device_id").agg(
+    ap_count = _table(tagged, "ap_count").groupBy("device_id").agg(
         F.lit("_ap_count").alias("frag_name"),
         F.max(F.struct(F.col("index"), F.col("value")))
         .getField("value").alias("frag"),
     )
-
     frags = [
-        _frag(ap, "access_point_ip", F.col("index"), F.col("ap_ip")),
-        _frag(ap, "access_point_name", F.col("index"), F.col("ap_name")),
-        _frag(radios, "radio_index", F.col("radio_key"),
-              F.col("radio_name")),
+        _frag(ap, "access_point_ip", "index", "ap_ip"),
+        _frag(ap, "access_point_name", "index", "ap_name"),
+        _frag(radios, "radio_index", "radio_key", "radio_name"),
         ap_count,
     ]
-    allfrags = frags[0]
-    for fdf in frags[1:]:
-        allfrags = allfrags.unionByName(fdf)
-    per_device = devices.select("device_id").join(
-        allfrags.groupBy("device_id").agg(
-            F.map_from_entries(
-                # deterministic: collect_list order is task-dependent
-                F.array_sort(F.collect_list(F.struct("frag_name", "frag")))
-            ).alias("m")
-        ),
-        "device_id", "left",
-    )
-
-    def g(name: str) -> F.Column:
-        return F.coalesce(F.element_at("m", F.lit(name)), F.lit("{}"))
-
-    oid_entries = [
-        ('"controller_number_of_users": ', _bulk(ARUBA_WAP_NUM_USERS)),
-        ('"number_of_access_point": ',
-         F.concat(
-             F.lit('{"method": "static", "values": "'),
-             F.coalesce(F.element_at("m", F.lit("_ap_count")), F.lit("0")),
-             F.lit('"}'),
-         )),
-        ('"access_point_ip": ', _static(g("access_point_ip"))),
-        ('"access_point_name": ', _static(g("access_point_name"))),
-        ('"access_point_status": ', _bulk(ARUBA_WAP_AP_STATUS)),
-        ('"radio_index": ', _static(g("radio_index"))),
-        ('"radio_clients_number": ', _bulk(ARUBA_WAP_RADIO_CLIENTS)),
-        ('"radio_utilization": ', _bulk(ARUBA_WAP_RADIO_UTIL)),
-        ('"number_of_stations_per_channel": ', _bulk(ARUBA_WAP_CH_STATIONS)),
-        ('"channel_noise": ', _bulk(ARUBA_WAP_CH_NOISE)),
-        ('"channel_rx_utilization": ', _bulk(ARUBA_WAP_CH_RX)),
-        ('"channel_tx_utilization": ', _bulk(ARUBA_WAP_CH_TX)),
-        ('"channel_utilization": ', _bulk(ARUBA_WAP_CH_UTIL)),
+    oids = [
+        ("controller_number_of_users", _bulk(ARUBA_WAP_NUM_USERS)),
+        # the count is a JSON string, not an object
+        ("number_of_access_point", _static(
+            F.concat(F.lit('"'), _frag_of("_ap_count", "0"), F.lit('"'))
+        )),
+        "access_point_ip",
+        "access_point_name",
+        ("access_point_status", _bulk(ARUBA_WAP_AP_STATUS)),
+        "radio_index",
+        ("radio_clients_number", _bulk(ARUBA_WAP_RADIO_CLIENTS)),
+        ("radio_utilization", _bulk(ARUBA_WAP_RADIO_UTIL)),
+        ("number_of_stations_per_channel", _bulk(ARUBA_WAP_CH_STATIONS)),
+        ("channel_noise", _bulk(ARUBA_WAP_CH_NOISE)),
+        ("channel_rx_utilization", _bulk(ARUBA_WAP_CH_RX)),
+        ("channel_tx_utilization", _bulk(ARUBA_WAP_CH_TX)),
+        ("channel_utilization", _bulk(ARUBA_WAP_CH_UTIL)),
     ]
-    oids_json = F.concat(
-        F.lit("{"),
-        F.concat_ws(", ", *[F.concat(F.lit(k), v) for k, v in oid_entries]),
-        F.lit("}"),
-    )
-    groups = [_WAP_USER_GROUP, _WAP_AP_GROUP, _WAP_RADIO_GROUP]
-    return per_device.select(
-        "device_id",
-        F.lit("metrics").alias("namespace"),
-        F.concat(
-            F.lit('{"oids": '), oids_json,
-            F.lit(', "metrics_groups": ' + json.dumps(groups) + "}"),
-        ).alias("enrichment"),
-    )
+    groups = _groups(_WAP_USER_GROUP, _WAP_AP_GROUP, _WAP_RADIO_GROUP)
+    return _assemble(devices.select("device_id"), frags, oids, groups)
 
 
 # -- juniper SRX functional metrics (NAT / flow-session) ----------------
@@ -2310,14 +1909,11 @@ def juniper_srx_functional_enrichment(
         "pool_name": SRX_NAT_POOL_NAME,
         "node_descr": SRX_SPU_NODE_DESCR,
     }
+    # not persisted, so each of the two table reads below re-reads the
+    # walk; persisting it measured slower (SCALE.md "Build-time persists")
     tagged = slice_walk(walk, tables)
 
-    def tbl(name: str) -> DataFrame:
-        return tagged.where(F.col("table") == name).select(
-            "device_id", "index", "value"
-        )
-
-    pools = tbl("pool_name").withColumn(
+    pools = _table(tagged, "pool_name").withColumn(
         # last 4 dot-separated index elements -> translated IPv4
         "address",
         F.array_join(
@@ -2325,49 +1921,21 @@ def juniper_srx_functional_enrichment(
         ),
     )
     frags = [
-        _frag(pools, "source_pool_name", F.col("index"), F.col("value")),
-        _frag(pools, "nat_src_translated_address", F.col("index"),
-              F.col("address")),
-        _frag(tbl("node_descr"), "monitoring_node_descriptions",
-              F.col("index"), F.col("value")),
+        _frag(pools, "source_pool_name", "index", "value"),
+        _frag(pools, "nat_src_translated_address", "index", "address"),
+        _frag(_table(tagged, "node_descr"), "monitoring_node_descriptions",
+              "index", "value"),
     ]
-    allfrags = frags[0]
-    for fdf in frags[1:]:
-        allfrags = allfrags.unionByName(fdf)
-    per_device = devices.select("device_id").join(
-        allfrags.groupBy("device_id").agg(
-            F.map_from_entries(
-                # deterministic: collect_list order is task-dependent
-                F.array_sort(F.collect_list(F.struct("frag_name", "frag")))
-            ).alias("m")
-        ),
-        "device_id", "left",
-    )
-
-    def g(name: str) -> F.Column:
-        return F.coalesce(F.element_at("m", F.lit(name)), F.lit("{}"))
-
-    oid_entries = [
-        ('"source_pool_name": ', _static(g("source_pool_name"))),
-        ('"nat_src_translated_address": ',
-         _static(g("nat_src_translated_address"))),
-        ('"monitoring_node_descriptions": ',
-         _static(g("monitoring_node_descriptions"))),
-        ('"current_session_flow": ', _bulk(SRX_SPU_CUR_FLOW)),
-        ('"num_ports_in_use": ', _bulk(SRX_NAT_PORT_INUSE)),
-        ('"num_sessions": ', _bulk(SRX_NAT_NUM_SESSIONS)),
+    oids = [
+        "source_pool_name",
+        "nat_src_translated_address",
+        "monitoring_node_descriptions",
+        ("current_session_flow", _bulk(SRX_SPU_CUR_FLOW)),
+        ("num_ports_in_use", _bulk(SRX_NAT_PORT_INUSE)),
+        ("num_sessions", _bulk(SRX_NAT_NUM_SESSIONS)),
     ]
-    oids_json = F.concat(
-        F.lit("{"),
-        F.concat_ws(", ", *[F.concat(F.lit(k), v) for k, v in oid_entries]),
-        F.lit("}"),
-    )
-    groups = [_SRX_NAT_GROUP, _SRX_SESSION_GROUP]
-    return per_device.select(
-        "device_id",
-        F.lit("functional_metrics").alias("namespace"),
-        F.concat(
-            F.lit('{"oids": '), oids_json,
-            F.lit(', "metrics_groups": ' + json.dumps(groups) + "}"),
-        ).alias("enrichment"),
+    return _assemble(
+        devices.select("device_id"), frags, oids,
+        _groups(_SRX_NAT_GROUP, _SRX_SESSION_GROUP),
+        namespace="functional_metrics",
     )

@@ -483,3 +483,89 @@ def test_ttl_materialization_restart_chaos(spark, tmp_path):
     assert got == want == {
         ("a", "a2"), ("b", "b1"), ("w", "adv"), ("w2", "adv2")
     }
+
+
+def test_ttl_store_sink_torn_commit_replay(spark, tmp_path, monkeypatch):
+    """Default-run twin of ``test_ttl_materialization_restart_chaos``
+    without a streaming query: changelog epochs go straight to the
+    store sink's ``foreach_batch``. Epoch 1's manifest swap raises once
+    (a crash between its bucket writes and its commit), the committed
+    view stays at epoch 0, and replaying epoch 1 converges on the batch
+    ``upsert_with_ttl`` + ``expire`` fold."""
+    from panoptes_spark.sources.stores import expire, upsert_with_ttl
+    from panoptes_spark.streaming.store_sink import ParquetStoreSink
+    from panoptes_spark.streaming.ttl_store_stream import OUTPUT_SCHEMA
+
+    updates = [  # (key, value, ts_ms, ttl_sec)
+        ("a", "a1", 1000, 3),       # exp 4000: covered by a2
+        ("b", "b1", 2000, 100),     # exp 102000: live
+        ("c", "c1", 2000, 3),       # exp 5000: expires
+        ("w", "adv", 30000, 100),   # exp 130000: live
+        ("a", "a2", 40000, 100),    # exp 140000: covering update
+        ("w2", "adv2", 80000, 100), # exp 180000: live
+    ]
+    # the event-time changelog of those updates, one list per epoch
+    # (key, value, expires_at_ms, expired)
+    epochs = [
+        [("a", "a1", 4000, False), ("b", "b1", 102000, False),
+         ("c", "c1", 5000, False), ("w", "adv", 130000, False)],
+        [("a", "a1", 4000, True), ("a", "a2", 140000, False),
+         ("c", "c1", 5000, True), ("w2", "adv2", 180000, False)],
+    ]
+    path = str(tmp_path / "store")
+
+    def sink():  # a fresh sink over the same path is a restart
+        return ParquetStoreSink(
+            spark, path, ["key"], ts_col="expires_at_ms", tombstone_col="expired",
+        )
+
+    def commit(epoch):
+        sink().foreach_batch(
+            spark.createDataFrame(epochs[epoch], OUTPUT_SCHEMA), epoch
+        )
+
+    def live():
+        return {(r.key, r.value, r.expires_at_ms) for r in sink().read().collect()}
+
+    commit(0)
+    live0 = live()
+    assert live0 == {("a", "a1", 4000), ("b", "b1", 102000),
+                     ("c", "c1", 5000), ("w", "adv", 130000)}
+
+    real_swap = ParquetStoreSink._swap_manifest
+    swaps = []
+
+    def swap_crashing_once(self, m):
+        swaps.append(m["last_epoch"])
+        if len(swaps) == 1:
+            raise RuntimeError("crash before the manifest swap")
+        real_swap(self, m)
+
+    monkeypatch.setattr(ParquetStoreSink, "_swap_manifest", swap_crashing_once)
+    with pytest.raises(RuntimeError, match="crash before the manifest swap"):
+        commit(1)
+    # the torn epoch wrote buckets but committed nothing
+    assert sink().manifest()["last_epoch"] == 0
+    assert live() == live0
+
+    commit(1)  # replay the same epoch
+    assert swaps == [1, 1]
+    assert sink().manifest()["last_epoch"] == 1
+    commit(1)  # a replay of a committed epoch is a no-op
+    assert swaps == [1, 1]
+
+    fold = spark.createDataFrame([], "key string, value string, expires_at double")
+    for key, value, ts, ttl in sorted(updates, key=lambda r: r[2]):
+        upd = spark.createDataFrame(
+            [(key, value, ttl * 1000)], "key string, value string, ttl long"
+        )
+        fold = upsert_with_ttl(fold, upd, ["key"], now=float(ts), ttl_col="ttl")
+    wm_final = 80000 - 10000
+    want = {
+        (r.key, r.value, int(r.expires_at))
+        for r in expire(fold, now=float(wm_final)).collect()
+    }
+    assert live() == want == {
+        ("a", "a2", 140000), ("b", "b1", 102000),
+        ("w", "adv", 130000), ("w2", "adv2", 180000),
+    }
